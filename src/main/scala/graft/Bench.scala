@@ -167,6 +167,7 @@ object Bench {
           s""","stream_rows_s_runs":[${r.runs.map(f3).mkString(",")}]""" +
           s""","stream_errors":[${r.errors.map(jstr).mkString(",")}]""" +
           s""","stream_conservation_ok":${r.conservationOk}""" +
+          s""","stream_jobs_per_epoch":${r.jobsPerEpoch.map(f3).getOrElse("-1")}""" +
           s""","stream_fork_steal":[${r.attemptSteal.map(f3).mkString(",")}]""" +
           s""","stream_fork_load":[${r.attemptLoads.map(f3).mkString(",")}]"""
       }

@@ -20,9 +20,12 @@ import org.apache.spark.sql.functions._
   * artifact silently.
   *
   * As a main: runs the N-epoch workload once and prints ONE line
-  * `STREAMSTAGE {...}`. [[forkedMedian]] forks it 3× (fresh JVM each,
-  * the [[BenchTcpStage]] protocol — streaming state, page cache, and JIT
-  * cross-pollute a shared JVM) and medians the rows/s.
+  * `STREAMSTAGE {...}`, which also carries `stream_jobs_per_epoch`: the
+  * median over the epochs of the Spark jobs each epoch's sink fired (a
+  * listener keyed on the micro-batch id) — the deterministic cost count
+  * next to the drifting wall clock. [[forkedMedian]] forks it 3× (fresh
+  * JVM each, the [[BenchTcpStage]] protocol — streaming state, page
+  * cache, and JIT cross-pollute a shared JVM) and medians the rows/s.
   *
   * Workload shape per epoch (R = rowsPerBatch, contiguous `value`s per
   * rate-micro-batch epoch): 75% event rows enriched as-of against the
@@ -56,6 +59,17 @@ object BenchStreamStage {
 
     val enriched = scala.collection.mutable.ArrayBuffer.empty[Long]
     val survivors = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val sinkEpochs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // jobs per micro-batch: every job the sink fires carries the batch id
+    // the stream execution thread set as a local property
+    val jobsByEpoch = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId"))).foreach { id =>
+          jobsByEpoch.merge(id.toLong, 1, Integer.sum)
+          ()
+        }
+    })
     @volatile var done = 0
     @volatile var tFirst = 0L
     @volatile var tLast = 0L
@@ -99,6 +113,7 @@ object BenchStreamStage {
         enriched.synchronized {
           enriched += nEnriched
           survivors += nSurvived
+          sinkEpochs += epoch
         }
         done += 1
         tLast = System.nanoTime()
@@ -114,6 +129,8 @@ object BenchStreamStage {
     while (done < epochs && System.currentTimeMillis() < deadline) Thread.sleep(100)
     q.stop()
     q.awaitTermination(30000)
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+    val jobsPerEpoch = median(sinkEpochs.map(e => jobsByEpoch.getOrDefault(e, 0).toDouble).toSeq)
 
     val sec = math.max(1e-9, (tLast - tFirst) / 1e9)
     val totalRows = epochs.toLong * rowsPerBatch
@@ -135,7 +152,8 @@ object BenchStreamStage {
         s""""stream_epochs":$done,"stream_rows":$totalRows,""" +
         s""""stream_enriched":[${enriched.mkString(",")}],""" +
         s""""stream_survivors":[${survivors.mkString(",")}],""" +
-        s""""stream_store_rows":$storeRows,"conservation_ok":$ok}"""
+        s""""stream_store_rows":$storeRows,"stream_jobs_per_epoch":${jobsPerEpoch.getOrElse(-1.0)},""" +
+        s""""conservation_ok":$ok}"""
     )
     spark.stop()
   }
@@ -152,8 +170,17 @@ object BenchStreamStage {
       errors: Seq[String],
       conservationOk: Boolean,
       attemptSteal: Seq[Double] = Seq.empty,
-      attemptLoads: Seq[Double] = Seq.empty
+      attemptLoads: Seq[Double] = Seq.empty,
+      jobsPerEpoch: Option[Double] = None
   )
+
+  /** True median — mean of the middles on even counts. */
+  private def median(xs: Seq[Double]): Option[Double] = {
+    val sorted = xs.sorted
+    if (sorted.isEmpty) None
+    else if (sorted.length % 2 == 1) Some(sorted(sorted.length / 2))
+    else Some((sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2)
+  }
 
   /** Median of `n` forked runs, fresh JVM each (the TCP-stage protocol:
     * serial forks, true median — mean of middles on even counts).
@@ -167,6 +194,7 @@ object BenchStreamStage {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     val steal = scala.collection.mutable.ArrayBuffer.empty[Double]
     val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[Double]
     var conservation = true
     (1 to n).foreach { i =>
       loads += EnvProbe.loadavg1()
@@ -181,6 +209,7 @@ object BenchStreamStage {
             case Some(l) =>
               val rate = "\"stream_rows_s\":([-0-9.Ee]+)".r.findFirstMatchIn(l).map(_.group(1).toDouble)
               val ok = l.contains("\"conservation_ok\":true")
+              "\"stream_jobs_per_epoch\":([0-9.]+)".r.findFirstMatchIn(l).foreach(m => jobs += m.group(1).toDouble)
               rate match {
                 case Some(v) if v > 0 =>
                   runs += v
@@ -190,12 +219,7 @@ object BenchStreamStage {
           }
       }
     }
-    val sorted = runs.sorted
-    val median =
-      if (sorted.isEmpty) None
-      else if (sorted.length % 2 == 1) Some(sorted(sorted.length / 2))
-      else Some((sorted(sorted.length / 2 - 1) + sorted(sorted.length / 2)) / 2)
-    StreamOutcome(median, runs.toSeq, errors.toSeq, conservation && runs.nonEmpty,
-      steal.toSeq, loads.toSeq)
+    StreamOutcome(median(runs.toSeq), runs.toSeq, errors.toSeq, conservation && runs.nonEmpty,
+      steal.toSeq, loads.toSeq, median(jobs.toSeq))
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. Designed for the 100 TB case:
   *
-  *   - exact dedup groups on a 128-bit digest, never on the document text,
-  *     so the shuffle moves 16-byte keys;
+  *   - exact dedup groups on a 128-bit digest (32-char md5 hex), never on
+  *     the document text, so the shuffle moves 32-byte keys;
   *   - near-dup candidate generation is LSH only — candidates come from
   *     equality joins on band/block keys (hash-partitioned, no cross
   *     product); exact similarity is computed only on candidate pairs;
@@ -31,7 +31,7 @@ object Dedup {
     * surviving digest: `fp`, `keep_id`, `n_copies` (copies within the
     * incoming batch only).
     *
-    * Scale shape: both sides reduce to 16-byte digests before any join;
+    * Scale shape: both sides reduce to 32-char digests before any join;
     * the anti-join is hash-partitioned on the digest (AQE broadcasts the
     * batch side when it is small — the common case of a daily increment
     * against a 100 TB reference). The reference side never moves document
@@ -100,13 +100,18 @@ object Dedup {
     * while the candidate set stays driver-sized, and a mostly-re-ingest
     * batch (or a clamped sketch whose fpp degraded) makes candidates ≈
     * the whole batch. The bound that matters is structural: candidates ⊆
-    * the batch's DISTINCT digests and `present` ⊆ candidates, so ONE
-    * batch-only distinct-count (no reference scan — the reference-side
-    * scan budget stays at exactly 2) decides the strategy up front: past
+    * the batch's DISTINCT digests and `present` ⊆ candidates, and the
+    * batch's ROW count bounds its distinct digests from above. The row
+    * count rides the batch pin's own job (an `Observation`, no extra
+    * action); only a batch with more rows than `maxBroadcastCandidates`
+    * pays a batch-only distinct-count (no reference scan — the
+    * reference-side scan budget stays at exactly 2). Past
     * `maxBroadcastCandidates` distinct batch digests this method returns
     * [[incremental]]'s plain anti-join instead — the reference shuffles,
     * which is the price of a batch too big to broadcast even in the
-    * worst case. Default 2 M digests ≈ 32 MB broadcast payload.
+    * worst case. Within the row bound the candidates broadcast without a
+    * `distinct()` (the row bound already caps them). Default 2 M
+    * digests ≈ 64 MB broadcast payload (32-char hex digests).
     */
   def incrementalBloom(
       incoming: DataFrame,
@@ -142,14 +147,18 @@ object Dedup {
       maxBroadcastCandidates: Long = 2000000L
   ): DataFrame = {
     import graft.functions.sketch
-    // pinned: the batch digest frame feeds the strategy count, the flag
+    // pinned: the batch digest frame feeds the strategy decision, the flag
     // pass, and both survivor branches — a batch is small by definition,
-    // and unpinned each consumer re-digested the incoming text
+    // and unpinned each consumer re-digested the incoming text. The pin's
+    // own job counts the rows, which bound the distinct digests from above
+    val batchRows = org.apache.spark.sql.Observation()
     val incFp = graft.runtime.GraftCheckpoint.pin(
-      incoming.select(TextOps.fingerprintMd5(text).as("fp"), idCol.as("keep_id"))
+      incoming
+        .select(TextOps.fingerprintMd5(text).as("fp"), idCol.as("keep_id"))
+        .observe(batchRows, count(lit(1)).as("rows"))
     )
-    val nBatch = incFp.select(col("fp")).distinct().count()
-    if (nBatch > maxBroadcastCandidates)
+    val withinBound = batchRows.get("rows").asInstanceOf[Long] <= maxBroadcastCandidates
+    if (!withinBound && incFp.select(col("fp")).distinct().count() > maxBroadcastCandidates)
       return incrementalOnDigests(incoming, text, idCol, refDigests)
     val refFp = refDigests.select(col("fp"))
     // sketch distribution auto-switch: the scalar-subquery filter rides
@@ -184,7 +193,8 @@ object Dedup {
     // already (and the probe must stay visible in the executed plan, the
     // DedupSimilaritySpec plan-shape contract)
     val flagged = incFp.withColumn("__might", mightCol)
-    val candidates = flagged.filter(col("__might")).select(col("fp")).distinct()
+    val mightFp = flagged.filter(col("__might")).select(col("fp"))
+    val candidates = if (withinBound) mightFp else mightFp.distinct()
     // Which candidates truly exist in the reference: broadcast the (small)
     // candidate set so the reference is only scanned, never shuffled.
     val present = refFp.join(broadcast(candidates), Seq("fp"), "left_semi").distinct()

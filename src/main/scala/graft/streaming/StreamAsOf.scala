@@ -28,10 +28,12 @@ import graft.operators.AsOfJoin
   *   4. hand the enriched rows to `accept`.
   *
   * Exactly-once on the STORE, at-least-once on `accept` (the
-  * [[StreamDedup]] contract): a replayed epoch re-reads the store
-  * EXCLUDING its own partition and re-derives the same enriched output —
-  * step 2's overwrite can never make a retry join against its own first
-  * attempt twice.
+  * [[StreamDedup]] contract): a replayed epoch re-reads only the store's
+  * EARLIER epochs and re-derives the same enriched output — step 2's
+  * overwrite can never make a retry join against its own first attempt
+  * twice, and a restart from an older checkpoint never joins against an
+  * abandoned later epoch. The store is read with the schema it is
+  * written with (the observations'), so the read costs no footer job.
   *
   * 100 TB shape: the store holds OBSERVATIONS only (the dimension
   * history, not the event stream); it is scanned once per micro-batch
@@ -73,16 +75,14 @@ object StreamAsOf {
       .write
       .mode("overwrite")
       .parquet(s"$obsStore/epoch=$epoch")
-    val fs = new org.apache.hadoop.fs.Path(obsStore)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(new org.apache.hadoop.fs.Path(obsStore)))
-        spark.read
-          .option("basePath", obsStore)
-          .parquet(obsStore)
-          .filter(col("epoch") =!= epoch) // a replay never sees its own first attempt
-          .select(obsCols.map(col): _*)
-      else observations.limit(0)
+    // the write above created the store; a replay never sees its own
+    // first attempt, a restart never an abandoned later epoch
+    val prior = spark.read
+      .schema(observations.schema)
+      .option("basePath", obsStore)
+      .parquet(obsStore)
+      .filter(col("epoch") < epoch)
+      .select(obsCols.map(col): _*)
     val allObs = prior.unionByName(observations)
     val enriched =
       if (chunked) AsOfJoin.asofBackwardChunked(events, allObs, byCol, timeCol)

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
 
@@ -12,27 +13,34 @@ import graft.operators.Dedup
   * document is dropped forever after its first acceptance.
   *
   * The accepted corpus lives as a DIGEST STORE: a parquet directory of
-  * 16-byte `fp` digests partitioned by epoch
-  * (`<store>/epoch=<n>/part-*.parquet`). Per micro-batch:
+  * `fp` digests ([[graft.operators.TextOps.fingerprintMd5]], 32-char md5
+  * hex strings) partitioned by epoch (`<store>/epoch=<n>/part-*.parquet`).
+  * Per micro-batch:
   *
-  *   1. read the store EXCLUDING the current epoch's partition (partition
-  *      pruning on the `epoch` directory column — see idempotency below);
+  *   1. read the store's epochs BEFORE the current one (partition pruning
+  *      on the `epoch` directory column, with the declared
+  *      [[StoreSchema]] — no footer read; a missing or empty store reads
+  *      as empty — see idempotency below);
   *   2. [[graft.operators.Dedup.incrementalBloomOnDigests]] against it —
   *      the store is scanned (sketch fold + confirm probe) but NEVER
   *      shuffled, and within-batch copies collapse to their smallest id;
-  *   3. overwrite `<store>/epoch=<n>` with the survivors' digests;
+  *   3. overwrite `<store>/epoch=<n>` with the survivors' digests, counting
+  *      them on the write's own job;
   *   4. pass the surviving ROWS (original batch schema) to `accept`.
   *
   * Exactly-once on the STORE, at-least-once on `accept`: Spark replays a
   * failed micro-batch under the SAME epoch id (the documented
-  * `foreachBatch` contract), and because step 1 excluded that epoch and
-  * step 3 overwrites rather than appends, a replay recomputes the same
-  * survivor set instead of deduping the batch against its own first
-  * attempt — the store can never poison a retry. `accept` follows the
+  * `foreachBatch` contract), and because step 1 reads only earlier
+  * epochs and step 3 overwrites rather than appends, a replay recomputes
+  * the same survivor set instead of deduping the batch against its own
+  * first attempt — the store can never poison a retry. A restart from an
+  * older checkpoint replays epochs the store already holds LATER
+  * partitions for; those abandoned epochs are never read, and each is
+  * overwritten when its epoch id comes round again. `accept` follows the
   * usual `foreachBatch` delivery semantics (make it idempotent on
   * `epoch` for end-to-end exactly-once).
   *
-  * 100 TB shape: the store holds digests only (16 bytes per accepted doc
+  * 100 TB shape: the store holds digests only (32 bytes per accepted doc
   * ever), the reference side of the dedup is scanned-not-shuffled, and a
   * mostly-duplicate batch degrades to the plain anti-join via
   * [[graft.operators.Dedup.incrementalBloomOnDigests]]'s broadcast guard
@@ -50,6 +58,13 @@ import graft.operators.Dedup
   */
 object StreamDedup {
 
+  /** The digest store's schema: the `fp` column the epochs are written
+    * with plus the `epoch` directory column.
+    */
+  val StoreSchema: StructType = StructType(
+    Seq(StructField("fp", StringType), StructField("epoch", LongType))
+  )
+
   /** One micro-batch of the recipe above, callable directly (and from
     * tests) — [[dedupSink]] is this per epoch. Returns the number of
     * surviving rows handed to `accept`.
@@ -66,23 +81,14 @@ object StreamDedup {
   ): Long = {
     val spark = batch.sparkSession
     // the store before this epoch: partition-discovery read, pruned to
-    // epoch != current so a replay never sees its own first attempt
-    val fs = new org.apache.hadoop.fs.Path(digestStore)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val refFp =
-      if (fs.exists(new org.apache.hadoop.fs.Path(digestStore)))
-        spark.read
-          .option("basePath", digestStore)
-          .parquet(digestStore)
-          .filter(col("epoch") =!= epoch)
-          .select(col("fp"))
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            Seq(org.apache.spark.sql.types.StructField("fp", org.apache.spark.sql.types.BinaryType))
-          )
-        )
+    // epoch < current so a replay never sees its own first attempt nor an
+    // abandoned later epoch
+    val storePath = new org.apache.hadoop.fs.Path(digestStore)
+    val stored =
+      if (storePath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(storePath))
+        spark.read.schema(StoreSchema).option("basePath", digestStore).parquet(digestStore)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
+    val refFp = stored.filter(col("epoch") < epoch).select(col("fp"))
     val survivors = Dedup
       .incrementalBloomOnDigests(batch, text, idCol, refFp, expectedRefItems, fpp)
       .persist()
@@ -90,8 +96,10 @@ object StreamDedup {
       // store first (idempotent overwrite), then delivery: a crash between
       // the two replays the epoch, re-derives the same survivors (the
       // epoch's own partition is excluded above) and re-accepts
+      val written = Observation()
       survivors
         .select(col("fp"))
+        .observe(written, count(lit(1)).as("rows"))
         .write
         .mode("overwrite")
         .parquet(s"$digestStore/epoch=$epoch")
@@ -100,7 +108,7 @@ object StreamDedup {
         idCol === col("keep_id"),
         "left_semi"
       )
-      val n = survivors.count()
+      val n = written.get("rows").asInstanceOf[Long]
       accept(kept, epoch)
       n
     } finally {

@@ -54,6 +54,26 @@ class CheckpointModeSpec extends SparkTestBase {
     }
   }
 
+  test("reliable mode: StreamDedup epochs keep the same survivors in both modes") {
+    def epochs(): Seq[Set[Long]] = {
+      val store = java.nio.file.Files.createTempDirectory("graft-ckpt-dedup").toString + "/digests"
+      Seq(
+        Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")),
+        Seq((10L, "alpha"), (11L, "gamma"), (12L, "gamma"))
+      ).zipWithIndex.map { case (docs, epoch) =>
+        var kept = Set.empty[Long]
+        val n = graft.streaming.StreamDedup.dedupBatch(
+          docs.toDF("doc_id", "text"), col("text"), col("doc_id"), store, epoch.toLong,
+          (df, _) => kept = df.collect().map(_.getLong(0)).toSet)
+        assert(n == kept.size.toLong)
+        kept
+      }
+    }
+    val local = epochs()
+    assert(local == Seq(Set(1L, 2L), Set(11L)))
+    withReliable(_ => assert(epochs() == local))
+  }
+
   test("reliable mode survives total cache loss mid-lineage; local mode cannot by design") {
     val pairs = Seq.tabulate(99)(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
 

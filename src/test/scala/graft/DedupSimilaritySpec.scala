@@ -100,6 +100,35 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(got == plain && got.nonEmpty)
   }
 
+  test("incrementalBloom: rows past the bound with few distinct digests keep the Bloom plan") {
+    import spark.implicits._
+    val ref = (0 until 10).map(i => (100L + i, s"ref doc $i")).toDF("doc_id", "text")
+    // 40 rows over 8 distinct texts, half of them already in the reference
+    val inc = (0 until 40).map { i =>
+      val t = i % 8
+      (i.toLong, if (t < 4) s"ref doc $t" else s"new doc $t")
+    }.toDF("doc_id", "text")
+    val plain = Dedup
+      .incremental(inc, col("text"), col("doc_id"), ref, col("text"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(plain.map(_._2) == Set(4L, 5L, 6L, 7L))
+    def run(bound: Long) = {
+      val out = Dedup.incrementalBloom(
+        inc, col("text"), col("doc_id"), ref, col("text"), maxBroadcastCandidates = bound)
+      (out.queryExecution.executedPlan.toString,
+        out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
+    }
+    // rows 40 > bound 10 >= distinct 8: the distinct count decides, Bloom plan
+    val (bloomPlan, bloomGot) = run(10L)
+    assert(bloomPlan.contains("might_contain"), s"bloom probe missing from plan:\n$bloomPlan")
+    assert(!bloomPlan.contains("SortMergeJoin"), s"reference side got shuffle-joined:\n$bloomPlan")
+    assert(bloomGot == plain)
+    // distinct 8 > bound 5: falls back to the plain anti-join
+    val (plainPlan, plainGot) = run(5L)
+    assert(!plainPlan.contains("might_contain"), s"guard did not fall back:\n$plainPlan")
+    assert(plainGot == plain)
+  }
+
   test("incrementalBloom: probe is in the plan and the reference is never exchanged") {
     val ref = docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("text"))
     val inc = docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text"))

@@ -288,8 +288,8 @@ class ServiceSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     // parse: the dedup block rides any northbound entry
     // a not-yet-created subpath: the store materializes on first write
-    // (an EXISTING-but-empty dir would fail the parquet read — same rule
-    // as StreamDedup's own callers)
+    // (an existing-but-empty dir reads as an empty store too — StreamDedup
+    // reads with its declared store schema)
     val store =
       java.nio.file.Files.createTempDirectory("svc-dedup").toString + "/digests"
     val cfg = GraftService.parseConfig(

@@ -62,6 +62,106 @@ class StreamingSpec extends SparkTestBase {
     assert(n == 1L && replayAccepted == Set(11L), s"replay diverged: n=$n, $replayAccepted")
   }
 
+  test("StreamDedup: a missing store and an existing-but-empty store dir both read as empty") {
+    val root = java.nio.file.Files.createTempDirectory("graft-dedup-empty").toString
+    val emptyDir = new java.io.File(s"$root/existing")
+    assert(emptyDir.mkdir())
+    val batch = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")).toDF("doc_id", "text")
+    Seq(s"$root/missing", emptyDir.toString).foreach { store =>
+      var kept = Set.empty[Long]
+      val n = graft.streaming.StreamDedup.dedupBatch(
+        batch, col("text"), col("doc_id"), store, 0L,
+        (df, _) => kept = df.collect().map(_.getLong(0)).toSet)
+      assert(n == 2L && kept == Set(1L, 2L), s"$store: n=$n, kept=$kept")
+      // the digests written are the declared store schema's md5 hex strings
+      val stored = spark.read.parquet(s"$store/epoch=0")
+      assert(stored.schema("fp").dataType == org.apache.spark.sql.types.StringType)
+      assert(stored.collect().map(_.getString(0).length).toSet == Set(32))
+    }
+  }
+
+  test("StreamDedup / StreamAsOf: replaying epoch 2 ignores the abandoned epoch 3") {
+    import graft.streaming.{StreamAsOf, StreamDedup}
+    val root = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    // dedup: epochs 0-3 in the store; epoch 3 (abandoned by a restart from
+    // the epoch-2 checkpoint) accepted "delta", which the replayed epoch 2
+    // now carries and must still accept
+    val digests = s"$root/digests"
+    def dedup(epoch: Long, docs: (Long, String)*): Set[Long] = {
+      var kept = Set.empty[Long]
+      StreamDedup.dedupBatch(docs.toDF("doc_id", "text"), col("text"), col("doc_id"), digests, epoch,
+        (df, _) => kept = df.collect().map(_.getLong(0)).toSet)
+      kept
+    }
+    assert(dedup(0L, 1L -> "alpha") == Set(1L))
+    assert(dedup(1L, 2L -> "beta") == Set(2L))
+    assert(dedup(2L, 3L -> "gamma") == Set(3L))
+    assert(dedup(3L, 5L -> "delta", 6L -> "epsilon", 8L -> "gamma") == Set(5L, 6L))
+    assert(dedup(3L, 5L -> "delta", 6L -> "epsilon", 8L -> "gamma") == Set(5L, 6L), "epoch-3 replay diverged")
+    assert(dedup(2L, 3L -> "gamma", 4L -> "delta", 7L -> "alpha") == Set(3L, 4L),
+      "epoch-2 replay read the abandoned epoch 3")
+    // as-of: epoch 3 stored a LATER-arriving observation with an earlier
+    // time; the replay of epoch 2 must enrich from epochs 0-1 only
+    val obsStore = s"$root/obs"
+    def enrich(epoch: Long, obs: Seq[(Long, Long, Double)], ev: (Long, Long, String)*): Map[String, Option[Double]] = {
+      var out = Map.empty[String, Option[Double]]
+      StreamAsOf.enrichBatch(ev.toDF("k", "t", "ev"), obs.toDF("k", "t", "price"), "k", "t", obsStore, epoch,
+        (df, _) => out = df.collect().map(r => r.getAs[String]("ev") ->
+          Option(r.getAs[java.lang.Double]("price")).map(_.doubleValue)).toMap)
+      out
+    }
+    enrich(0L, Seq((1L, 100L, 10.0)))
+    enrich(1L, Seq((1L, 200L, 20.0)))
+    assert(enrich(2L, Nil, (1L, 300L, "a")) == Map("a" -> Some(20.0)))
+    assert(enrich(3L, Seq((1L, 250L, 25.0)), (1L, 300L, "b")) == Map("b" -> Some(25.0)))
+    assert(enrich(2L, Nil, (1L, 300L, "a")) == Map("a" -> Some(20.0)),
+      "epoch-2 replay read the abandoned epoch 3")
+  }
+
+  test("StreamDedup / StreamAsOf: job budget of a warm epoch") {
+    import graft.streaming.{StreamAsOf, StreamDedup}
+    val root = java.nio.file.Files.createTempDirectory("graft-job-budget").toString
+    val group = s"job-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    def rows(epoch: Long) = spark.range(epoch * 2000L, (epoch + 1) * 2000L)
+    def epochJobs(f: => Unit): Int = {
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+      jobs.set(0)
+      spark.sparkContext.setJobGroup(group, "job budget")
+      try f
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+      jobs.get()
+    }
+    def dedup(epoch: Long): Long = StreamDedup.dedupBatch(
+      rows(epoch).select(col("id").as("doc_id"), concat(lit("doc "), (col("id") % 1000).cast("string")).as("text")),
+      col("text"), col("doc_id"), s"$root/digests", epoch, (_, _) => ())
+    def enrich(epoch: Long): Long = StreamAsOf.enrichBatch(
+      rows(epoch).filter(col("id") % 4 =!= 0).select((col("id") % 50).as("k"), col("id").as("t")),
+      rows(epoch).filter(col("id") % 4 === 0).select((col("id") % 50).as("k"), col("id").as("t"),
+        (col("id") * 2).as("feat")),
+      "k", "t", s"$root/obs", epoch, (_, _) => ())
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (0L to 2L).foreach { e => dedup(e); enrich(e) }
+      var kept = -1L
+      val dedupJobs = epochJobs { kept = dedup(3L) }
+      assert(kept == 0L, s"a warm epoch of re-ingests kept $kept docs")
+      assert(dedupJobs <= 9, s"warm dedupBatch fired $dedupJobs jobs (budget 9)")
+      var enriched = -1L
+      val enrichJobs = epochJobs { enriched = enrich(3L) }
+      assert(enriched == 1500L, s"warm enrichBatch enriched $enriched rows")
+      assert(enrichJobs <= 6, s"warm enrichBatch fired $enrichJobs jobs (budget 6)")
+      info(s"warm epoch jobs: dedup $dedupJobs, as-of $enrichJobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("StreamCurate: quality-gated, PII-scrubbed, cross-batch-deduped ingestion") {
     implicit val sqlCtx = spark.sqlContext
     val store = java.nio.file.Files.createTempDirectory("graft-curate-store").toString + "/digests"
