@@ -106,9 +106,7 @@ object BenchStreamStage {
           col("doc_id"),
           digestStore,
           epoch,
-          (_, _) => (),
-          expectedRefItems = rowsPerBatch.toLong,
-          fpp = 0.01
+          (_, _) => ()
         )
         enriched.synchronized {
           enriched += nEnriched

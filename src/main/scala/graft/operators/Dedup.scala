@@ -112,6 +112,12 @@ object Dedup {
     * worst case. Within the row bound the candidates broadcast without a
     * `distinct()` (the row bound already caps them). Default 2 M
     * digests ≈ 64 MB broadcast payload (32-char hex digests).
+    *
+    * Streaming dedup ([[graft.streaming.StreamDedup]]) uses
+    * [[incrementalProbeOnDigests]] instead: within the same guard the
+    * batch itself is broadcastable, so probing the store with it directly
+    * takes one store scan where this method takes two, and it rebuilds no
+    * full-size sketch from the whole store every epoch.
     */
   def incrementalBloom(
       incoming: DataFrame,
@@ -145,12 +151,106 @@ object Dedup {
       expectedRefItems: Long = 4000000L,
       fpp: Double = 0.03,
       maxBroadcastCandidates: Long = 2000000L
-  ): DataFrame = {
-    import graft.functions.sketch
-    // pinned: the batch digest frame feeds the strategy decision, the flag
-    // pass, and both survivor branches — a batch is small by definition,
-    // and unpinned each consumer re-digested the incoming text. The pin's
-    // own job counts the rows, which bound the distinct digests from above
+  ): DataFrame =
+    withBroadcastGuard(incoming, text, idCol, refDigests, maxBroadcastCandidates) { (incFp, withinBound) =>
+      import graft.functions.sketch
+      val refFp = refDigests.select(col("fp"))
+      // sketch distribution auto-switch: the scalar-subquery filter rides
+      // every TASK CLOSURE, which is right up to the session's runtime-
+      // filter bit cap (~8 MB default) and fatal near ~100 MB (measured —
+      // see sketch.broadcastBloom). Past the cap the aggregate would
+      // silently clamp (fpp → 1, pure confirm-join traffic), so an
+      // accepted corpus grown beyond it — the StreamDedup store's fate —
+      // flips to the broadcast build instead: same answer, full-size
+      // filter, one copy per executor.
+      val optimalBits =
+        math.ceil(-expectedRefItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
+      val bitCap = incoming.sparkSession.conf
+        .get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
+      val itemCap = incoming.sparkSession.conf
+        .get("spark.sql.optimizer.runtime.bloomFilter.maxExpectedNumItems", "4000000").toLong
+      val mightCol =
+        if (optimalBits > bitCap || expectedRefItems > itemCap)
+          sketch.broadcastBloom(refFp, xxhash64(col("fp")), expectedRefItems, fpp) match {
+            case Some(bf) => coalesce(sketch.might_contain_bc(bf, xxhash64(col("fp"))), lit(false))
+            case None     => lit(false)
+          }
+        else {
+          val bloom = refFp
+            .select(sketch.bloom_filter_agg(xxhash64(col("fp")), expectedRefItems, fpp).as("bf"))
+            .scalar()
+          coalesce(sketch.might_contain(bloom, xxhash64(col("fp"))), lit(false))
+        }
+      // NOT pinned: the three consumers land in ONE action whose plan
+      // carries the bloom probe as a scalar subquery — ReuseSubquery/
+      // ReuseExchange evaluate the reference-side build once per execution
+      // already (and the probe must stay visible in the executed plan, the
+      // DedupSimilaritySpec plan-shape contract)
+      val flagged = incFp.withColumn("__might", mightCol)
+      val mightFp = flagged.filter(col("__might")).select(col("fp"))
+      val candidates = if (withinBound) mightFp else mightFp.distinct()
+      // Which candidates truly exist in the reference: broadcast the (small)
+      // candidate set so the reference is only scanned, never shuffled.
+      val present = refFp.join(broadcast(candidates), Seq("fp"), "left_semi").distinct()
+      val certainNew = flagged.filter(!col("__might")).drop("__might")
+      val confirmedNew = flagged
+        .filter(col("__might"))
+        .drop("__might")
+        .join(broadcast(present), Seq("fp"), "left_anti")
+      certainNew
+        .unionByName(confirmedNew)
+        .groupBy(col("fp"))
+        .agg(min(col("keep_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+    }
+
+  /** [[incrementalOnDigests]] as ONE probe of the reference: the batch's
+    * digests broadcast, the reference semi-joins them (`present` — the
+    * batch digests the reference already holds), and the batch anti-joins
+    * the broadcast `present`. The reference is scanned once and never
+    * shuffled, and no sketch is built. Same survivors as
+    * [[incrementalBloomOnDigests]], with its broadcast guard: past
+    * `maxBroadcastCandidates` distinct batch digests it returns the plain
+    * anti-join instead.
+    *
+    * `present` keeps one row per reference copy of a batch digest. A
+    * digest store holds each digest at most once (every epoch's survivors
+    * are distinct and new against the earlier epochs), so there `present`
+    * ⊆ the batch's distinct digests; it is not deduplicated, because a
+    * `distinct()` would shuffle the probe side of the store scan.
+    */
+  def incrementalProbeOnDigests(
+      incoming: DataFrame,
+      text: Column,
+      idCol: Column,
+      refDigests: DataFrame,
+      maxBroadcastCandidates: Long = 2000000L
+  ): DataFrame =
+    withBroadcastGuard(incoming, text, idCol, refDigests, maxBroadcastCandidates) { (incFp, withinBound) =>
+      val batchFp = incFp.select(col("fp"))
+      val probe = if (withinBound) batchFp else batchFp.distinct()
+      val present = refDigests.select(col("fp")).join(broadcast(probe), Seq("fp"), "left_semi")
+      incFp
+        .join(broadcast(present), Seq("fp"), "left_anti")
+        .groupBy(col("fp"))
+        .agg(min(col("keep_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+    }
+
+  /** The broadcast guard of [[incrementalBloom]], shared with
+    * [[incrementalProbeOnDigests]]: pins the batch's digest frame (`fp`,
+    * `keep_id`) and hands it to `probe` with whether its ROW count is
+    * within `maxBroadcastCandidates`, or returns the plain anti-join when
+    * its DISTINCT digests are past the bound. Pinned because the digest
+    * frame feeds the strategy decision and every probe branch — a batch is
+    * small by definition, and unpinned each consumer re-digested the
+    * incoming text.
+    */
+  private def withBroadcastGuard(
+      incoming: DataFrame,
+      text: Column,
+      idCol: Column,
+      refDigests: DataFrame,
+      maxBroadcastCandidates: Long
+  )(probe: (DataFrame, Boolean) => DataFrame): DataFrame = {
     val batchRows = org.apache.spark.sql.Observation()
     val incFp = graft.runtime.GraftCheckpoint.pin(
       incoming
@@ -159,54 +259,8 @@ object Dedup {
     )
     val withinBound = batchRows.get("rows").asInstanceOf[Long] <= maxBroadcastCandidates
     if (!withinBound && incFp.select(col("fp")).distinct().count() > maxBroadcastCandidates)
-      return incrementalOnDigests(incoming, text, idCol, refDigests)
-    val refFp = refDigests.select(col("fp"))
-    // sketch distribution auto-switch: the scalar-subquery filter rides
-    // every TASK CLOSURE, which is right up to the session's runtime-
-    // filter bit cap (~8 MB default) and fatal near ~100 MB (measured —
-    // see sketch.broadcastBloom). Past the cap the aggregate would
-    // silently clamp (fpp → 1, pure confirm-join traffic), so an
-    // accepted corpus grown beyond it — the StreamDedup store's fate —
-    // flips to the broadcast build instead: same answer, full-size
-    // filter, one copy per executor.
-    val optimalBits =
-      math.ceil(-expectedRefItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val bitCap = incoming.sparkSession.conf
-      .get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
-    val itemCap = incoming.sparkSession.conf
-      .get("spark.sql.optimizer.runtime.bloomFilter.maxExpectedNumItems", "4000000").toLong
-    val mightCol =
-      if (optimalBits > bitCap || expectedRefItems > itemCap)
-        sketch.broadcastBloom(refFp, xxhash64(col("fp")), expectedRefItems, fpp) match {
-          case Some(bf) => coalesce(sketch.might_contain_bc(bf, xxhash64(col("fp"))), lit(false))
-          case None     => lit(false)
-        }
-      else {
-        val bloom = refFp
-          .select(sketch.bloom_filter_agg(xxhash64(col("fp")), expectedRefItems, fpp).as("bf"))
-          .scalar()
-        coalesce(sketch.might_contain(bloom, xxhash64(col("fp"))), lit(false))
-      }
-    // NOT pinned: the three consumers land in ONE action whose plan
-    // carries the bloom probe as a scalar subquery — ReuseSubquery/
-    // ReuseExchange evaluate the reference-side build once per execution
-    // already (and the probe must stay visible in the executed plan, the
-    // DedupSimilaritySpec plan-shape contract)
-    val flagged = incFp.withColumn("__might", mightCol)
-    val mightFp = flagged.filter(col("__might")).select(col("fp"))
-    val candidates = if (withinBound) mightFp else mightFp.distinct()
-    // Which candidates truly exist in the reference: broadcast the (small)
-    // candidate set so the reference is only scanned, never shuffled.
-    val present = refFp.join(broadcast(candidates), Seq("fp"), "left_semi").distinct()
-    val certainNew = flagged.filter(!col("__might")).drop("__might")
-    val confirmedNew = flagged
-      .filter(col("__might"))
-      .drop("__might")
-      .join(broadcast(present), Seq("fp"), "left_anti")
-    certainNew
-      .unionByName(confirmedNew)
-      .groupBy(col("fp"))
-      .agg(min(col("keep_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+      incrementalOnDigests(incoming, text, idCol, refDigests)
+    else probe(incFp, withinBound)
   }
 
   /** Incremental NEAR-dup dedup: gate an ingest batch against the accepted
@@ -297,22 +351,6 @@ object Dedup {
     */
   def shingles(text: Column, n: Int): Column =
     graft.functions.text.word_shingles(text, n)
-
-  /** MinHash signature: each shingle STRING is hashed once to a 64-bit
-    * value; the `numHashes` hash families then re-mix that fixed-width long
-    * (`xxhash64(seed_i, h)`), so per-document cost is
-    * O(|sh| · (strlen + numHashes·8B)) instead of
-    * O(|sh| · numHashes · strlen) — the string is only walked once.
-    * All codegen'd (transform + array_min).
-    */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column = {
-    val hs = transform(array_distinct(shingleCol), s => xxhash64(s))
-    array(
-      (0 until numHashes).map { seed =>
-        array_min(transform(hs, h => xxhash64(lit(seed), h)))
-      }: _*
-    )
-  }
 
   /** LSH banding: split a signature of `numHashes` values into `bands`
     * bands of `numHashes / bands` rows each; each band hashes to one

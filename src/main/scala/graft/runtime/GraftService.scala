@@ -42,19 +42,14 @@ object GraftService {
     * `interfaces.northbound[].dedup`): before a batch reaches the sink,
     * rows whose `field` content was already accepted in ANY previous
     * epoch drop against the digest store ([[graft.streaming.StreamDedup]]
-    * — Bloom-prefiltered, scanned-never-shuffled, replay-idempotent), and
+    * — scanned once per epoch, never shuffled, replay-idempotent), and
     * within-batch copies collapse to one arbitrary representative (rows
     * identical in `field` are interchangeable for a content sink). This
     * is the LLM-pipeline ingestion gate made config-driven: a YAML-only
     * operator can point any sink at a store path and get
     * exactly-once-by-content delivery.
     */
-  final case class DedupConf(
-      store: String,
-      field: String = "payload",
-      expectedItems: Long = 4000000L,
-      fpp: Double = 0.03
-  )
+  final case class DedupConf(store: String, field: String = "payload")
 
   /** `options` — same generic Kafka client passthrough for producer-type
     * sinks (YAML `interfaces.northbound[].options`); ignored by
@@ -133,9 +128,7 @@ object GraftService {
         n.get("dedup").map { d =>
           DedupConf(
             store = d("store").str,
-            field = d.get("field").map(_.str).getOrElse("payload"),
-            expectedItems = d.get("expectedItems").map(_.long).getOrElse(4000000L),
-            fpp = d.get("fpp").map(_.str.toDouble).getOrElse(0.03)
+            field = d.get("field").map(_.str).getOrElse("payload")
           )
         }
       )
@@ -278,9 +271,7 @@ object GraftService {
       col("__graft_dedup_id"),
       d.store,
       epoch,
-      (kept, e) => accept(kept.drop("__graft_dedup_id"), e),
-      d.expectedItems,
-      d.fpp
+      (kept, e) => accept(kept.drop("__graft_dedup_id"), e)
     )
     ()
   }

@@ -46,9 +46,7 @@ object StreamCurate {
       epoch: Long,
       accept: (DataFrame, Long) => Unit,
       minWords: Int = 50,
-      minStopHits: Int = 2,
-      expectedRefItems: Long = 4000000L,
-      fpp: Double = 0.03
+      minStopHits: Int = 2
   ): Long = {
     val text = col(textCol)
     val keptIds = TextOps
@@ -57,16 +55,7 @@ object StreamCurate {
       .select(col("doc_id").as("__kept_id")) // fresh name: the batch may well carry doc_id
     val quality = batch.join(keptIds, idCol === col("__kept_id"), "left_semi")
     val scrubbed = quality.withColumn(textCol, TextOps.piiScrub(text).getField("redacted"))
-    StreamDedup.dedupBatch(
-      scrubbed,
-      col(textCol),
-      idCol,
-      digestStore,
-      epoch,
-      accept,
-      expectedRefItems,
-      fpp
-    )
+    StreamDedup.dedupBatch(scrubbed, col(textCol), idCol, digestStore, epoch, accept)
   }
 
   /** The full recipe as an epoch-aware sink — attach via
@@ -79,15 +68,10 @@ object StreamCurate {
       digestStore: String,
       accept: (DataFrame, Long) => Unit,
       minWords: Int = 50,
-      minStopHits: Int = 2,
-      expectedRefItems: Long = 4000000L,
-      fpp: Double = 0.03
+      minStopHits: Int = 2
   ): (DataFrame, Long) => Unit =
     (batch, epoch) => {
-      curateBatch(
-        batch, textCol, idCol, digestStore, epoch, accept,
-        minWords, minStopHits, expectedRefItems, fpp
-      )
+      curateBatch(batch, textCol, idCol, digestStore, epoch, accept, minWords, minStopHits)
       ()
     }
 }

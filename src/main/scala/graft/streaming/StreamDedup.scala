@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.operators.Dedup
 
-/** Streaming twin of [[graft.operators.Dedup.incrementalBloom]]: a
+/** Streaming twin of [[graft.operators.Dedup.incremental]]: a
   * `foreachBatch` combinator that dedupes every micro-batch against the
   * digests of everything previously accepted, then hands the survivors to
   * the wrapped sink — continuous corpus ingestion where a re-ingested
@@ -21,9 +21,10 @@ import graft.operators.Dedup
   *      on the `epoch` directory column, with the declared
   *      [[StoreSchema]] — no footer read; a missing or empty store reads
   *      as empty — see idempotency below);
-  *   2. [[graft.operators.Dedup.incrementalBloomOnDigests]] against it —
-  *      the store is scanned (sketch fold + confirm probe) but NEVER
-  *      shuffled, and within-batch copies collapse to their smallest id;
+  *   2. [[graft.operators.Dedup.incrementalProbeOnDigests]] against it —
+  *      the store is scanned ONCE (a semi-join against the broadcast batch
+  *      digests) and NEVER shuffled, and within-batch copies collapse to
+  *      their smallest id;
   *   3. overwrite `<store>/epoch=<n>` with the survivors' digests, counting
   *      them on the write's own job;
   *   4. pass the surviving ROWS (original batch schema) to `accept`.
@@ -41,14 +42,14 @@ import graft.operators.Dedup
   * `epoch` for end-to-end exactly-once).
   *
   * 100 TB shape: the store holds digests only (32 bytes per accepted doc
-  * ever), the reference side of the dedup is scanned-not-shuffled, and a
-  * mostly-duplicate batch degrades to the plain anti-join via
-  * [[graft.operators.Dedup.incrementalBloomOnDigests]]'s broadcast guard
-  * rather than an unbounded driver broadcast. Raise `expectedRefItems`
-  * as the accepted corpus grows — past the session's runtime-filter caps
-  * the sketch automatically builds as a per-executor BROADCAST
-  * (full-size) instead of a clamped task-closure literal; an undersized
-  * sketch costs confirm-join traffic, never correctness.
+  * ever) and is scanned once per epoch, never shuffled. What moves is
+  * sized by the BATCH, not by the store: the batch digests broadcast to
+  * the scan, and the store digests they hit broadcast back. A batch with
+  * more distinct digests than
+  * [[graft.operators.Dedup.incrementalProbeOnDigests]]'s broadcast guard
+  * allows degrades to the plain anti-join rather than an unbounded driver
+  * broadcast. No per-epoch sketch is built, so nothing has to be sized
+  * for the store's growth.
   *
   * Reference parity: the C++ service has no cross-batch dedup stage —
   * this is part of the LLM-pipeline surface (SURVEY §2.5.1) married to
@@ -67,7 +68,9 @@ object StreamDedup {
 
   /** One micro-batch of the recipe above, callable directly (and from
     * tests) — [[dedupSink]] is this per epoch. Returns the number of
-    * surviving rows handed to `accept`.
+    * surviving rows handed to `accept`. `expectedRefItems` and `fpp` are
+    * ignored: they sized a Bloom sketch the store probe no longer builds,
+    * and stay only so that existing callers that name them still compile.
     */
   def dedupBatch(
       batch: DataFrame,
@@ -89,9 +92,7 @@ object StreamDedup {
         spark.read.schema(StoreSchema).option("basePath", digestStore).parquet(digestStore)
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
     val refFp = stored.filter(col("epoch") < epoch).select(col("fp"))
-    val survivors = Dedup
-      .incrementalBloomOnDigests(batch, text, idCol, refFp, expectedRefItems, fpp)
-      .persist()
+    val survivors = Dedup.incrementalProbeOnDigests(batch, text, idCol, refFp).persist()
     try {
       // store first (idempotent overwrite), then delivery: a crash between
       // the two replays the epoch, re-derives the same survivors (the
@@ -125,12 +126,10 @@ object StreamDedup {
       text: Column,
       idCol: Column,
       digestStore: String,
-      accept: (DataFrame, Long) => Unit,
-      expectedRefItems: Long = 4000000L,
-      fpp: Double = 0.03
+      accept: (DataFrame, Long) => Unit
   ): (DataFrame, Long) => Unit =
     (batch, epoch) => {
-      dedupBatch(batch, text, idCol, digestStore, epoch, accept, expectedRefItems, fpp)
+      dedupBatch(batch, text, idCol, digestStore, epoch, accept)
       ()
     }
 }

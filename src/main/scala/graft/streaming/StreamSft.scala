@@ -36,7 +36,7 @@ import graft.operators.ChatOps
   *
   * 100 TB shape: parsing and mask accounting ride the micro-batch scan
   * in-row; pair construction moves ~2 rows per prompt; the digest store
-  * is scanned (bloom-prefiltered), never shuffled.
+  * is scanned once per epoch, never shuffled.
   */
 object StreamSft {
 
@@ -65,9 +65,7 @@ object StreamSft {
       epoch: Long,
       acceptPairs: (DataFrame, Long) => Unit,
       lossRole: String = "assistant",
-      roles: Seq[String] = ChatOps.DefaultRoles,
-      expectedRefItems: Long = 4000000L,
-      fpp: Double = 0.03
+      roles: Seq[String] = ChatOps.DefaultRoles
   ): (Long, Long) = {
     val parsed = ChatOps.parseTranscript(
       batch.select(idCol.as("cand_id"), col(textCol).as("__text"), scoreCol.as("__score")),
@@ -95,9 +93,7 @@ object StreamSft {
         col("prompt_id"),
         promptStore,
         epoch,
-        acceptPairs,
-        expectedRefItems,
-        fpp
+        acceptPairs
       )
       (nPairs, nDropped)
     } finally {
@@ -117,15 +113,10 @@ object StreamSft {
       promptStore: String,
       acceptPairs: (DataFrame, Long) => Unit,
       lossRole: String = "assistant",
-      roles: Seq[String] = ChatOps.DefaultRoles,
-      expectedRefItems: Long = 4000000L,
-      fpp: Double = 0.03
+      roles: Seq[String] = ChatOps.DefaultRoles
   ): (DataFrame, Long) => Unit =
     (batch, epoch) => {
-      sftBatch(
-        batch, textCol, idCol, scoreCol, promptStore, epoch, acceptPairs,
-        lossRole, roles, expectedRefItems, fpp
-      )
+      sftBatch(batch, textCol, idCol, scoreCol, promptStore, epoch, acceptPairs, lossRole, roles)
       ()
     }
 }

@@ -14,6 +14,14 @@ class DedupSimilaritySpec extends SparkTestBase {
     .load(spark, sfDir, "embeddings")
     .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
 
+  /** Declarative MinHash signature: each shingle string hashed once to a
+    * long, then re-mixed by `numHashes` seeded `xxhash64` families.
+    */
+  private def minhashSignature(shingleCol: org.apache.spark.sql.Column, numHashes: Int) = {
+    val hs = transform(array_distinct(shingleCol), s => xxhash64(s))
+    array((0 until numHashes).map(seed => array_min(transform(hs, h => xxhash64(lit(seed), h)))): _*)
+  }
+
   test("exact dedup: identical texts collapse to min id") {
     import spark.implicits._
     val df = Seq((1L, "a b c"), (2L, "a b c"), (3L, "x y")).toDF("doc_id", "text")
@@ -137,6 +145,46 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(plan.contains("might_contain"), s"bloom probe missing from plan:\n$plan")
     // both reference-side joins must be broadcast (ref scanned, not shuffled)
     assert(!plan.contains("SortMergeJoin"), s"reference side got shuffle-joined:\n$plan")
+  }
+
+  test("incrementalProbeOnDigests: one store scan, no sketch, Bloom-path survivors; past the guard the plain anti-join") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft-probe").toString + "/digests"
+    Seq("seen a", "seen b", "seen c").toDF("text")
+      .select(graft.operators.TextOps.fingerprintMd5(col("text")).as("fp"))
+      .write.parquet(s"$store/epoch=0")
+    val refFp = spark.read.option("basePath", store).parquet(store).select(col("fp"))
+    // new rows, cross-epoch re-ingests (one a normalization variant) and
+    // within-batch copies: 7 rows over 5 distinct digests
+    val batch = Seq(
+      (1L, "fresh x"), (2L, "seen a"), (3L, "fresh x"), (4L, "Seen  B"),
+      (5L, "fresh y"), (6L, "fresh y"), (7L, "fresh z")
+    ).toDF("doc_id", "text")
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val bloom = rows(Dedup.incrementalBloomOnDigests(batch, col("text"), col("doc_id"), refFp))
+    assert(bloom.map(r => (r._2, r._3)) == Set((1L, 2L), (5L, 2L), (7L, 1L)))
+    def run(bound: Long) = {
+      val out = Dedup.incrementalProbeOnDigests(batch, col("text"), col("doc_id"), refFp, bound)
+      val got = rows(out)
+      (out.queryExecution.executedPlan, got)
+    }
+    // within the row bound (7 <= 10), and past it with few distinct digests
+    // (7 > 5 >= 5): one probe, the store scanned once and never shuffled
+    for (bound <- Seq(10L, 5L)) {
+      val (plan, got) = run(bound)
+      assert(got == bloom, s"bound $bound")
+      assert(scansUnder(plan, store).size == 1, s"bound $bound: store not scanned exactly once:\n$plan")
+      assert(!shufflesScanUnder(plan, store), s"bound $bound: store rows shuffled:\n$plan")
+      val ops = planNodes(plan).map(_.simpleString(Int.MaxValue)).mkString("\n")
+      Seq("might_contain", "bloom_filter_agg", "SortMergeJoin").foreach { op =>
+        assert(!ops.contains(op), s"bound $bound: $op in the probe plan:\n$ops")
+      }
+    }
+    // 5 distinct digests > bound 2: the plain anti-join, which shuffles the store
+    val (plainPlan, plain) = run(2L)
+    assert(plain == bloom)
+    assert(shufflesScanUnder(plainPlan, store), s"guard did not fall back:\n$plainPlan")
   }
 
   test("quantizeInt8: bounds, zero vector, dequantization error within scale/2") {
@@ -302,7 +350,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     val sigs = df
       .select(
         col("doc_id"),
-        Dedup.minhashSignature(Dedup.shingles(col("text"), 3), 16).as("sig")
+        minhashSignature(Dedup.shingles(col("text"), 3), 16).as("sig")
       )
       .withColumn("bands", Dedup.bandKeys(col("sig"), 16, 4))
       .collect()

@@ -292,7 +292,7 @@ class ServiceSpec extends SparkTestBase {
     // reads with its declared store schema)
     val store =
       java.nio.file.Files.createTempDirectory("svc-dedup").toString + "/digests"
-    val cfg = GraftService.parseConfig(
+    def dedupConf(extra: String) = GraftService.parseConfig(
       s"""topic: t
          |interfaces:
          |  southbound:
@@ -303,11 +303,12 @@ class ServiceSpec extends SparkTestBase {
          |      dedup:
          |        store: $store
          |        field: payload
-         |        expectedItems: 1000
-         |""".stripMargin
-    )
-    val d = cfg.northbound.head.dedup.get
-    assert(d.store == store && d.field == "payload" && d.expectedItems == 1000L && d.fpp == 0.03)
+         |$extra""".stripMargin
+    ).northbound.head.dedup.get
+    val d = dedupConf("")
+    assert(d == GraftService.DedupConf(store, "payload"))
+    // a config written for the retired Bloom knobs still parses, unchanged
+    assert(dedupConf("        expectedItems: 1000\n        fpp: 0.01\n") == d)
     // the wrapper: within-batch copies collapse, cross-epoch re-ingests
     // drop against the store, replays are idempotent
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]

@@ -24,6 +24,51 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
         planExists(q.plan)(p)
       case _ => false
     }
+
+  /** Every physical node of `plan`, recursing through AQE query stages,
+    * subqueries, command wrappers and cached relations. With `throughBroadcasts = false` the
+    * walk stops at broadcast exchanges, so it yields the nodes whose rows
+    * flow into `plan`'s own output (what a shuffle above them would move).
+    */
+  def planNodes(
+      plan: org.apache.spark.sql.execution.SparkPlan,
+      throughBroadcasts: Boolean = true
+  ): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: adaptive.AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: adaptive.QueryStageExec        => walk(q.plan)
+      case c: CommandResultExec              => walk(c.commandPhysicalPlan)
+      case m: columnar.InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case _: exchange.BroadcastExchangeLike if !throughBroadcasts => Nil
+      case _ => p.children.flatMap(walk) ++ (if (throughBroadcasts) p.subqueries.flatMap(walk) else Nil)
+    })
+    walk(plan)
+  }
+
+  /** Is `p` a parquet scan whose root path lies under `dir`? */
+  def isScanUnder(p: org.apache.spark.sql.execution.SparkPlan, dir: String): Boolean = p match {
+    case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+      s.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(dir))
+    case _ => false
+  }
+
+  /** The parquet scans in `plan` whose root path lies under `dir`. */
+  def scansUnder(
+      plan: org.apache.spark.sql.execution.SparkPlan,
+      dir: String
+  ): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    planNodes(plan).filter(isScanUnder(_, dir))
+
+  /** Is some shuffle in `plan` fed by rows of a scan under `dir` (not just
+    * by rows joined against a broadcast of them)?
+    */
+  def shufflesScanUnder(plan: org.apache.spark.sql.execution.SparkPlan, dir: String): Boolean =
+    planNodes(plan).exists {
+      case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
+        planNodes(x, throughBroadcasts = false).exists(isScanUnder(_, dir))
+      case _ => false
+    }
 }
 
 object SparkTestBase {

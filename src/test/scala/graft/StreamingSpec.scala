@@ -118,9 +118,44 @@ class StreamingSpec extends SparkTestBase {
       "epoch-2 replay read the abandoned epoch 3")
   }
 
-  test("StreamDedup / StreamAsOf: job budget of a warm epoch") {
-    import graft.streaming.{StreamAsOf, StreamDedup}
-    val root = java.nio.file.Files.createTempDirectory("graft-job-budget").toString
+  test("StreamDedup: the store write scans the store once, builds no sketch, never shuffles the store") {
+    import graft.streaming.StreamDedup
+    val store = java.nio.file.Files.createTempDirectory("graft-one-scan").toString + "/digests"
+    def dedup(epoch: Long, docs: (Long, String)*): Long =
+      StreamDedup.dedupBatch(docs.toDF("doc_id", "text"), col("text"), col("doc_id"), store, epoch, (_, _) => ())
+    assert(dedup(0L, 1L -> "alpha", 2L -> "beta") == 2L)
+    assert(dedup(1L, 3L -> "gamma") == 1L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // a cross-epoch re-ingest, a normalization variant of one, and a
+    // within-batch copy of a new doc
+    val kept =
+      try dedup(2L, 4L -> "alpha", 5L -> "delta", 6L -> "delta", 7L -> "Gamma ")
+      finally {
+        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(kept == 1L)
+    val writes = plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq.filter(p =>
+      planNodes(p).exists(_.isInstanceOf[org.apache.spark.sql.execution.command.DataWritingCommandExec]))
+    assert(writes.size == 1, s"expected one store write, saw ${writes.size}")
+    val plan = writes.head
+    assert(scansUnder(plan, store).size == 1, s"store not scanned exactly once:\n$plan")
+    assert(!shufflesScanUnder(plan, store), s"store rows shuffled:\n$plan")
+    val ops = planNodes(plan).map(_.simpleString(Int.MaxValue)).mkString("\n")
+    Seq("might_contain", "bloom_filter_agg", "SortMergeJoin").foreach { op =>
+      assert(!ops.contains(op), s"$op in the store write:\n$ops")
+    }
+  }
+
+  /** Spark jobs fired by `f`, counted by a listener on a job group of its own. */
+  private def jobsOf(f: => Unit): Int = {
     val group = s"job-budget-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -129,16 +164,21 @@ class StreamingSpec extends SparkTestBase {
           jobs.incrementAndGet(); ()
         }
     }
-    def rows(epoch: Long) = spark.range(epoch * 2000L, (epoch + 1) * 2000L)
-    def epochJobs(f: => Unit): Int = {
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
-      jobs.set(0)
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+    spark.sparkContext.addSparkListener(listener)
+    try {
       spark.sparkContext.setJobGroup(group, "job budget")
       try f
       finally spark.sparkContext.clearJobGroup()
       org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
       jobs.get()
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("StreamDedup / StreamAsOf: job budget of a warm epoch") {
+    import graft.streaming.{StreamAsOf, StreamDedup}
+    val root = java.nio.file.Files.createTempDirectory("graft-job-budget").toString
+    def rows(epoch: Long) = spark.range(epoch * 2000L, (epoch + 1) * 2000L)
     def dedup(epoch: Long): Long = StreamDedup.dedupBatch(
       rows(epoch).select(col("id").as("doc_id"), concat(lit("doc "), (col("id") % 1000).cast("string")).as("text")),
       col("text"), col("doc_id"), s"$root/digests", epoch, (_, _) => ())
@@ -147,19 +187,31 @@ class StreamingSpec extends SparkTestBase {
       rows(epoch).filter(col("id") % 4 === 0).select((col("id") % 50).as("k"), col("id").as("t"),
         (col("id") * 2).as("feat")),
       "k", "t", s"$root/obs", epoch, (_, _) => ())
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      (0L to 2L).foreach { e => dedup(e); enrich(e) }
-      var kept = -1L
-      val dedupJobs = epochJobs { kept = dedup(3L) }
-      assert(kept == 0L, s"a warm epoch of re-ingests kept $kept docs")
-      assert(dedupJobs <= 9, s"warm dedupBatch fired $dedupJobs jobs (budget 9)")
-      var enriched = -1L
-      val enrichJobs = epochJobs { enriched = enrich(3L) }
-      assert(enriched == 1500L, s"warm enrichBatch enriched $enriched rows")
-      assert(enrichJobs <= 6, s"warm enrichBatch fired $enrichJobs jobs (budget 6)")
-      info(s"warm epoch jobs: dedup $dedupJobs, as-of $enrichJobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    (0L to 2L).foreach { e => dedup(e); enrich(e) }
+    var kept = -1L
+    val dedupJobs = jobsOf { kept = dedup(3L) }
+    assert(kept == 0L, s"a warm epoch of re-ingests kept $kept docs")
+    assert(dedupJobs <= 6, s"warm dedupBatch fired $dedupJobs jobs (budget 6)")
+    var enriched = -1L
+    val enrichJobs = jobsOf { enriched = enrich(3L) }
+    assert(enriched == 1500L, s"warm enrichBatch enriched $enriched rows")
+    assert(enrichJobs <= 6, s"warm enrichBatch fired $enrichJobs jobs (budget 6)")
+    info(s"warm epoch jobs: dedup $dedupJobs, as-of $enrichJobs")
+  }
+
+  test("GraftService.wrapDedup: job budget of a warm epoch on binary payloads (default DedupConf)") {
+    val store = java.nio.file.Files.createTempDirectory("graft-svc-budget").toString + "/digests"
+    val sink = graft.runtime.GraftService.wrapDedup(graft.runtime.GraftService.DedupConf(store), (_, _) => ())
+    // 2,000 frames per epoch over 1,500 distinct payloads, half of each
+    // epoch's payloads seen in the epoch before
+    def frames(epoch: Long) = spark.range(0L, 2000L).select(
+      encode(concat(lit("frame "), ((col("id") % 1500) + epoch * 750L).cast("string")), "UTF-8").as("payload"))
+    (0L to 2L).foreach(e => sink(frames(e), e))
+    val jobs = jobsOf(sink(frames(3L), 3L))
+    val accepted = spark.read.parquet(s"$store/epoch=3").count()
+    assert(accepted == 750L, s"a warm epoch accepted $accepted payloads")
+    assert(jobs <= 7, s"warm wrapDedup fired $jobs jobs (budget 7)")
+    info(s"warm wrapDedup epoch jobs: $jobs")
   }
 
   test("StreamCurate: quality-gated, PII-scrubbed, cross-batch-deduped ingestion") {
