@@ -133,4 +133,66 @@ object sketch {
       hashed: Column
   ): Column =
     Bridge.column(BloomMightContainBC(bf, Bridge.expression(hashed)))
+
+  /** Exact membership in a BROADCAST set of Catalyst values: the exact
+    * twin of [[might_contain_bc]] for sets small enough to hold on the
+    * driver (a micro-batch's digests or row ids). The expression carries
+    * only the broadcast handle, so the set ships once per executor rather
+    * than in every task closure the way an `isin` literal would. NULL in,
+    * NULL out (a filter drops it). Build the set with [[broadcastSet]].
+    */
+  case class InBroadcastSet(
+      set: org.apache.spark.broadcast.Broadcast[java.util.Set[Any]],
+      child: org.apache.spark.sql.catalyst.expressions.Expression
+  ) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.types._
+    override def dataType: DataType = BooleanType
+    override def nullIntolerant: Boolean = true
+    override def nullSafeEval(v: Any): Any = set.value.contains(v)
+    override def doGenCode(
+        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode
+    ): org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+      val ref = ctx.addReferenceObj("setBc", set, classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
+      nullSafeCodeGen(ctx, ev, v => {
+        val boxed =
+          if (CodeGenerator.isPrimitiveType(child.dataType)) s"${CodeGenerator.boxedType(child.dataType)}.valueOf($v)"
+          else v
+        s"${ev.value} = ((java.util.Set) $ref.value()).contains($boxed);"
+      })
+    }
+    override protected def withNewChildInternal(
+        c: org.apache.spark.sql.catalyst.expressions.Expression
+    ): InBroadcastSet = copy(child = c)
+  }
+
+  /** Broadcast `values` (external Scala/Java values of `dataType`, as
+    * `Row.get` returns them) as the Catalyst-internal set
+    * [[in_broadcast_set]] probes: a hash set for strings, integral, boolean
+    * and date/time values, an ordering-backed tree set otherwise (binary,
+    * decimals, floats, structs). Not an action:
+    * no job runs. `destroy()` it once the probing query has run.
+    */
+  def broadcastSet(
+      spark: org.apache.spark.sql.SparkSession,
+      dataType: org.apache.spark.sql.types.DataType,
+      values: Iterable[Any]
+  ): org.apache.spark.broadcast.Broadcast[java.util.Set[Any]] = {
+    import org.apache.spark.sql.types._
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dataType)
+    val set: java.util.Set[Any] = dataType match {
+      case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType | DateType | TimestampType |
+          TimestampNTZType =>
+        new java.util.HashSet[Any]()
+      case _ => new java.util.TreeSet[Any](org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dataType))
+    }
+    // NULL never matches (the probe is null-intolerant), so it is not stored
+    values.foreach(v => if (v != null) set.add(toCatalyst(v)))
+    spark.sparkContext.broadcast(set)
+  }
+
+  /** Column surface of [[InBroadcastSet]]. */
+  def in_broadcast_set(set: org.apache.spark.broadcast.Broadcast[java.util.Set[Any]], c: Column): Column =
+    Bridge.column(InBroadcastSet(set, Bridge.expression(c)))
 }

@@ -288,20 +288,16 @@ object ChatOps {
   def bradleyTerry(
       comparisons: DataFrame,
       iters: Int = 5,
-      virtual: Double = 1.0,
-      checkpoint: Boolean = true
+      virtual: Double = 1.0
   ): DataFrame = {
     val c = comparisons
       .select(col("winner"), col("loser"))
       .filter(col("winner").isNotNull && col("loser").isNotNull && col("winner") =!= col("loser"))
-    // Setup frames are pinned UNCONDITIONALLY — they are corpus-pass
-    // results (pair-/item-sized model state), not loop state, and with
-    // checkpoint=false the MM loop would silently re-execute the corpus
-    // aggregation every iteration (r16 ADVICE). The `checkpoint` flag
-    // gates only the per-iteration strength pin below.
+    // Setup frames are pinned — they are corpus-pass results (pair-/item-
+    // sized model state), and unpinned the MM loop would re-execute the
+    // corpus aggregation every iteration (r16 ADVICE); the per-iteration
+    // strength is pinned too, to truncate loop lineage.
     def mp(df: DataFrame): DataFrame = graft.runtime.GraftCheckpoint.pin(df)
-    def mpIter(df: DataFrame): DataFrame =
-      if (checkpoint) graft.runtime.GraftCheckpoint.pin(df) else df
     // directed is THE corpus aggregation — pin it so the single pass over
     // the comparison corpus happens exactly once. Before this pin, the
     // unpinned wins/losses tables re-executed the whole upstream (corpus
@@ -354,7 +350,7 @@ object ChatOps {
             (coalesce(col("den"), lit(0.0)) + lit(2.0 * virtual) / (col("s") + 1.0)))
             .as("sr")
         )
-        .transform(mpIter)
+        .transform(mp)
       val r = raw
         .agg(
           coalesce(sum(col("sr")), lit(Double.NaN)).as("tot"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. Designed for the 100 TB case:
   *
@@ -114,10 +116,10 @@ object Dedup {
     * digests ≈ 64 MB broadcast payload (32-char hex digests).
     *
     * Streaming dedup ([[graft.streaming.StreamDedup]]) uses
-    * [[incrementalProbeOnDigests]] instead: within the same guard the
-    * batch itself is broadcastable, so probing the store with it directly
-    * takes one store scan where this method takes two, and it rebuilds no
-    * full-size sketch from the whole store every epoch.
+    * [[incrementalOnDriver]] instead: within the same guard the batch
+    * itself is driver-sized, so probing the store with its digests
+    * directly takes one store scan where this method takes two, and it
+    * rebuilds no full-size sketch from the whole store every epoch.
     */
   def incrementalBloom(
       incoming: DataFrame,
@@ -151,8 +153,20 @@ object Dedup {
       expectedRefItems: Long = 4000000L,
       fpp: Double = 0.03,
       maxBroadcastCandidates: Long = 2000000L
-  ): DataFrame =
-    withBroadcastGuard(incoming, text, idCol, refDigests, maxBroadcastCandidates) { (incFp, withinBound) =>
+  ): DataFrame = {
+    // the batch's digest frame feeds the strategy decision and every probe
+    // branch: pinned, so no consumer re-digests the incoming text, with
+    // its row count riding the pin's own job
+    val batchRows = org.apache.spark.sql.Observation()
+    val incFp = graft.runtime.GraftCheckpoint.pin(
+      incoming
+        .select(TextOps.fingerprintMd5(text).as("fp"), idCol.as("keep_id"))
+        .observe(batchRows, count(lit(1)).as("rows"))
+    )
+    val withinBound = batchRows.get("rows").asInstanceOf[Long] <= maxBroadcastCandidates
+    if (!withinBound && incFp.select(col("fp")).distinct().count() > maxBroadcastCandidates)
+      incrementalOnDigests(incoming, text, idCol, refDigests)
+    else {
       import graft.functions.sketch
       val refFp = refDigests.select(col("fp"))
       // sketch distribution auto-switch: the scalar-subquery filter rides
@@ -202,65 +216,85 @@ object Dedup {
         .groupBy(col("fp"))
         .agg(min(col("keep_id")).as("keep_id"), count(lit(1)).as("n_copies"))
     }
+  }
 
-  /** [[incrementalOnDigests]] as ONE probe of the reference: the batch's
-    * digests broadcast, the reference semi-joins them (`present` — the
-    * batch digests the reference already holds), and the batch anti-joins
-    * the broadcast `present`. The reference is scanned once and never
-    * shuffled, and no sketch is built. Same survivors as
-    * [[incrementalBloomOnDigests]], with its broadcast guard: past
-    * `maxBroadcastCandidates` distinct batch digests it returns the plain
-    * anti-join instead.
+  /** [[incrementalOnDigests]] decided ON THE DRIVER, for a batch that is
+    * driver-sized by construction (a streaming micro-batch): returns the
+    * batch's NEW digests, each with the smallest id among its rows (`min`
+    * semantics: null ids ignored, null when all are null), or None when
+    * the batch holds more than `maxBroadcastCandidates` distinct digests —
+    * the caller then takes the plain anti-join. `fp` is a
+    * [[TextOps.fingerprintMd5]] digest column of `incoming`, `refDigests`
+    * a frame with an `fp` column of the same digests. The caller persists
+    * `incoming` when it reads it again (the first job below fills the
+    * cache).
     *
-    * `present` keeps one row per reference copy of a batch digest. A
-    * digest store holds each digest at most once (every epoch's survivors
-    * are distinct and new against the earlier epochs), so there `present`
-    * ⊆ the batch's distinct digests; it is not deduplicated, because a
-    * `distinct()` would shuffle the probe side of the store scan.
+    * Jobs: one collect of (`fp`, id), and one scan of the reference
+    * filtered by membership in a broadcast set of the batch digests
+    * (`present` — collected, never shuffled, no sketch; skipped for an
+    * empty batch). Within-batch copies collapse to their smallest id on
+    * the driver, so nothing shuffles at all.
+    *
+    * Broadcast guard, the same bound as [[incrementalBloom]]'s: the
+    * collect takes a partition's rows only while it holds at most
+    * ⌈bound / partitions⌉ of them, so the driver never holds more than
+    * about `maxBroadcastCandidates` rows. A batch past that (or skewed
+    * past it) aggregates per digest on the executors first (min id per
+    * digest), and is decided on the driver if its distinct digests are
+    * within the bound.
     */
-  def incrementalProbeOnDigests(
+  def incrementalOnDriver(
       incoming: DataFrame,
-      text: Column,
+      fp: Column,
       idCol: Column,
       refDigests: DataFrame,
       maxBroadcastCandidates: Long = 2000000L
-  ): DataFrame =
-    withBroadcastGuard(incoming, text, idCol, refDigests, maxBroadcastCandidates) { (incFp, withinBound) =>
-      val batchFp = incFp.select(col("fp"))
-      val probe = if (withinBound) batchFp else batchFp.distinct()
-      val present = refDigests.select(col("fp")).join(broadcast(probe), Seq("fp"), "left_semi")
-      incFp
-        .join(broadcast(present), Seq("fp"), "left_anti")
-        .groupBy(col("fp"))
-        .agg(min(col("keep_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+  ): Option[Seq[(String, Any)]] = {
+    val pairs = incoming.select(fp.as("fp"), idCol.as("id"))
+    val parts = pairs.rdd.getNumPartitions.max(1)
+    val perPart = ((maxBroadcastCandidates + parts - 1) / parts).min(Int.MaxValue - 1L).toInt
+    // null marks a partition past its share of the bound
+    val taken = pairs.rdd
+      .mapPartitions { it =>
+        val rows = it.take(perPart + 1).toArray
+        Iterator.single(if (rows.length > perPart) null else rows)
+      }
+      .collect()
+    val rows: Option[Array[org.apache.spark.sql.Row]] =
+      if (taken.forall(_ != null) && taken.iterator.map(_.length.toLong).sum <= maxBroadcastCandidates)
+        Some(taken.flatten)
+      else {
+        val perFp = pairs.groupBy(col("fp")).agg(min(col("id")).as("id"))
+        if (perFp.count() > maxBroadcastCandidates) None else Some(perFp.collect())
+      }
+    rows.map { rs =>
+      val idType = pairs.schema("id").dataType
+      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(idType)
+      val order = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+      val smallest = new java.util.HashMap[String, Any]()
+      rs.foreach { r =>
+        val (d, id) = (r.getString(0), r.get(1))
+        val cur = smallest.get(d)
+        if (!smallest.containsKey(d) || (id != null && (cur == null || order.lt(toCatalyst(id), toCatalyst(cur)))))
+          smallest.put(d, id)
+      }
+      val digests = smallest.keySet.asScala.filter(_ != null)
+      val present =
+        if (digests.isEmpty) Set.empty[String]
+        else {
+          import graft.functions.sketch
+          val probe = sketch.broadcastSet(incoming.sparkSession, org.apache.spark.sql.types.StringType, digests)
+          try
+            refDigests
+              .filter(sketch.in_broadcast_set(probe, col("fp")))
+              .select(col("fp"))
+              .collect()
+              .map(_.getString(0))
+              .toSet
+          finally probe.destroy()
+        }
+      smallest.asScala.iterator.filter { case (d, _) => !present.contains(d) }.toVector
     }
-
-  /** The broadcast guard of [[incrementalBloom]], shared with
-    * [[incrementalProbeOnDigests]]: pins the batch's digest frame (`fp`,
-    * `keep_id`) and hands it to `probe` with whether its ROW count is
-    * within `maxBroadcastCandidates`, or returns the plain anti-join when
-    * its DISTINCT digests are past the bound. Pinned because the digest
-    * frame feeds the strategy decision and every probe branch — a batch is
-    * small by definition, and unpinned each consumer re-digested the
-    * incoming text.
-    */
-  private def withBroadcastGuard(
-      incoming: DataFrame,
-      text: Column,
-      idCol: Column,
-      refDigests: DataFrame,
-      maxBroadcastCandidates: Long
-  )(probe: (DataFrame, Boolean) => DataFrame): DataFrame = {
-    val batchRows = org.apache.spark.sql.Observation()
-    val incFp = graft.runtime.GraftCheckpoint.pin(
-      incoming
-        .select(TextOps.fingerprintMd5(text).as("fp"), idCol.as("keep_id"))
-        .observe(batchRows, count(lit(1)).as("rows"))
-    )
-    val withinBound = batchRows.get("rows").asInstanceOf[Long] <= maxBroadcastCandidates
-    if (!withinBound && incFp.select(col("fp")).distinct().count() > maxBroadcastCandidates)
-      incrementalOnDigests(incoming, text, idCol, refDigests)
-    else probe(incFp, withinBound)
   }
 
   /** Incremental NEAR-dup dedup: gate an ingest batch against the accepted

@@ -302,8 +302,7 @@ object GraphOps {
   def pageRank(
       edges: DataFrame,
       iters: Int,
-      damping: Double = 0.85,
-      checkpoint: Boolean = true
+      damping: Double = 0.85
   ): DataFrame = {
     val spark = edges.sparkSession
     // pin the cleaned edge list FIRST (the hits discipline): the caller's
@@ -348,7 +347,7 @@ object GraphOps {
           (lit(teleport) + lit(damping) * (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n.toDouble)))
             .as("pr")
         )
-      ranks = if (checkpoint) next.transform(graft.runtime.GraftCheckpoint.pin) else next
+      ranks = next.transform(graft.runtime.GraftCheckpoint.pin)
       i += 1
     }
     ranks

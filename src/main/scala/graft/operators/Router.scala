@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *     rule's subject → one input row fans out to 0..N output rows.
   *
   * Spark-first design: rules compile to `Column` predicates BEFORE plan
-  * construction (plain Scala, SURVEY.md §4.1) and the multicast is a union
-  * of per-rule filter+project branches — all inside Catalyst, so pushdown
-  * and codegen apply; no custom operator needed.
+  * construction (plain Scala, SURVEY.md §4.1) and the multicast is ONE
+  * generator over the input: each row builds the array of its matching
+  * rules' (subject, destination) pairs and explodes it — all inside
+  * Catalyst, so codegen applies; no custom operator needed.
   */
 object Router {
 
@@ -63,10 +64,13 @@ object Router {
     }
   }
 
-  /** Route `df`: for each rule (in priority order) emit the matching rows
-    * with `subjectCol` rewritten; result is the union of all branches.
-    * Branches share the one scan (Catalyst reuses the exchange/scan), so
-    * this stays a single-pass multicast at execution time.
+  /** Route `df`: each row is copied once per matching rule (in priority
+    * order), with `subjectCol` rewritten to the rule's subject and a
+    * `destination` column added. One scan of `df`: every rule's match is
+    * evaluated in a single projection (`when(match, (subject,
+    * destination))` per rule) whose non-null entries explode into the
+    * copies — a union of per-rule branches would scan the input, and
+    * rebuild anything computed on it, once per rule.
     */
   def route(
       df: DataFrame,
@@ -76,12 +80,14 @@ object Router {
   ): DataFrame = {
     require(rules.nonEmpty, "router needs at least one rule")
     val sorted = rules.sortBy(_.priority) // TODO in reference (router.hpp:44)
-    val branches = sorted.map { r =>
-      df.filter(matchExpr(r, col(propsCol)))
-        .withColumn(subjectCol, lit(r.subject))
-        .withColumn("destination", lit(r.destination))
-    }
-    branches.reduce(_ unionAll _)
+    val routes = array(sorted.map { r =>
+      when(matchExpr(r, col(propsCol)), struct(lit(r.subject).as("subject"), lit(r.destination).as("destination")))
+    }: _*)
+    df.withColumn("__route", explode(routes))
+      .filter(col("__route").isNotNull)
+      .withColumn(subjectCol, col("__route.subject"))
+      .withColumn("destination", col("__route.destination"))
+      .drop("__route")
   }
 
   /** Drop accounting: rows matched by NO rule (the zero-copy fan-out case —

@@ -52,20 +52,14 @@ object GraftCheckpoint {
     * `UnionBase.rewriteConstraints` (`key not found: src#N`). Capturing
     * with propagation off stores no constraints at all — pure optimizer
     * metadata, results unaffected — and every downstream plan over the
-    * pinned blocks stays well-formed. The previous conf value is
-    * restored on exit either way.
+    * pinned blocks stays well-formed. The switch is confined to the
+    * pinning thread ([[org.apache.spark.sql.graftbridge.Bridge.withThreadConf]]):
+    * the session conf is never written, so a query planned concurrently
+    * on another thread (a sibling fan-out sink, say) keeps propagation on.
     */
-  def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpPrev = spark.conf.getOption(cpKey)
-    spark.conf.set(cpKey, "false")
-    try pinInner(df)
-    finally cpPrev match {
-      case Some(v) => spark.conf.set(cpKey, v)
-      case None => spark.conf.unset(cpKey)
-    }
-  }
+  def pin(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge
+      .withThreadConf(df.sparkSession, "spark.sql.constraintPropagation.enabled", "false")(pinInner(df))
 
   private def pinInner(df: DataFrame): DataFrame = {
     val spark = df.sparkSession

@@ -43,7 +43,7 @@ object GraftService {
     * rows whose `field` content was already accepted in ANY previous
     * epoch drop against the digest store ([[graft.streaming.StreamDedup]]
     * — scanned once per epoch, never shuffled, replay-idempotent), and
-    * within-batch copies collapse to one arbitrary representative (rows
+    * within-batch copies collapse to the first in batch order (rows
     * identical in `field` are interchangeable for a content sink). This
     * is the LLM-pipeline ingestion gate made config-driven: a YAML-only
     * operator can point any sink at a store path and get
@@ -241,17 +241,18 @@ object GraftService {
   /** Wrap an epoch-aware sink with [[DedupConf]]'s cross-batch content
     * dedup: binary `field`s digest via their hex form (total + injective
     * — a lossy binary→string cast could alias distinct payloads), other
-    * types via their string form; within-batch copies collapse FIRST,
-    * ON THE DIGEST (`dropDuplicates(__graft_dedup_id)` — the digest is
-    * [[graft.operators.TextOps.fingerprintMd5]], whitespace/case-
-    * normalized for strings, so two same-batch payloads that differ
-    * only in normalization collapse HERE exactly as they would across
-    * epochs — one exactly-once-by-content contract on both sides of the
-    * batch boundary, and post-collapse the digest is a unique row id,
-    * which is what [[graft.streaming.StreamDedup.dedupBatch]]'s
-    * keep-smallest rule needs), then the store decides cross-epoch
-    * survival. Store semantics (overwrite-by-epoch, replay-idempotent)
-    * are StreamDedup's verbatim.
+    * types via their string form, and the store decides survival across
+    * epochs AND within the batch: every row gets a unique id
+    * (`monotonically_increasing_id`, fixed once in
+    * [[graft.streaming.StreamDedup.dedupBatch]]'s cached rows), so that
+    * method's keep-smallest-id rule collapses same-batch copies — on the
+    * digest, which is [[graft.operators.TextOps.fingerprintMd5]],
+    * whitespace/case-normalized for strings, so two same-batch payloads
+    * that differ only in normalization collapse exactly as they would
+    * across epochs (one exactly-once-by-content contract on both sides of
+    * the batch boundary) — to the first copy in batch order, without a
+    * shuffle. Store semantics (overwrite-by-epoch, replay-idempotent) are
+    * StreamDedup's verbatim.
     */
   private[graft] def wrapDedup(
       d: DedupConf,
@@ -262,11 +263,8 @@ object GraftService {
       if (batch.schema(d.field).dataType == org.apache.spark.sql.types.BinaryType)
         hex(col(d.field))
       else col(d.field).cast("string")
-    val uniq = batch
-      .withColumn("__graft_dedup_id", graft.operators.TextOps.fingerprintMd5(fpSrc))
-      .dropDuplicates("__graft_dedup_id")
     graft.streaming.StreamDedup.dedupBatch(
-      uniq,
+      batch.withColumn("__graft_dedup_id", monotonically_increasing_id()),
       fpSrc,
       col("__graft_dedup_id"),
       d.store,

@@ -4,7 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.Dedup
+import scala.jdk.CollectionConverters._
+
+import graft.functions.sketch
+import graft.operators.{Dedup, TextOps}
 
 /** Streaming twin of [[graft.operators.Dedup.incremental]]: a
   * `foreachBatch` combinator that dedupes every micro-batch against the
@@ -21,13 +24,19 @@ import graft.operators.Dedup
   *      on the `epoch` directory column, with the declared
   *      [[StoreSchema]] — no footer read; a missing or empty store reads
   *      as empty — see idempotency below);
-  *   2. [[graft.operators.Dedup.incrementalProbeOnDigests]] against it —
-  *      the store is scanned ONCE (a semi-join against the broadcast batch
-  *      digests) and NEVER shuffled, and within-batch copies collapse to
-  *      their smallest id;
-  *   3. overwrite `<store>/epoch=<n>` with the survivors' digests, counting
-  *      them on the write's own job;
-  *   4. pass the surviving ROWS (original batch schema) to `accept`.
+  *   2. cache the batch rows with their digest and id, and decide the
+  *      survivors with [[graft.operators.Dedup.incrementalOnDriver]]: one
+  *      collect of (digest, id) — which fills that cache — then the store
+  *      scanned ONCE, filtered by a broadcast set of the batch digests, and
+  *      NEVER shuffled; the driver keeps the smallest id per new digest, so
+  *      within-batch copies collapse without a shuffle;
+  *   3. overwrite `<store>/epoch=<n>` with the survivors' digests, written
+  *      from a local relation (one job; the count is known on the driver);
+  *   4. pass the surviving ROWS (original batch schema) to `accept`: the
+  *      cached rows filtered by a broadcast set of the survivor ids, so the
+  *      batch is not read again and no join runs.
+  *
+  * A warm epoch costs 3 jobs before `accept`'s own.
   *
   * Exactly-once on the STORE, at-least-once on `accept`: Spark replays a
   * failed micro-batch under the SAME epoch id (the documented
@@ -44,12 +53,17 @@ import graft.operators.Dedup
   * 100 TB shape: the store holds digests only (32 bytes per accepted doc
   * ever) and is scanned once per epoch, never shuffled. What moves is
   * sized by the BATCH, not by the store: the batch digests broadcast to
-  * the scan, and the store digests they hit broadcast back. A batch with
-  * more distinct digests than
-  * [[graft.operators.Dedup.incrementalProbeOnDigests]]'s broadcast guard
-  * allows degrades to the plain anti-join rather than an unbounded driver
-  * broadcast. No per-epoch sketch is built, so nothing has to be sized
-  * for the store's growth.
+  * the scan, and the store digests they hit come back to the driver. The
+  * driver holds at most [[graft.operators.Dedup.incrementalOnDriver]]'s
+  * broadcast guard of 2 M (digest, id) pairs — a few hundred MB of JVM
+  * objects at the bound — plus the broadcast sets of batch digests
+  * (~64 MB serialized at the bound) and survivor ids. A batch with more
+  * rows than the guard is
+  * aggregated per digest on the executors first; one with more distinct
+  * digests than the guard degrades to the plain anti-join (which
+  * shuffles the store) rather than an unbounded driver footprint. No
+  * per-epoch sketch is built, so nothing has to be sized for the store's
+  * growth.
   *
   * Reference parity: the C++ service has no cross-batch dedup stage —
   * this is part of the LLM-pipeline surface (SURVEY §2.5.1) married to
@@ -65,6 +79,10 @@ object StreamDedup {
   val StoreSchema: StructType = StructType(
     Seq(StructField("fp", StringType), StructField("epoch", LongType))
   )
+
+  /** The digest and id columns [[dedupBatch]] adds to the cached batch rows. */
+  private val FpCol = "__graft_fp"
+  private val IdCol = "__graft_id"
 
   /** One micro-batch of the recipe above, callable directly (and from
     * tests) — [[dedupSink]] is this per epoch. Returns the number of
@@ -92,28 +110,43 @@ object StreamDedup {
         spark.read.schema(StoreSchema).option("basePath", digestStore).parquet(digestStore)
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
     val refFp = stored.filter(col("epoch") < epoch).select(col("fp"))
-    val survivors = Dedup.incrementalProbeOnDigests(batch, text, idCol, refFp).persist()
+    val epochDir = s"$digestStore/epoch=$epoch"
+    // the batch rows with their digest and id, cached: the decision's first
+    // job fills the cache and the delivered rows are read back from it
+    val rows = batch.select(col("*"), TextOps.fingerprintMd5(text).as(FpCol), idCol.as(IdCol)).persist()
     try {
       // store first (idempotent overwrite), then delivery: a crash between
       // the two replays the epoch, re-derives the same survivors (the
       // epoch's own partition is excluded above) and re-accepts
-      val written = Observation()
-      survivors
-        .select(col("fp"))
-        .observe(written, count(lit(1)).as("rows"))
-        .write
-        .mode("overwrite")
-        .parquet(s"$digestStore/epoch=$epoch")
-      val kept = batch.join(
-        survivors.select(col("keep_id")),
-        idCol === col("keep_id"),
-        "left_semi"
-      )
-      val n = written.get("rows").asInstanceOf[Long]
-      accept(kept, epoch)
-      n
+      Dedup.incrementalOnDriver(rows, col(FpCol), col(IdCol), refFp) match {
+        case Some(survivors) =>
+          spark
+            .createDataFrame(survivors.map(s => Row(s._1)).asJava, StructType(Seq(StoreSchema("fp"))))
+            .coalesce(1)
+            .write
+            .mode("overwrite")
+            .parquet(epochDir)
+          val ids = sketch.broadcastSet(spark, rows.schema(IdCol).dataType, survivors.map(_._2))
+          try accept(rows.filter(sketch.in_broadcast_set(ids, col(IdCol))).drop(FpCol, IdCol), epoch)
+          finally ids.destroy()
+          survivors.size.toLong
+        case None =>
+          // past the broadcast guard: the plain anti-join, which shuffles
+          // the store
+          val survivors = Dedup.incrementalOnDigests(rows, text, col(IdCol), refFp).persist()
+          try {
+            val written = Observation()
+            survivors.select(col("fp")).observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(epochDir)
+            val kept = rows.join(survivors.select(col("keep_id")), col(IdCol) === col("keep_id"), "left_semi")
+            accept(kept.drop(FpCol, IdCol), epoch)
+            written.get("rows").asInstanceOf[Long]
+          } finally {
+            survivors.unpersist()
+            ()
+          }
+      }
     } finally {
-      survivors.unpersist()
+      rows.unpersist()
       ()
     }
   }

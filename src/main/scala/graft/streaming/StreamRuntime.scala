@@ -163,9 +163,8 @@ object StreamRuntime {
   }
 
   /** O-7 — broadcast fan-out: ONE streaming query, each micro-batch
-    * persisted once and written to every attached named sink
-    * (cache::send semantics, cache.hpp:65-76: overall success = AND —
-    * here, any sink failure fails the epoch and Spark retries it).
+    * persisted once and written to every attached named sink — see
+    * [[fanOutSinkWithEpoch]].
     */
   def fanOutSink(
       df: DataFrame,
@@ -178,6 +177,16 @@ object StreamRuntime {
     * exactly-once (a replayed batch re-arrives under the SAME id, so the
     * sink can overwrite instead of append — Spark's documented
     * foreachBatch contract).
+    *
+    * The sinks run CONCURRENTLY on the persisted batch, as `cache::send`
+    * hands a message to every attached northbound and AND-combines their
+    * success (cache.hpp:65-76): every sink is attempted, and the epoch
+    * fails — Spark retries it — with the first failure in sink order,
+    * the others attached as suppressed. The batch is still computed once:
+    * concurrent readers of a cached partition wait on its block lock.
+    * Each sink after the first runs on a short-lived thread started from
+    * the `foreachBatch` thread, so it inherits that thread's Spark local
+    * properties (job group, streaming batch id) and active session.
     */
   def fanOutSinkWithEpoch(
       df: DataFrame,
@@ -185,9 +194,40 @@ object StreamRuntime {
   ): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
       batch.persist()
-      try sinks.values.foreach(write => write(batch, epoch))
+      try runAll(sinks.values.toSeq.map(write => () => write(batch, epoch)))
       finally { batch.unpersist(); () }
     }
+
+  /** Run `tasks` concurrently — the first on the calling thread, each
+    * other on a thread started from it — wait for all of them, then
+    * rethrow the first failure in `tasks` order with the rest suppressed.
+    */
+  private def runAll(tasks: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](tasks.size)
+    def attempt(i: Int): Unit =
+      try tasks(i)()
+      catch { case t: Throwable => failures(i) = t }
+    val threads = tasks.indices.drop(1).map { i =>
+      val t = new Thread(() => attempt(i), s"graft-fanout-sink-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    try {
+      if (tasks.nonEmpty) attempt(0)
+      threads.foreach(_.join())
+    } catch {
+      case e: InterruptedException =>
+        threads.foreach(_.interrupt())
+        throw e
+    }
+    failures.filter(_ != null).toList match {
+      case first :: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case Nil => ()
+    }
+  }
 
   /** O-15 — streaming throughput: watermarked 1 s tumbling counts.
     * Same aggregation as the batch twin [[graft.operators.Pipeline.throughput]].

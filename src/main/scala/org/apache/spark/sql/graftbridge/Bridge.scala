@@ -27,6 +27,19 @@ object Bridge {
       plan
     )
 
+  /** Run `f` with SQL conf `key` set to `value` for the CALLING THREAD
+    * only: a clone of the session's conf becomes this thread's
+    * `SQLConf.get` (which consults the thread's existing conf before the
+    * active session's), so planning on this thread sees `value` while
+    * every other thread — and `spark.conf` — keeps the session's setting.
+    * Threads started inside `f` and executor tasks do not inherit it.
+    */
+  def withThreadConf[T](spark: org.apache.spark.sql.SparkSession, key: String, value: String)(f: => T): T = {
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf.clone()
+    conf.setConfString(key, value)
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(conf)(f)
+  }
+
   /** The analyzed logical plan of a DataFrame (`queryExecution` is
     * classic-API surface in Spark 4).
     */

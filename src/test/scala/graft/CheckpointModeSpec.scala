@@ -98,4 +98,37 @@ class CheckpointModeSpec extends SparkTestBase {
       assert(got.size == 100 && got.values.forall(_ == 0L), s"wrong components after block loss")
     }
   }
+
+  test("pin turns constraint propagation off for its own thread only") {
+    val key = "spark.sql.constraintPropagation.enabled"
+    val sawOff = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var pinning = true
+    // a concurrent reader: the session conf and its own thread's SQL conf
+    val reader = new Thread(() => {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      while (pinning) {
+        if (spark.conf.get(key) != "true" || !org.apache.spark.sql.internal.SQLConf.get.constraintPropagationEnabled)
+          sawOff.incrementAndGet()
+        reads.incrementAndGet()
+      }
+    })
+    reader.start()
+    try {
+      // round-N union plans over pinned frames: the shape that crashes when
+      // a pin freezes constraints (see GraftCheckpoint.pin)
+      var df = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+      (1 to 8).foreach { _ =>
+        df = GraftCheckpoint.pin(
+          df.union(df.select(col("dst").as("src"), (col("dst") + 1L).as("dst"))).distinct())
+      }
+      assert(df.count() == 10L)
+    } finally {
+      pinning = false
+      reader.join()
+    }
+    assert(reads.get() > 0)
+    assert(sawOff.get() == 0, s"a concurrent reader saw propagation off ${sawOff.get()} times")
+    assert(spark.conf.get(key) == "true")
+  }
 }

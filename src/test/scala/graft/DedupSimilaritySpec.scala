@@ -147,7 +147,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(!plan.contains("SortMergeJoin"), s"reference side got shuffle-joined:\n$plan")
   }
 
-  test("incrementalProbeOnDigests: one store scan, no sketch, Bloom-path survivors; past the guard the plain anti-join") {
+  test("incrementalOnDriver: Bloom-path survivors from one unshuffled store scan; past the guard, None") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft-probe").toString + "/digests"
     Seq("seen a", "seen b", "seen c").toDF("text")
@@ -160,31 +160,49 @@ class DedupSimilaritySpec extends SparkTestBase {
       (1L, "fresh x"), (2L, "seen a"), (3L, "fresh x"), (4L, "Seen  B"),
       (5L, "fresh y"), (6L, "fresh y"), (7L, "fresh z")
     ).toDF("doc_id", "text")
-    def rows(out: org.apache.spark.sql.DataFrame) =
-      out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val bloom = rows(Dedup.incrementalBloomOnDigests(batch, col("text"), col("doc_id"), refFp))
+    val bloom = Dedup.incrementalBloomOnDigests(batch, col("text"), col("doc_id"), refFp)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(bloom.map(r => (r._2, r._3)) == Set((1L, 2L), (5L, 2L), (7L, 1L)))
+    /** The decision at `bound`, with the executed plan of every query it ran. */
     def run(bound: Long) = {
-      val out = Dedup.incrementalProbeOnDigests(batch, col("text"), col("doc_id"), refFp, bound)
-      val got = rows(out)
-      (out.queryExecution.executedPlan, got)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
+          plans.add(qe.executedPlan); ()
+        }
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val out =
+        try Dedup.incrementalOnDriver(batch, graft.operators.TextOps.fingerprintMd5(col("text")), col("doc_id"), refFp, bound)
+        finally {
+          org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+          spark.listenerManager.unregister(listener)
+        }
+      (plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq,
+        out.map(_.map { case (d, id) => (d, id.asInstanceOf[Long]) }.toSet))
     }
     // within the row bound (7 <= 10), and past it with few distinct digests
-    // (7 > 5 >= 5): one probe, the store scanned once and never shuffled
+    // (7 > 5 >= 5, aggregated on the executors first): the store scanned
+    // once over all the queries, never shuffled, no sketch
     for (bound <- Seq(10L, 5L)) {
-      val (plan, got) = run(bound)
-      assert(got == bloom, s"bound $bound")
-      assert(scansUnder(plan, store).size == 1, s"bound $bound: store not scanned exactly once:\n$plan")
-      assert(!shufflesScanUnder(plan, store), s"bound $bound: store rows shuffled:\n$plan")
-      val ops = planNodes(plan).map(_.simpleString(Int.MaxValue)).mkString("\n")
+      val (plans, got) = run(bound)
+      assert(got.contains(bloom.map(r => (r._1, r._2))), s"bound $bound")
+      val scans = plans.flatMap(scansUnder(_, store))
+      assert(scans.size == 1, s"bound $bound: store scanned ${scans.size} times:\n${plans.mkString("\n")}")
+      assert(!plans.exists(shufflesScanUnder(_, store)), s"bound $bound: store rows shuffled:\n${plans.mkString("\n")}")
+      val ops = plans.flatMap(planNodes(_)).map(_.simpleString(Int.MaxValue)).mkString("\n")
       Seq("might_contain", "bloom_filter_agg", "SortMergeJoin").foreach { op =>
-        assert(!ops.contains(op), s"bound $bound: $op in the probe plan:\n$ops")
+        assert(!ops.contains(op), s"bound $bound: $op in the decision's plans:\n$ops")
       }
     }
-    // 5 distinct digests > bound 2: the plain anti-join, which shuffles the store
-    val (plainPlan, plain) = run(2L)
-    assert(plain == bloom)
-    assert(shufflesScanUnder(plainPlan, store), s"guard did not fall back:\n$plainPlan")
+    // 5 distinct digests > bound 2: no decision, the caller anti-joins
+    assert(run(2L)._2.isEmpty)
+    // string ids: the smallest copy's id wins
+    val byString = Dedup.incrementalOnDriver(
+      Seq(("b", "dup"), ("a", "dup"), ("c", "dup")).toDF("id", "text"),
+      graft.operators.TextOps.fingerprintMd5(col("text")), col("id"), refFp)
+    assert(byString.map(_.map(_._2)).contains(Seq("a")))
   }
 
   test("quantizeInt8: bounds, zero vector, dequantization error within scale/2") {

@@ -67,4 +67,27 @@ class RouterSpec extends SparkTestBase {
     val a = Router.route(msgs(Map("type" -> "x")), shuffled).select(col("subject")).collect().map(_.getString(0)).toSeq
     assert(a == Seq("dev-test"))
   }
+
+  test("route scans its input once however many rules match (the service's 3 rules over parquet)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-route-scan").toString + "/frames"
+    Seq(
+      (1L, Map("type" -> "heartbeat")), (2L, Map("type" -> "dyn_message")), (3L, Map.empty[String, String])
+    ).toDF("id", "properties").withColumn("subject", lit("in")).write.parquet(dir)
+    val yaml = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("perfbench/service.yaml")), "UTF-8")
+      .replace("${PORT}", "0").replace("${STORE}", "/unused")
+    val rules = graft.runtime.GraftService.parseConfig(yaml).rules
+    assert(rules.size == 3)
+    val routed = Router.route(spark.read.parquet(dir), rules)
+    val plan = routed.queryExecution.executedPlan
+    val scans = planNodes(plan).filter(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+    assert(scans.size == 1, s"expected one scan, planned ${scans.size}:\n$plan")
+    // the same multiset as one filtered copy per matching rule
+    val got = routed.select(col("id"), col("subject"), col("destination")).as[(Long, String, String)].collect().sorted.toSeq
+    assert(got == Seq(
+      (1L, "all", "audit-nb"), (1L, "heartbeats", "kafka-nb"),
+      (2L, "all", "audit-nb"), (2L, "graft-events", "kafka-nb"),
+      (3L, "all", "audit-nb")
+    ))
+  }
 }

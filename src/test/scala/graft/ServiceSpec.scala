@@ -2,6 +2,8 @@ package graft
 
 import java.net.{ServerSocket, Socket}
 
+import scala.jdk.CollectionConverters._
+
 import graft.model.Telemetry._
 import graft.runtime.{GraftService, YamlLite}
 
@@ -635,6 +637,106 @@ class ServiceSpec extends SparkTestBase {
       }
       assert(missing.isEmpty, s"dashboard metrics absent from live scrape: $missing")
     } finally daemon.stop()
+  }
+
+  test("wrapDedup: whitespace/case variants in one batch deliver one row; a replayed epoch delivers the same one") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("svc-dedup-norm").toString + "/digests"
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    val sink = GraftService.wrapDedup(
+      GraftService.DedupConf(store),
+      (batch, epoch) => got.synchronized { got ++= batch.as[String].collect().map(epoch -> _); () }
+    )
+    // five spellings of one content over several partitions, plus one other
+    val batch = Seq("Hello  World", "hello world", " HELLO WORLD", "other", "Hello World\t", "hello   WORLD")
+      .toDF("payload")
+    sink(batch, 0L)
+    val first = got.filter(_._1 == 0L).map(_._2)
+    assert(first.size == 2 && first.contains("other"), s"one row per content: $first")
+    sink(batch, 0L)
+    assert(got.filter(_._1 == 0L).map(_._2).sorted == (first ++ first).sorted, s"replay diverged: $got")
+    sink(Seq("HELLO world", "new").toDF("payload"), 1L)
+    assert(got.filter(_._1 == 1L).map(_._2) == Seq("new"), s"cross-epoch variant re-delivered: $got")
+  }
+
+  test("service job budget of a warm delivered epoch: a plain and a dedup'd collecting sink") {
+    val port = { val s = new ServerSocket(0); try s.getLocalPort finally s.close() }
+    val store = java.nio.file.Files.createTempDirectory("svc-budget").toString + "/digests"
+    val cfg = GraftService.parseConfig(
+      s"""topic: dev-test
+         |interfaces:
+         |  southbound:
+         |    type: tcp
+         |    port: $port
+         |  northbound:
+         |    - name: main-nb
+         |      type: memory
+         |    - name: audit-nb
+         |      type: memory
+         |      dedup:
+         |        store: $store
+         |rules:
+         |  - name: dyn
+         |    priority: 1
+         |    condition: {field: type, value: dyn_message, matcher: exact}
+         |    action: allow
+         |    destination: main-nb
+         |    subject: events
+         |  - name: mirror
+         |    priority: 2
+         |    condition: {field: '*', value: '*'}
+         |    action: allow
+         |    destination: audit-nb
+         |    subject: all
+         |""".stripMargin
+    )
+    val rows = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Integer]()
+    @volatile var runId = ""
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .filter(p => p.getProperty("spark.jobGroup.id") == runId)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach { b => jobs.merge(b.toLong, 1, (x: Integer, y: Integer) => x + y); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = GraftService.startBatches(
+      spark,
+      cfg,
+      nb => (batch, _) => { rows.merge(nb.name, batch.collect().length.toLong, (x: java.lang.Long, y: java.lang.Long) => x + y); () }
+    )
+    runId = q.runId.toString
+    try {
+      Thread.sleep(300)
+      // 4 rounds of 400 frames over 300 payloads, half of each round's
+      // payloads seen in the round before
+      (0 until 4).foreach { round =>
+        val sock = new Socket("127.0.0.1", port)
+        sock.getOutputStream.write((0 until 400).flatMap { i =>
+          encodeFrame(TypeDynMessage, s"frame ${i % 300 + round * 150}".getBytes("UTF-8")).toSeq
+        }.toArray)
+        sock.close()
+        val deadline = System.currentTimeMillis() + 30000
+        while (rows.getOrDefault("main-nb", 0L) < 400L * (round + 1) && System.currentTimeMillis() < deadline) {
+          q.processAllAvailable()
+          Thread.sleep(50)
+        }
+        assert(rows.getOrDefault("main-nb", 0L) == 400L * (round + 1), s"round $round: $rows")
+      }
+      q.processAllAvailable()
+      // every payload delivered once at the dedup'd sink
+      assert(rows.get("audit-nb") == 300L + 3 * 150L, s"$rows")
+    } finally {
+      q.stop()
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val perBatch = jobs.asScala.toSeq.sortBy(_._1).map(_._2.intValue)
+    info(s"jobs per delivered micro-batch: ${perBatch.mkString(", ")}")
+    assert(perBatch.size >= 2, s"expected several delivered batches: $perBatch")
+    // warm: every batch after the first
+    assert(perBatch.tail.max <= 5, s"a warm delivered epoch fired ${perBatch.tail.max} jobs (budget 5): $perBatch")
   }
 
   test("service lifecycle: config → TCP ingress → router → per-destination fan-out") {

@@ -118,7 +118,7 @@ class StreamingSpec extends SparkTestBase {
       "epoch-2 replay read the abandoned epoch 3")
   }
 
-  test("StreamDedup: the store write scans the store once, builds no sketch, never shuffles the store") {
+  test("StreamDedup: a warm epoch scans the store once, builds no sketch, never shuffles the store") {
     import graft.streaming.StreamDedup
     val store = java.nio.file.Files.createTempDirectory("graft-one-scan").toString + "/digests"
     def dedup(epoch: Long, docs: (Long, String)*): Long =
@@ -142,15 +142,18 @@ class StreamingSpec extends SparkTestBase {
         spark.listenerManager.unregister(listener)
       }
     assert(kept == 1L)
-    val writes = plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq.filter(p =>
+    // every query of the epoch: the store write among them, and the store
+    // scanned once over all of them
+    val all = plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq
+    val writes = all.filter(p =>
       planNodes(p).exists(_.isInstanceOf[org.apache.spark.sql.execution.command.DataWritingCommandExec]))
     assert(writes.size == 1, s"expected one store write, saw ${writes.size}")
-    val plan = writes.head
-    assert(scansUnder(plan, store).size == 1, s"store not scanned exactly once:\n$plan")
-    assert(!shufflesScanUnder(plan, store), s"store rows shuffled:\n$plan")
-    val ops = planNodes(plan).map(_.simpleString(Int.MaxValue)).mkString("\n")
+    val scans = all.flatMap(scansUnder(_, store))
+    assert(scans.size == 1, s"store scanned ${scans.size} times over the epoch:\n${all.mkString("\n")}")
+    assert(!all.exists(shufflesScanUnder(_, store)), s"store rows shuffled:\n${all.mkString("\n")}")
+    val ops = all.flatMap(planNodes(_)).map(_.simpleString(Int.MaxValue)).mkString("\n")
     Seq("might_contain", "bloom_filter_agg", "SortMergeJoin").foreach { op =>
-      assert(!ops.contains(op), s"$op in the store write:\n$ops")
+      assert(!ops.contains(op), s"$op in the epoch's queries:\n$ops")
     }
   }
 
@@ -191,7 +194,7 @@ class StreamingSpec extends SparkTestBase {
     var kept = -1L
     val dedupJobs = jobsOf { kept = dedup(3L) }
     assert(kept == 0L, s"a warm epoch of re-ingests kept $kept docs")
-    assert(dedupJobs <= 6, s"warm dedupBatch fired $dedupJobs jobs (budget 6)")
+    assert(dedupJobs <= 3, s"warm dedupBatch fired $dedupJobs jobs (budget 3)")
     var enriched = -1L
     val enrichJobs = jobsOf { enriched = enrich(3L) }
     assert(enriched == 1500L, s"warm enrichBatch enriched $enriched rows")
@@ -210,7 +213,7 @@ class StreamingSpec extends SparkTestBase {
     val jobs = jobsOf(sink(frames(3L), 3L))
     val accepted = spark.read.parquet(s"$store/epoch=3").count()
     assert(accepted == 750L, s"a warm epoch accepted $accepted payloads")
-    assert(jobs <= 7, s"warm wrapDedup fired $jobs jobs (budget 7)")
+    assert(jobs <= 3, s"warm wrapDedup fired $jobs jobs (budget 3)")
     info(s"warm wrapDedup epoch jobs: $jobs")
   }
 
@@ -528,6 +531,80 @@ class StreamingSpec extends SparkTestBase {
     q.processAllAvailable()
     q.stop()
     assert(sunk("main-nb") == 3 && sunk("log-nb") == 3)
+  }
+
+  /** Run `sinks` (in order) as one fan-out query over `rows` longs; the
+    * query's error, if it failed, and its run id.
+    */
+  private def fanOut(rows: Seq[Long], sinks: (String, org.apache.spark.sql.DataFrame => Unit)*)
+      : (Option[Throwable], String) = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Long]
+    input.addData(rows: _*)
+    val q = StreamRuntime.fanOutSink(input.toDF().toDF("v"), scala.collection.immutable.ListMap(sinks: _*)).start()
+    val err =
+      try { q.processAllAvailable(); None }
+      catch { case e: org.apache.spark.sql.streaming.StreamingQueryException => Some(e) }
+      finally q.stop()
+    (err, q.runId.toString)
+  }
+
+  test("fan-out: when the first of 3 sinks throws, the other two still get the batch and the epoch fails with it") {
+    val sunk = scala.collection.concurrent.TrieMap.empty[String, Long]
+    val (err, _) = fanOut(
+      1L to 100L,
+      "first" -> (_ => throw new IllegalStateException("first sink down")),
+      "second" -> (b => { sunk.put("second", b.count()); () }),
+      "third" -> (b => { sunk.put("third", b.count()); () })
+    )
+    assert(sunk == Map("second" -> 100L, "third" -> 100L), s"sinks after the failing one: $sunk")
+    val causes = Iterator.iterate(err.orNull: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] && c.getMessage == "first sink down"),
+      s"the query must fail with the first sink's error: ${causes.mkString(" <- ")}")
+  }
+
+  test("fan-out: the batch is computed once however many sinks read it concurrently") {
+    val acc = spark.sparkContext.longAccumulator("fan-out upstream rows")
+    val counting = udf((v: Long) => { acc.add(1L); v }).asNondeterministic()
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Long]
+    input.addData(1L to 4000L: _*)
+    val upstream = input.toDF().repartition(8).select(counting(col("value")).as("v"))
+    val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
+    val sinks = scala.collection.immutable.ListMap((1 to 3).map { i =>
+      s"sink-$i" -> ((b: org.apache.spark.sql.DataFrame) => { counts.put(s"sink-$i", b.count()); () })
+    }: _*)
+    val q = StreamRuntime.fanOutSink(upstream, sinks).start()
+    try q.processAllAvailable()
+    finally q.stop()
+    assert(counts.values.toSet == Set(4000L) && counts.size == 3, s"$counts")
+    assert(acc.value == 4000L, s"upstream rows evaluated ${acc.value} times for 4000 rows")
+  }
+
+  test("fan-out: every sink's jobs carry the caller's job group") {
+    val groups = scala.collection.concurrent.TrieMap.empty[String, Set[String]]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("graft.test.sink"))).foreach { sink =>
+          groups.updateWith(sink)(g => Some(g.getOrElse(Set.empty) + js.properties.getProperty("spark.jobGroup.id")))
+          ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def tagged(name: String): org.apache.spark.sql.DataFrame => Unit = b => {
+      spark.sparkContext.setLocalProperty("graft.test.sink", name)
+      try { b.count(); () }
+      finally spark.sparkContext.setLocalProperty("graft.test.sink", null)
+    }
+    val (err, runId) =
+      try fanOut(1L to 10L, "a" -> tagged("a"), "b" -> tagged("b"), "c" -> tagged("c"))
+      finally {
+        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(err.isEmpty, s"$err")
+    // a streaming query runs its batches under its run id as the job group
+    assert(groups == Map("a" -> Set(runId), "b" -> Set(runId), "c" -> Set(runId)), s"$groups")
   }
 
   test("streaming dedup: dropDuplicatesWithinWatermark bounds state") {
