@@ -167,12 +167,12 @@ object sketch {
     ): InBroadcastSet = copy(child = c)
   }
 
-  /** Broadcast `values` (external Scala/Java values of `dataType`, as
-    * `Row.get` returns them) as the Catalyst-internal set
-    * [[in_broadcast_set]] probes: a hash set for strings, integral, boolean
-    * and date/time values, an ordering-backed tree set otherwise (binary,
-    * decimals, floats, structs). Not an action:
-    * no job runs. `destroy()` it once the probing query has run.
+  /** Broadcast `values` (Catalyst-internal values of `dataType`, as an
+    * `InternalRow` holds them: `UTF8String`, boxed primitives, `Decimal`)
+    * as the set [[in_broadcast_set]] probes: a hash set for strings,
+    * integral, boolean and date/time values, an ordering-backed tree set
+    * otherwise (binary, decimals, floats, structs). Not an action: no job
+    * runs. `destroy()` it once the probing query has run.
     */
   def broadcastSet(
       spark: org.apache.spark.sql.SparkSession,
@@ -180,7 +180,6 @@ object sketch {
       values: Iterable[Any]
   ): org.apache.spark.broadcast.Broadcast[java.util.Set[Any]] = {
     import org.apache.spark.sql.types._
-    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dataType)
     val set: java.util.Set[Any] = dataType match {
       case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType | DateType | TimestampType |
           TimestampNTZType =>
@@ -188,7 +187,7 @@ object sketch {
       case _ => new java.util.TreeSet[Any](org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dataType))
     }
     // NULL never matches (the probe is null-intolerant), so it is not stored
-    values.foreach(v => if (v != null) set.add(toCatalyst(v)))
+    values.foreach(v => if (v != null) set.add(v))
     spark.sparkContext.broadcast(set)
   }
 

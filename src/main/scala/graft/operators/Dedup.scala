@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -225,15 +228,20 @@ object Dedup {
     * the batch holds more than `maxBroadcastCandidates` distinct digests —
     * the caller then takes the plain anti-join. `fp` is a
     * [[TextOps.fingerprintMd5]] digest column of `incoming`, `refDigests`
-    * a frame with an `fp` column of the same digests. The caller persists
-    * `incoming` when it reads it again (the first job below fills the
-    * cache).
+    * a frame with an `fp` column of the same digests. Digests and ids come
+    * back as Catalyst-internal values (`UTF8String`, and the id as an
+    * `InternalRow` holds it), ready for [[graft.functions.sketch.broadcastSet]]
+    * and for writing as binary rows. The caller caches `incoming` when it
+    * reads it again (the first job below fills the cache).
     *
     * Jobs: one collect of (`fp`, id), and one scan of the reference
     * filtered by membership in a broadcast set of the batch digests
     * (`present` — collected, never shuffled, no sketch; skipped for an
     * empty batch). Within-batch copies collapse to their smallest id on
-    * the driver, so nothing shuffles at all.
+    * the driver, so nothing shuffles at all. Nothing is converted to
+    * external values: each partition returns its (`fp`, id) rows as one
+    * array of `UnsafeRow` bytes, and the driver compares ids with the
+    * type's interpreted ordering.
     *
     * Broadcast guard, the same bound as [[incrementalBloom]]'s: the
     * collect takes a partition's rows only while it holds at most
@@ -249,50 +257,50 @@ object Dedup {
       idCol: Column,
       refDigests: DataFrame,
       maxBroadcastCandidates: Long = 2000000L
-  ): Option[Seq[(String, Any)]] = {
+  ): Option[Seq[(UTF8String, Any)]] = {
+    import org.apache.spark.sql.graftbridge.Bridge
     val pairs = incoming.select(fp.as("fp"), idCol.as("id"))
-    val parts = pairs.rdd.getNumPartitions.max(1)
+    val schema = pairs.schema
+    val rdd = Bridge.internalRows(pairs)
+    val parts = rdd.getNumPartitions.max(1)
     val perPart = ((maxBroadcastCandidates + parts - 1) / parts).min(Int.MaxValue - 1L).toInt
-    // null marks a partition past its share of the bound
-    val taken = pairs.rdd
+    // (rows, packed rows) per partition; null marks one past its share
+    val taken = rdd
       .mapPartitions { it =>
-        val rows = it.take(perPart + 1).toArray
-        Iterator.single(if (rows.length > perPart) null else rows)
+        var n = 0
+        val packed = Bridge.packRows(it.take(perPart + 1).map { r => n += 1; r }, schema)
+        Iterator.single(if (n > perPart) null else (n, packed))
       }
       .collect()
-    val rows: Option[Array[org.apache.spark.sql.Row]] =
-      if (taken.forall(_ != null) && taken.iterator.map(_.length.toLong).sum <= maxBroadcastCandidates)
-        Some(taken.flatten)
+    val rows: Option[Iterator[InternalRow]] =
+      if (taken.forall(_ != null) && taken.iterator.map(_._1.toLong).sum <= maxBroadcastCandidates)
+        Some(taken.iterator.flatMap(t => Bridge.unpackRows(t._2, schema.length)))
       else {
         val perFp = pairs.groupBy(col("fp")).agg(min(col("id")).as("id"))
-        if (perFp.count() > maxBroadcastCandidates) None else Some(perFp.collect())
+        if (perFp.count() > maxBroadcastCandidates) None else Some(Bridge.collectInternal(perFp).iterator)
       }
     rows.map { rs =>
-      val idType = pairs.schema("id").dataType
-      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(idType)
+      val idType = schema("id").dataType
       val order = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
-      val smallest = new java.util.HashMap[String, Any]()
+      val smallest = new java.util.HashMap[UTF8String, Any]()
       rs.foreach { r =>
-        val (d, id) = (r.getString(0), r.get(1))
+        val d = if (r.isNullAt(0)) null else r.getUTF8String(0)
+        val id = if (r.isNullAt(1)) null else r.get(1, idType)
         val cur = smallest.get(d)
-        if (!smallest.containsKey(d) || (id != null && (cur == null || order.lt(toCatalyst(id), toCatalyst(cur)))))
+        if (!smallest.containsKey(d) || (id != null && (cur == null || order.lt(id, cur))))
           smallest.put(d, id)
       }
       val digests = smallest.keySet.asScala.filter(_ != null)
-      val present =
-        if (digests.isEmpty) Set.empty[String]
-        else {
-          import graft.functions.sketch
-          val probe = sketch.broadcastSet(incoming.sparkSession, org.apache.spark.sql.types.StringType, digests)
-          try
-            refDigests
-              .filter(sketch.in_broadcast_set(probe, col("fp")))
-              .select(col("fp"))
-              .collect()
-              .map(_.getString(0))
-              .toSet
-          finally probe.destroy()
-        }
+      val present = new java.util.HashSet[UTF8String]()
+      if (digests.nonEmpty) {
+        import graft.functions.sketch
+        val probe = sketch.broadcastSet(incoming.sparkSession, StringType, digests)
+        try
+          Bridge
+            .collectInternal(refDigests.filter(sketch.in_broadcast_set(probe, col("fp"))).select(col("fp")))
+            .foreach(r => present.add(r.getUTF8String(0)))
+        finally probe.destroy()
+      }
       smallest.asScala.iterator.filter { case (d, _) => !present.contains(d) }.toVector
     }
   }

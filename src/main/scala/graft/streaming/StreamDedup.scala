@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-
-import scala.jdk.CollectionConverters._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.sketch
 import graft.operators.{Dedup, TextOps}
@@ -24,14 +25,19 @@ import graft.operators.{Dedup, TextOps}
   *      on the `epoch` directory column, with the declared
   *      [[StoreSchema]] — no footer read; a missing or empty store reads
   *      as empty — see idempotency below);
-  *   2. cache the batch rows with their digest and id, and decide the
+  *   2. cache the batch rows with their digest and id as binary rows
+  *      ([[org.apache.spark.sql.graftbridge.Bridge.cacheRows]]: no
+  *      column-batch encoding, no `CacheManager` entry), and decide the
   *      survivors with [[graft.operators.Dedup.incrementalOnDriver]]: one
-  *      collect of (digest, id) — which fills that cache — then the store
-  *      scanned ONCE, filtered by a broadcast set of the batch digests, and
-  *      NEVER shuffled; the driver keeps the smallest id per new digest, so
-  *      within-batch copies collapse without a shuffle;
+  *      collect of (digest, id) as packed `UnsafeRow` bytes — which fills
+  *      that cache — then the store scanned ONCE, filtered by a broadcast
+  *      set of the batch digests, and NEVER shuffled; the driver keeps the
+  *      smallest id per new digest on Catalyst-internal values, so
+  *      within-batch copies collapse without a shuffle or a conversion;
   *   3. overwrite `<store>/epoch=<n>` with the survivors' digests, written
-  *      from a local relation (one job; the count is known on the driver);
+  *      as one file from a single partition that carries them as one
+  *      packed array of binary rows (one job; the count is known on the
+  *      driver);
   *   4. pass the surviving ROWS (original batch schema) to `accept`: the
   *      cached rows filtered by a broadcast set of the survivor ids, so the
   *      batch is not read again and no join runs.
@@ -54,11 +60,15 @@ import graft.operators.{Dedup, TextOps}
   * ever) and is scanned once per epoch, never shuffled. What moves is
   * sized by the BATCH, not by the store: the batch digests broadcast to
   * the scan, and the store digests they hit come back to the driver. The
-  * driver holds at most [[graft.operators.Dedup.incrementalOnDriver]]'s
-  * broadcast guard of 2 M (digest, id) pairs — a few hundred MB of JVM
-  * objects at the bound — plus the broadcast sets of batch digests
-  * (~64 MB serialized at the bound) and survivor ids. A batch with more
-  * rows than the guard is
+  * driver decides within [[graft.operators.Dedup.incrementalOnDriver]]'s
+  * guard of 2 M (digest, id) pairs. By the row and object layouts, for
+  * md5 digests and long ids at the bound: the pairs arrive as 60 bytes
+  * each of packed rows (120 MB), the smallest-id map adds about 90 bytes
+  * per distinct digest (180 MB), and the set of batch digests (80 MB,
+  * ~70 MB more serialized for its broadcast) comes on top. When every
+  * digest is new, the survivors (56 MB), their packed digests (52 bytes
+  * each, 104 MB) and the survivor-id set (~100 MB) add the rest: about
+  * 0.7 GB at the bound. A batch with more rows than the guard is
   * aggregated per digest on the executors first; one with more distinct
   * digests than the guard degrades to the plain anti-join (which
   * shuffles the store) rather than an unbounded driver footprint. No
@@ -84,6 +94,11 @@ object StreamDedup {
   private val FpCol = "__graft_fp"
   private val IdCol = "__graft_id"
 
+  /** The driver guard [[dedupBatch]] decides within: at most this many
+    * distinct digests per batch (see [[graft.operators.Dedup.incrementalOnDriver]]).
+    */
+  private val DriverGuard = 2000000L
+
   /** One micro-batch of the recipe above, callable directly (and from
     * tests) — [[dedupSink]] is this per epoch. Returns the number of
     * surviving rows handed to `accept`. `expectedRefItems` and `fpp` are
@@ -99,6 +114,19 @@ object StreamDedup {
       accept: (DataFrame, Long) => Unit,
       expectedRefItems: Long = 4000000L,
       fpp: Double = 0.03
+  ): Long = dedupBatch(batch, text, idCol, digestStore, epoch, accept, guard = DriverGuard)
+
+  /** [[dedupBatch]] deciding on the driver within `guard` distinct digests
+    * instead of the 2 M default, so that specs reach the paths past it.
+    */
+  private[graft] def dedupBatch(
+      batch: DataFrame,
+      text: Column,
+      idCol: Column,
+      digestStore: String,
+      epoch: Long,
+      accept: (DataFrame, Long) => Unit,
+      guard: Long
   ): Long = {
     val spark = batch.sparkSession
     // the store before this epoch: partition-discovery read, pruned to
@@ -111,44 +139,55 @@ object StreamDedup {
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
     val refFp = stored.filter(col("epoch") < epoch).select(col("fp"))
     val epochDir = s"$digestStore/epoch=$epoch"
-    // the batch rows with their digest and id, cached: the decision's first
-    // job fills the cache and the delivered rows are read back from it
-    val rows = batch.select(col("*"), TextOps.fingerprintMd5(text).as(FpCol), idCol.as(IdCol)).persist()
+    // the batch rows with their digest and id, cached as binary rows: the
+    // decision's first job fills the cache and the delivered rows are read
+    // back from it
+    val (rows, release) =
+      Bridge.cacheRows(batch.select(col("*"), TextOps.fingerprintMd5(text).as(FpCol), idCol.as(IdCol)))
     try {
       // store first (idempotent overwrite), then delivery: a crash between
       // the two replays the epoch, re-derives the same survivors (the
       // epoch's own partition is excluded above) and re-accepts
-      Dedup.incrementalOnDriver(rows, col(FpCol), col(IdCol), refFp) match {
+      Dedup.incrementalOnDriver(rows, col(FpCol), col(IdCol), refFp, guard) match {
         case Some(survivors) =>
-          spark
-            .createDataFrame(survivors.map(s => Row(s._1)).asJava, StructType(Seq(StoreSchema("fp"))))
-            .coalesce(1)
-            .write
-            .mode("overwrite")
-            .parquet(epochDir)
+          writeDigests(spark, survivors.iterator.map(_._1), epochDir)
           val ids = sketch.broadcastSet(spark, rows.schema(IdCol).dataType, survivors.map(_._2))
           try accept(rows.filter(sketch.in_broadcast_set(ids, col(IdCol))).drop(FpCol, IdCol), epoch)
           finally ids.destroy()
           survivors.size.toLong
         case None =>
-          // past the broadcast guard: the plain anti-join, which shuffles
-          // the store
-          val survivors = Dedup.incrementalOnDigests(rows, text, col(IdCol), refFp).persist()
+          // past the driver guard: the plain anti-join, which shuffles the
+          // store
+          val (survivors, releaseSurvivors) = Bridge.cacheRows(Dedup.incrementalOnDigests(rows, text, col(IdCol), refFp))
           try {
             val written = Observation()
             survivors.select(col("fp")).observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(epochDir)
             val kept = rows.join(survivors.select(col("keep_id")), col(IdCol) === col("keep_id"), "left_semi")
             accept(kept.drop(FpCol, IdCol), epoch)
             written.get("rows").asInstanceOf[Long]
-          } finally {
-            survivors.unpersist()
-            ()
-          }
+          } finally releaseSurvivors()
       }
-    } finally {
-      rows.unpersist()
-      ()
-    }
+    } finally release()
+  }
+
+  /** Overwrite `dir` with `digests` as one parquet file, written from a
+    * single partition that carries them as one packed array of binary
+    * rows (no per-row conversion, no local relation to plan).
+    */
+  private def writeDigests(spark: SparkSession, digests: Iterator[UTF8String], dir: String): Unit = {
+    val schema = StructType(Seq(StoreSchema("fp")))
+    val writer = new UnsafeRowWriter(1)
+    val packed = Bridge.packRows(
+      digests.map { d =>
+        writer.reset()
+        writer.zeroOutNullBytes()
+        if (d == null) writer.setNullAt(0) else writer.write(0, d)
+        writer.getRow
+      },
+      schema
+    )
+    val rdd = spark.sparkContext.parallelize(Seq(packed), 1).flatMap(Bridge.unpackRows(_, 1))
+    Bridge.ofInternalRows(spark, rdd, schema).write.mode("overwrite").parquet(dir)
   }
 
   /** Wrap an epoch-aware sink with cross-batch exact dedup — attach via

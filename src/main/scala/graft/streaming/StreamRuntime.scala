@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.model.Message
@@ -163,7 +164,7 @@ object StreamRuntime {
   }
 
   /** O-7 — broadcast fan-out: ONE streaming query, each micro-batch
-    * persisted once and written to every attached named sink — see
+    * computed once and written to every attached named sink — see
     * [[fanOutSinkWithEpoch]].
     */
   def fanOutSink(
@@ -178,14 +179,25 @@ object StreamRuntime {
     * sink can overwrite instead of append — Spark's documented
     * foreachBatch contract).
     *
-    * The sinks run CONCURRENTLY on the persisted batch, as `cache::send`
+    * The batch is held as a row cache ([[org.apache.spark.sql.graftbridge.Bridge.cacheRows]]):
+    * its rows stay in Spark's binary row format, packed once into arrays
+    * of an RDD persisted MEMORY_AND_DISK, and released when the last sink
+    * returns.
+    * `cache::send` is "a simple proxy, it does not actually hold any data"
+    * (cache.hpp:65-76); the nearest Spark equivalent keeps the rows only
+    * for the batch's own sinks, without re-encoding them as compressed
+    * column batches and without an entry in the session's
+    * `CacheManager`, so no other query of the session can match it.
+    * Lineage stays, so a lost block is recomputed.
+    *
+    * The sinks run CONCURRENTLY on the cached batch, as `cache::send`
     * hands a message to every attached northbound and AND-combines their
-    * success (cache.hpp:65-76): every sink is attempted, and the epoch
-    * fails — Spark retries it — with the first failure in sink order,
-    * the others attached as suppressed. The batch is still computed once:
-    * concurrent readers of a cached partition wait on its block lock.
-    * Each sink after the first runs on a short-lived thread started from
-    * the `foreachBatch` thread, so it inherits that thread's Spark local
+    * success: every sink is attempted, and the epoch fails — Spark
+    * retries it — with the first failure in sink order, the others
+    * attached as suppressed. The batch is still computed once: concurrent
+    * readers of a cached partition wait on its block lock. Each sink
+    * after the first runs on a short-lived thread started from the
+    * `foreachBatch` thread, so it inherits that thread's Spark local
     * properties (job group, streaming batch id) and active session.
     */
   def fanOutSinkWithEpoch(
@@ -193,9 +205,9 @@ object StreamRuntime {
       sinks: Map[String, (DataFrame, Long) => Unit]
   ): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      batch.persist()
-      try runAll(sinks.values.toSeq.map(write => () => write(batch, epoch)))
-      finally { batch.unpersist(); () }
+      val (rows, release) = Bridge.cacheRows(batch)
+      try runAll(sinks.values.toSeq.map(write => () => write(rows, epoch)))
+      finally release()
     }
 
   /** Run `tasks` concurrently — the first on the calling thread, each

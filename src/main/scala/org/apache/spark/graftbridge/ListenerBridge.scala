@@ -2,11 +2,11 @@ package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
 
-/** Dev-tooling bridge: `SparkContext.listenerBus` is private[spark], but
-  * the profiling harness ([[graft.demo.ProfQ]]) must drain the async
-  * listener bus before reading its aggregates — a fixed sleep undercounts
-  * on a loaded box (r16 ADVICE). Lives under org.apache.spark for the
-  * access, same pattern as sql.graftbridge.Bridge.
+/** Listener-bus bridge: `SparkContext.listenerBus` is private[spark], but
+  * code that reads a listener's aggregates (the stream bench stage's jobs
+  * per epoch, the specs' job and plan counts) must first drain the async
+  * listener bus — a fixed sleep undercounts on a loaded box. Lives under
+  * org.apache.spark for the access, same pattern as sql.graftbridge.Bridge.
   */
 object ListenerBridge {
   /** Block until the listener bus has delivered every queued event, or

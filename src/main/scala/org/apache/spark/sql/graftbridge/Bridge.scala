@@ -1,8 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 
 /** Expression <-> Column bridge. Spark 4 made the Catalyst constructor of
   * `Column` private[sql] (columns now wrap `ColumnNode`s); extension
@@ -47,4 +53,89 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution
       .analyzed
+
+  private def classic(df: DataFrame): org.apache.spark.sql.classic.Dataset[Row] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+
+  /** A row cache's partitions are held as packed arrays of about this
+    * many bytes each.
+    */
+  private val CacheChunkBytes = 1 << 20
+
+  /** Cache `df` as binary rows and return the frame over them with the
+    * handle that releases them. Each partition's `UnsafeRow` bytes are
+    * packed into arrays of about 1 MB ([[packRows]]) in an RDD persisted
+    * MEMORY_AND_DISK, and read back as rows pointing into those arrays.
+    * Unlike `Dataset.persist()` the rows are not re-encoded as compressed
+    * column batches; unlike a cache of row objects, storing a partition
+    * costs no per-row allocation and no per-row size estimate. The cache
+    * never enters the session's `CacheManager`, so no other query of the
+    * session can match it. The first job that reads the frame fills the
+    * cache; lineage stays, so a lost block is recomputed rather than
+    * failing the job.
+    */
+  def cacheRows(df: DataFrame): (DataFrame, () => Unit) = {
+    val schema = df.schema
+    val chunks = classic(df).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.continually(rows).takeWhile(_.hasNext).map(packRows(_, schema, CacheChunkBytes)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = chunks.flatMap(unpackRows(_, schema.length))
+    (ofInternalRows(df.sparkSession, rows, schema), () => { chunks.unpersist(blocking = false); () })
+  }
+
+  /** A DataFrame over Catalyst-internal rows of `schema`. */
+  def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The Catalyst-internal rows of `df`, as its physical plan produces
+    * them (no conversion to external `Row`s). Not an action.
+    */
+  def internalRows(df: DataFrame): RDD[InternalRow] = classic(df).queryExecution.toRdd
+
+  /** Collect `df` as Catalyst-internal rows: `collect()` without the
+    * per-row conversion to external values, reported to the session's
+    * listeners as a `collect` query.
+    */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = classic(df).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** Pack `rows` (of `schema`) into one byte array: each row's length,
+    * then its `UnsafeRow` bytes. [[unpackRows]] reads it back without
+    * copying a row. Stops taking rows once the array holds `maxBytes`, so
+    * the rest of `rows` can go into the next one.
+    */
+  def packRows(rows: Iterator[InternalRow], schema: StructType, maxBytes: Int = Int.MaxValue): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream(maxBytes.min(1 << 16))
+    val out = new java.io.DataOutputStream(bytes)
+    val buffer = new Array[Byte](4096)
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    while (bytes.size < maxBytes && rows.hasNext) {
+      val u = rows.next() match {
+        case u: UnsafeRow => u
+        case other        => toUnsafe(other)
+      }
+      out.writeInt(u.getSizeInBytes)
+      u.writeToStream(out, buffer)
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  /** The rows of a [[packRows]] array, each an `UnsafeRow` of `numFields`
+    * pointing into `bytes`.
+    */
+  def unpackRows(bytes: Array[Byte], numFields: Int): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val lengths = java.nio.ByteBuffer.wrap(bytes)
+    private var pos = 0
+    def hasNext: Boolean = pos < bytes.length
+    def next(): InternalRow = {
+      val size = lengths.getInt(pos)
+      val row = new UnsafeRow(numFields)
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + pos + 4L, size)
+      pos += 4 + size
+      row
+    }
+  }
 }

@@ -180,7 +180,7 @@ class DedupSimilaritySpec extends SparkTestBase {
           spark.listenerManager.unregister(listener)
         }
       (plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq,
-        out.map(_.map { case (d, id) => (d, id.asInstanceOf[Long]) }.toSet))
+        out.map(_.map { case (d, id) => (d.toString, id.asInstanceOf[Long]) }.toSet))
     }
     // within the row bound (7 <= 10), and past it with few distinct digests
     // (7 > 5 >= 5, aggregated on the executors first): the store scanned
@@ -202,7 +202,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     val byString = Dedup.incrementalOnDriver(
       Seq(("b", "dup"), ("a", "dup"), ("c", "dup")).toDF("id", "text"),
       graft.operators.TextOps.fingerprintMd5(col("text")), col("id"), refFp)
-    assert(byString.map(_.map(_._2)).contains(Seq("a")))
+    assert(byString.map(_.map(_._2)).contains(Seq(org.apache.spark.unsafe.types.UTF8String.fromString("a"))))
   }
 
   test("quantizeInt8: bounds, zero vector, dequantization error within scale/2") {

@@ -755,22 +755,22 @@ class OperatorSpec extends SparkTestBase {
     for (seed <- Seq(0L, 11L)) {
       val n = 150 + (seed % 13).toInt
       val want = Array.tabulate(n)(Multimodal.syntheticSample(seed, _))
-      val w24 = Multimodal.wavFromSamples24(want, sampleRate = 22050)
+      val w24 = AudioFixtures.wavFromSamples24(want, sampleRate = 22050)
       val Some((r24, c24, s24)) = Multimodal.decodeWav(w24)
       assert(r24 == 22050 && c24 == 1 && s24.length == n, s"24-bit header mismatch seed $seed")
       assert(s24.sameElements(want), s"24-bit decode not sample-exact at seed $seed")
-      val wf = Multimodal.wavFromSamplesFloat(want, sampleRate = 48000)
+      val wf = AudioFixtures.wavFromSamplesFloat(want, sampleRate = 48000)
       val Some((rf, cf, sf)) = Multimodal.decodeWav(wf)
       assert(rf == 48000 && cf == 1 && sf.length == n, s"float header mismatch seed $seed")
       assert(sf.sameElements(want), s"float decode not sample-exact at seed $seed")
     }
     // stereo 24-bit: interleaving preserved
     val st24 = Array.tabulate(80)(Multimodal.syntheticSample(3L, _))
-    val Some((_, cSt, sSt)) = Multimodal.decodeWav(Multimodal.wavFromSamples24(st24, 16000, 2))
+    val Some((_, cSt, sSt)) = Multimodal.decodeWav(AudioFixtures.wavFromSamples24(st24, 16000, 2))
     assert(cSt == 2 && sSt.sameElements(st24))
     // fuzz the new layouts too: truncation/corruption never throws
-    val f24 = Multimodal.wavFromSamples24(st24)
-    val ff = Multimodal.wavFromSamplesFloat(st24)
+    val f24 = AudioFixtures.wavFromSamples24(st24)
+    val ff = AudioFixtures.wavFromSamplesFloat(st24)
     for (src <- Seq(f24, ff); len <- Seq(0, 20, 44, 47, src.length / 2, src.length - 1))
       Multimodal.decodeWav(java.util.Arrays.copyOf(src, len))
     for (_ <- 0 until 100) {
@@ -1064,24 +1064,24 @@ class OperatorSpec extends SparkTestBase {
     // decodeWav discipline on the two other javax.sound-native containers
     for (seed <- Seq(0L, 7L, 123456789L)) {
       val n = 200 + (seed % 37).toInt
-      val Some((ra, ca, sa)) = Multimodal.decodeAudio(Multimodal.syntheticAiff(seed, n, 8000))
+      val Some((ra, ca, sa)) = Multimodal.decodeAudio(AudioFixtures.syntheticAiff(seed, n, 8000))
       assert(ra == 8000 && ca == 1 && sa.length == n, s"seed $seed AIFF header mismatch")
       assert(sa.indices.forall(i => sa(i) == Multimodal.syntheticSample(seed, i)),
         s"seed $seed AIFF samples diverge")
-      val Some((ru, cu, su)) = Multimodal.decodeAudio(Multimodal.syntheticAu(seed, n, 8000))
+      val Some((ru, cu, su)) = Multimodal.decodeAudio(AudioFixtures.syntheticAu(seed, n, 8000))
       assert(ru == 8000 && cu == 1 && su.length == n, s"seed $seed AU header mismatch")
       assert(su.indices.forall(i => su(i) == Multimodal.syntheticSample(seed, i)),
         s"seed $seed AU samples diverge")
     }
     // stereo AIFF: interleaved order survives; odd sample rates encode
     // exactly through the 80-bit extended field (44100 is the classic)
-    val st = Multimodal.syntheticAiff(5L, 64, sampleRate = 44100, channels = 2)
+    val st = AudioFixtures.syntheticAiff(5L, 64, sampleRate = 44100, channels = 2)
     val Some((r2, c2, s2)) = Multimodal.decodeAudio(st)
     assert(r2 == 44100 && c2 == 2 && s2.length == 64)
     assert(s2.indices.forall(i => s2(i) == Multimodal.syntheticSample(5L, i)))
     // decodeWav keeps its RIFF-only contract: AIFF/AU are None there
     assert(Multimodal.decodeWav(st).isEmpty)
-    assert(Multimodal.decodeWav(Multimodal.syntheticAu(1L, 50)).isEmpty)
+    assert(Multimodal.decodeWav(AudioFixtures.syntheticAu(1L, 50)).isEmpty)
     // CROSS-CONTAINER parity (the x180 discipline for audio): the same
     // formula clip as WAV, AIFF, and AU must fingerprint IDENTICALLY
     for (seed <- 1L to 5L) {
@@ -1157,8 +1157,8 @@ class OperatorSpec extends SparkTestBase {
     }
     // truncation/corruption fuzz on both containers — None or fewer
     // samples, never a throw
-    val baseA = Multimodal.syntheticAiff(9L, 128)
-    val baseU = Multimodal.syntheticAu(9L, 128)
+    val baseA = AudioFixtures.syntheticAiff(9L, 128)
+    val baseU = AudioFixtures.syntheticAu(9L, 128)
     for (base <- Seq(baseA, baseU); len <- Seq(0, 3, 11, 23, 24, 53, 54, 55, 100, base.length - 1)) {
       val out = Multimodal.decodeAudio(java.util.Arrays.copyOf(base, len))
       assert(out.forall(_._3.length <= 128), s"truncation at $len produced phantom samples")
@@ -1174,8 +1174,8 @@ class OperatorSpec extends SparkTestBase {
     // mediaProbe types all three containers as audio with exact metadata
     val media = Seq(
       Multimodal.MediaRow(0L, "audio/wav", Multimodal.syntheticWav(3L, 300, 16000)),
-      Multimodal.MediaRow(1L, "audio/aiff", Multimodal.syntheticAiff(3L, 300, 16000)),
-      Multimodal.MediaRow(2L, "audio/basic", Multimodal.syntheticAu(3L, 300, 16000))
+      Multimodal.MediaRow(1L, "audio/aiff", AudioFixtures.syntheticAiff(3L, 300, 16000)),
+      Multimodal.MediaRow(2L, "audio/basic", AudioFixtures.syntheticAu(3L, 300, 16000))
     ).toDS()
     val probe = Multimodal.mediaProbe(media)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(6), r.getLong(7))).toSet

@@ -739,6 +739,68 @@ class ServiceSpec extends SparkTestBase {
     assert(perBatch.tail.max <= 5, s"a warm delivered epoch fired ${perBatch.tail.max} jobs (budget 5): $perBatch")
   }
 
+  test("a warm service micro-batch leaves the session CacheManager empty, during it and after it") {
+    val port = { val s = new ServerSocket(0); try s.getLocalPort finally s.close() }
+    val store = java.nio.file.Files.createTempDirectory("svc-no-cache").toString + "/digests"
+    val cfg = GraftService.parseConfig(
+      s"""topic: dev-test
+         |interfaces:
+         |  southbound:
+         |    type: tcp
+         |    port: $port
+         |  northbound:
+         |    - name: main-nb
+         |      type: memory
+         |    - name: audit-nb
+         |      type: memory
+         |      dedup:
+         |        store: $store
+         |rules:
+         |  - name: mirror
+         |    priority: 1
+         |    condition: {field: '*', value: '*'}
+         |    action: allow
+         |    destination: '*'
+         |    subject: all
+         |""".stripMargin
+    )
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    // caches other specs of this shared session left behind
+    spark.catalog.clearCache()
+    val rows = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val cachedDuring = new java.util.concurrent.atomic.AtomicInteger(0)
+    val q = GraftService.startBatches(
+      spark,
+      cfg,
+      nb => (batch, _) => {
+        // the fan-out's cached batch is live here, and so is dedupBatch's
+        // cached rows in audit-nb's delivery
+        if (!cacheManager.isEmpty) cachedDuring.incrementAndGet()
+        rows.merge(nb.name, batch.collect().length.toLong, (x: java.lang.Long, y: java.lang.Long) => x + y)
+        ()
+      }
+    )
+    try {
+      Thread.sleep(300)
+      (0 until 2).foreach { round =>
+        val sock = new Socket("127.0.0.1", port)
+        sock.getOutputStream.write((0 until 200).flatMap { i =>
+          encodeFrame(TypeDynMessage, s"frame ${i % 150 + round * 100}".getBytes("UTF-8")).toSeq
+        }.toArray)
+        sock.close()
+        val deadline = System.currentTimeMillis() + 30000
+        while (rows.getOrDefault("main-nb", 0L) < 200L * (round + 1) && System.currentTimeMillis() < deadline) {
+          q.processAllAvailable()
+          Thread.sleep(50)
+        }
+      }
+      q.processAllAvailable()
+      assert(rows.get("main-nb") == 400L && rows.get("audit-nb") == 150L + 100L, s"$rows")
+    } finally q.stop()
+    assert(cachedDuring.get == 0, s"${cachedDuring.get} sink calls saw a CacheManager entry")
+    assert(cacheManager.isEmpty, "a CacheManager entry outlived the micro-batches")
+  }
+
   test("service lifecycle: config → TCP ingress → router → per-destination fan-out") {
     val port = { val s = new ServerSocket(0); try s.getLocalPort finally s.close() }
     val cfg = GraftService.parseConfig(fixtureYaml.replace("%PORT%", port.toString))

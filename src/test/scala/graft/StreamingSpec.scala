@@ -157,6 +157,112 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  /** `f`'s result with the executed plan of every query it ran. */
+  private def plansOf[T](f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+    spark.listenerManager.register(listener)
+    val out =
+      try f
+      finally {
+        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
+        spark.listenerManager.unregister(listener)
+      }
+    (out, plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq)
+  }
+
+  /** [[graft.streaming.StreamDedup.dedupBatch]] of `batch` (doc_id, text)
+    * within `guard` distinct digests: the survivor count and the kept ids.
+    */
+  private def dedupKept(
+      batch: org.apache.spark.sql.DataFrame,
+      store: String,
+      epoch: Long,
+      guard: Long = 2000000L
+  ): (Long, Set[Long]) = {
+    var kept = Set.empty[Long]
+    val n = graft.streaming.StreamDedup.dedupBatch(batch, col("text"), col("doc_id"), store, epoch,
+      (df, _) => kept = df.collect().map(r => new java.math.BigDecimal(r.get(0).toString).longValueExact).toSet,
+      guard = guard)
+    (n, kept)
+  }
+
+  /** The digests stored for `epoch`, one per row. */
+  private def storedDigests(store: String, epoch: Long): Seq[String] =
+    spark.read.parquet(s"$store/epoch=$epoch").collect().map(_.getString(0)).toSeq.sorted
+
+  test("StreamDedup: past the driver guard the anti-join writes each new digest once, delivers the in-guard survivors and replays") {
+    val root = java.nio.file.Files.createTempDirectory("graft-past-guard").toString
+    val (inGuard, past) = (s"$root/in-guard", s"$root/past")
+    Seq(inGuard, past).foreach(store => dedupKept(Seq(1L -> "alpha", 2L -> "beta").toDF("doc_id", "text"), store, 0L))
+    // cross-epoch re-ingests (one a normalization variant) and within-batch
+    // copies: 4 distinct digests, past a guard of 2
+    val batch = Seq(10L -> "alpha", 11L -> "gamma", 12L -> "Beta ", 13L -> "gamma", 14L -> "delta", 15L -> " DELTA")
+      .toDF("doc_id", "text")
+    val (want, inGuardPlans) = plansOf(dedupKept(batch, inGuard, 1L))
+    assert(want == ((2L, Set(11L, 14L))))
+    assert(inGuardPlans.flatMap(scansUnder(_, inGuard)).size == 1, "within the guard the driver probes the store")
+    val (got, plans) = plansOf(dedupKept(batch, past, 1L, guard = 2L))
+    assert(got == want)
+    // the driver decision gave up after counting the distinct digests and
+    // never probed the store: the anti-join decided
+    assert(plans.flatMap(scansUnder(_, past)).isEmpty && plans.exists(planNodes(_).exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.aggregate.BaseAggregateExec])), s"the driver decided:\n${plans.mkString("\n")}")
+    assert(storedDigests(past, 1L) == storedDigests(inGuard, 1L) && storedDigests(past, 1L).distinct.size == 2)
+    // a replay of the epoch re-derives the same survivors and digests
+    assert(dedupKept(batch, past, 1L, guard = 2L) == want, "replay diverged")
+    assert(storedDigests(past, 1L) == storedDigests(inGuard, 1L))
+  }
+
+  test("StreamDedup: a partition past its share of the guard is decided by executor aggregation, same survivors") {
+    val root = java.nio.file.Files.createTempDirectory("graft-skewed-share").toString
+    val (even, skewed) = (s"$root/default", s"$root/skewed")
+    Seq(even, skewed).foreach(store => dedupKept(Seq(0L -> "seen").toDF("doc_id", "text"), store, 0L))
+    // partition 0 holds 8 rows, past its share ⌈6 / 2⌉ = 3 of a guard of 6;
+    // the batch holds 6 distinct digests, within the guard
+    val batch = spark.sparkContext
+      .parallelize(Seq(
+        Seq(1L -> "a", 2L -> "b", 3L -> "a", 4L -> "c", 5L -> "b", 6L -> "d", 7L -> "a", 8L -> "seen"),
+        Seq(9L -> "e")), 2)
+      .flatMap(identity)
+      .toDF("doc_id", "text")
+    def aggregates(plans: Seq[org.apache.spark.sql.execution.SparkPlan]): Boolean =
+      plans.exists(planNodes(_).exists(_.isInstanceOf[org.apache.spark.sql.execution.aggregate.BaseAggregateExec]))
+    val (want, inGuardPlans) = plansOf(dedupKept(batch, even, 1L))
+    assert(want == ((5L, Set(1L, 2L, 4L, 6L, 9L))))
+    assert(!aggregates(inGuardPlans), "within every share nothing aggregates")
+    val (got, plans) = plansOf(dedupKept(batch, skewed, 1L, guard = 6L))
+    assert(got == want)
+    assert(aggregates(plans), s"the overflowing partition was not aggregated:\n${plans.mkString("\n")}")
+    assert(!plans.exists(shufflesScanUnder(_, skewed)), "within the guard the store is never shuffled")
+    assert(storedDigests(skewed, 1L) == storedDigests(even, 1L))
+  }
+
+  test("StreamDedup: string, long and decimal ids keep the same survivors; the digests land once each in one file") {
+    val root = java.nio.file.Files.createTempDirectory("graft-id-types").toString
+    // copies whose smaller id comes later in batch order, a normalization
+    // variant and a cross-epoch re-ingest; ids of one width, so that string
+    // order is numeric order
+    val docs = Seq(103L -> "alpha", 101L -> "Alpha ", 102L -> "seen", 105L -> "beta", 104L -> "BETA", 106L -> "gamma")
+    val survivors = Seq("alpha", "beta", "gamma").toDF("text")
+      .select(graft.operators.TextOps.fingerprintMd5(col("text"))).collect().map(_.getString(0)).toSeq.sorted
+    Seq("string", "long", "decimal(20,0)").foreach { idType =>
+      val store = s"$root/${idType.takeWhile(_ != '(')}"
+      def typed(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text").select(col("doc_id").cast(idType).as("doc_id"), col("text"))
+      dedupKept(typed(Seq(0L -> "seen")), store, 0L)
+      assert(dedupKept(typed(docs), store, 1L) == ((3L, Set(101L, 104L, 106L))), idType)
+      val files = new java.io.File(s"$store/epoch=1").listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$idType: ${files.length} digest files")
+      assert(storedDigests(store, 1L) == survivors, idType)
+    }
+  }
+
   /** Spark jobs fired by `f`, counted by a listener on a job group of its own. */
   private def jobsOf(f: => Unit): Int = {
     val group = s"job-budget-${System.nanoTime()}"
