@@ -11,14 +11,13 @@ import graft.operators.AsOfJoin
   * signup at or before each purchase, latest price at or before each
   * trade, latest model version at or before each request).
   *
-  * The observation history lives as a parquet OBSERVATION STORE
-  * partitioned by epoch (`<store>/epoch=<n>/part-*.parquet`, full
+  * The observation history lives as an OBSERVATION [[EpochStore]] (full
   * observation schema: byCol, timeCol, value columns). Per micro-batch:
   *
   *   1. split the batch into its observation rows and its event rows
   *      (caller-provided frames — often two streams, or one stream
   *      filtered two ways, exactly like q19's purchase/signup split);
-  *   2. OVERWRITE `<store>/epoch=<n>` with this epoch's observations;
+  *   2. OVERWRITE the epoch's directory with this epoch's observations;
   *   3. as-of join the events against store-before-this-epoch ∪ this
   *      batch's own observations (same-batch visibility — an event sees
   *      an observation that arrived in its own micro-batch, matching the
@@ -27,13 +26,9 @@ import graft.operators.AsOfJoin
   *      monster-key chunked path;
   *   4. hand the enriched rows to `accept`.
   *
-  * Exactly-once on the STORE, at-least-once on `accept` (the
-  * [[StreamDedup]] contract): a replayed epoch re-reads only the store's
-  * EARLIER epochs and re-derives the same enriched output — step 2's
-  * overwrite can never make a retry join against its own first attempt
-  * twice, and a restart from an older checkpoint never joins against an
-  * abandoned later epoch. The store is read with the schema it is
-  * written with (the observations'), so the read costs no footer job.
+  * Replays follow the [[EpochStore]] contract: exactly-once on the store,
+  * at-least-once on `accept`. The store is read with the observations'
+  * schema.
   *
   * 100 TB shape: the store holds OBSERVATIONS only (the dimension
   * history, not the event stream); it is scanned once per micro-batch
@@ -69,20 +64,9 @@ object StreamAsOf {
       obsCols.contains(byCol) && obsCols.contains(timeCol),
       s"observations must carry '$byCol' and '$timeCol'"
     )
-    // store first (idempotent overwrite), then the join: a crash between
-    // the two replays the epoch against the same pre-epoch history
-    observations
-      .write
-      .mode("overwrite")
-      .parquet(s"$obsStore/epoch=$epoch")
-    // the write above created the store; a replay never sees its own
-    // first attempt, a restart never an abandoned later epoch
-    val prior = spark.read
-      .schema(observations.schema)
-      .option("basePath", obsStore)
-      .parquet(obsStore)
-      .filter(col("epoch") < epoch)
-      .select(obsCols.map(col): _*)
+    // store first, then the join (the EpochStore contract)
+    EpochStore.write(observations, obsStore, epoch)
+    val prior = EpochStore.prior(spark, obsStore, observations.schema, epoch)
     val allObs = prior.unionByName(observations)
     val enriched =
       if (chunked) AsOfJoin.asofBackwardChunked(events, allObs, byCol, timeCol)
@@ -97,33 +81,4 @@ object StreamAsOf {
       ()
     }
   }
-
-  /** Wrap an epoch-aware sink with continuous as-of enrichment — attach
-    * via `df.writeStream.foreachBatch(...)` or
-    * [[StreamRuntime.fanOutSinkWithEpoch]]. `splitObs`/`splitEvents`
-    * carve the micro-batch into its two roles (the q19 shape:
-    * `_.filter($"event_type" === "signup")` / `"purchase"`).
-    */
-  def enrichSink(
-      splitEvents: DataFrame => DataFrame,
-      splitObs: DataFrame => DataFrame,
-      byCol: String,
-      timeCol: String,
-      obsStore: String,
-      accept: (DataFrame, Long) => Unit,
-      chunked: Boolean = false
-  ): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      enrichBatch(
-        splitEvents(batch),
-        splitObs(batch),
-        byCol,
-        timeCol,
-        obsStore,
-        epoch,
-        accept,
-        chunked
-      )
-      ()
-    }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.sketch
@@ -16,15 +16,12 @@ import graft.operators.{Dedup, TextOps}
   * the wrapped sink — continuous corpus ingestion where a re-ingested
   * document is dropped forever after its first acceptance.
   *
-  * The accepted corpus lives as a DIGEST STORE: a parquet directory of
+  * The accepted corpus lives as a DIGEST STORE: an [[EpochStore]] of
   * `fp` digests ([[graft.operators.TextOps.fingerprintMd5]], 32-char md5
-  * hex strings) partitioned by epoch (`<store>/epoch=<n>/part-*.parquet`).
-  * Per micro-batch:
+  * hex strings). Per micro-batch:
   *
-  *   1. read the store's epochs BEFORE the current one (partition pruning
-  *      on the `epoch` directory column, with the declared
-  *      [[StoreSchema]] — no footer read; a missing or empty store reads
-  *      as empty — see idempotency below);
+  *   1. read the store's epochs BEFORE the current one
+  *      ([[EpochStore.prior]] with the declared [[StoreSchema]]);
   *   2. cache the batch rows with their digest and id as binary rows
   *      ([[org.apache.spark.sql.graftbridge.Bridge.cacheRows]]: no
   *      column-batch encoding, no `CacheManager` entry), and decide the
@@ -34,27 +31,18 @@ import graft.operators.{Dedup, TextOps}
   *      set of the batch digests, and NEVER shuffled; the driver keeps the
   *      smallest id per new digest on Catalyst-internal values, so
   *      within-batch copies collapse without a shuffle or a conversion;
-  *   3. overwrite `<store>/epoch=<n>` with the survivors' digests, written
-  *      as one file from a single partition that carries them as one
-  *      packed array of binary rows (one job; the count is known on the
-  *      driver);
+  *   3. overwrite the epoch's directory with the survivors' digests,
+  *      written as one file from a single partition that carries them as
+  *      one packed array of binary rows (one job; the count is known on
+  *      the driver);
   *   4. pass the surviving ROWS (original batch schema) to `accept`: the
   *      cached rows filtered by a broadcast set of the survivor ids, so the
   *      batch is not read again and no join runs.
   *
   * A warm epoch costs 3 jobs before `accept`'s own.
   *
-  * Exactly-once on the STORE, at-least-once on `accept`: Spark replays a
-  * failed micro-batch under the SAME epoch id (the documented
-  * `foreachBatch` contract), and because step 1 reads only earlier
-  * epochs and step 3 overwrites rather than appends, a replay recomputes
-  * the same survivor set instead of deduping the batch against its own
-  * first attempt — the store can never poison a retry. A restart from an
-  * older checkpoint replays epochs the store already holds LATER
-  * partitions for; those abandoned epochs are never read, and each is
-  * overwritten when its epoch id comes round again. `accept` follows the
-  * usual `foreachBatch` delivery semantics (make it idempotent on
-  * `epoch` for end-to-end exactly-once).
+  * Replays follow the [[EpochStore]] contract: exactly-once on the store,
+  * at-least-once on `accept`.
   *
   * 100 TB shape: the store holds digests only (32 bytes per accepted doc
   * ever) and is scanned once per epoch, never shuffled. What moves is
@@ -84,11 +72,9 @@ import graft.operators.{Dedup, TextOps}
 object StreamDedup {
 
   /** The digest store's schema: the `fp` column the epochs are written
-    * with plus the `epoch` directory column.
+    * with.
     */
-  val StoreSchema: StructType = StructType(
-    Seq(StructField("fp", StringType), StructField("epoch", LongType))
-  )
+  val StoreSchema: StructType = StructType(Seq(StructField("fp", StringType)))
 
   /** The digest and id columns [[dedupBatch]] adds to the cached batch rows. */
   private val FpCol = "__graft_fp"
@@ -129,28 +115,17 @@ object StreamDedup {
       guard: Long
   ): Long = {
     val spark = batch.sparkSession
-    // the store before this epoch: partition-discovery read, pruned to
-    // epoch < current so a replay never sees its own first attempt nor an
-    // abandoned later epoch
-    val storePath = new org.apache.hadoop.fs.Path(digestStore)
-    val stored =
-      if (storePath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(storePath))
-        spark.read.schema(StoreSchema).option("basePath", digestStore).parquet(digestStore)
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), StoreSchema)
-    val refFp = stored.filter(col("epoch") < epoch).select(col("fp"))
-    val epochDir = s"$digestStore/epoch=$epoch"
+    val refFp = EpochStore.prior(spark, digestStore, StoreSchema, epoch)
     // the batch rows with their digest and id, cached as binary rows: the
     // decision's first job fills the cache and the delivered rows are read
     // back from it
     val (rows, release) =
       Bridge.cacheRows(batch.select(col("*"), TextOps.fingerprintMd5(text).as(FpCol), idCol.as(IdCol)))
     try {
-      // store first (idempotent overwrite), then delivery: a crash between
-      // the two replays the epoch, re-derives the same survivors (the
-      // epoch's own partition is excluded above) and re-accepts
+      // store first, then delivery (the EpochStore contract)
       Dedup.incrementalOnDriver(rows, col(FpCol), col(IdCol), refFp, guard) match {
         case Some(survivors) =>
-          writeDigests(spark, survivors.iterator.map(_._1), epochDir)
+          writeDigests(spark, survivors.iterator.map(_._1), EpochStore.dir(digestStore, epoch))
           val ids = sketch.broadcastSet(spark, rows.schema(IdCol).dataType, survivors.map(_._2))
           try accept(rows.filter(sketch.in_broadcast_set(ids, col(IdCol))).drop(FpCol, IdCol), epoch)
           finally ids.destroy()
@@ -161,7 +136,7 @@ object StreamDedup {
           val (survivors, releaseSurvivors) = Bridge.cacheRows(Dedup.incrementalOnDigests(rows, text, col(IdCol), refFp))
           try {
             val written = Observation()
-            survivors.select(col("fp")).observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(epochDir)
+            EpochStore.write(survivors.select(col("fp")).observe(written, count(lit(1)).as("rows")), digestStore, epoch)
             val kept = rows.join(survivors.select(col("keep_id")), col(IdCol) === col("keep_id"), "left_semi")
             accept(kept.drop(FpCol, IdCol), epoch)
             written.get("rows").asInstanceOf[Long]
@@ -175,7 +150,6 @@ object StreamDedup {
     * rows (no per-row conversion, no local relation to plan).
     */
   private def writeDigests(spark: SparkSession, digests: Iterator[UTF8String], dir: String): Unit = {
-    val schema = StructType(Seq(StoreSchema("fp")))
     val writer = new UnsafeRowWriter(1)
     val packed = Bridge.packRows(
       digests.map { d =>
@@ -184,10 +158,10 @@ object StreamDedup {
         if (d == null) writer.setNullAt(0) else writer.write(0, d)
         writer.getRow
       },
-      schema
+      StoreSchema
     )
     val rdd = spark.sparkContext.parallelize(Seq(packed), 1).flatMap(Bridge.unpackRows(_, 1))
-    Bridge.ofInternalRows(spark, rdd, schema).write.mode("overwrite").parquet(dir)
+    Bridge.ofInternalRows(spark, rdd, StoreSchema).write.mode("overwrite").parquet(dir)
   }
 
   /** Wrap an epoch-aware sink with cross-batch exact dedup — attach via

@@ -13,11 +13,10 @@ import graft.operators.{ConnectedComponents, EditDistance}
   * pattern (new supplier rows attach to existing entities or found new
   * ones).
   *
-  * The entity registry lives as a KEY STORE: a parquet directory of
-  * `(id, block, s, entity)` rows partitioned by epoch, the
-  * [[StreamDedup]] layout. Per micro-batch:
+  * The entity registry lives as a KEY [[EpochStore]] of
+  * `(id, block, s, entity)` rows. Per micro-batch:
   *
-  *   1. read the store EXCLUDING the current epoch (replay safety);
+  *   1. read the store's epochs before the current one;
   *   2. JW-match batch keys against stored keys within blocks
   *      (threshold `threshold`) AND batch keys against each other;
   *   3. run alternating-star CC over the BATCH-internal pairs, then per
@@ -31,9 +30,8 @@ import graft.operators.{ConnectedComponents, EditDistance}
   *   4. overwrite the epoch partition with the batch's
   *      `(id, block, s, entity)` rows; hand assignments to `accept`.
   *
-  * Exactly-once on the store, at-least-once on `accept` — the
-  * [[StreamDedup]] contract verbatim: a replayed epoch excludes its own
-  * partition, so it re-derives identical assignments.
+  * Replays follow the [[EpochStore]] contract: exactly-once on the store,
+  * at-least-once on `accept`.
   *
   * 100 TB shape: the store is scanned per batch but only the BLOCKS the
   * batch touches survive the join (block-key equi-join, AQE-absorbable);
@@ -63,33 +61,9 @@ object StreamLinkage {
       .filter(idCol.isNotNull && strCol.isNotNull && blockCol.isNotNull)
       .select(idCol.as("id"), blockCol.as("block"), strCol.as("s"))
       .transform(graft.runtime.GraftCheckpoint.pin)
-    val fs = new org.apache.hadoop.fs.Path(keyStore)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ref =
-      if (fs.exists(new org.apache.hadoop.fs.Path(keyStore)))
-        spark.read
-          .option("basePath", keyStore)
-          .parquet(keyStore)
-          .filter(col("epoch") =!= epoch)
-          .select(col("id"), col("block"), col("s"), col("entity"))
-      else {
-        // first-epoch fallback: derive id/entity types from THIS batch so
-        // string (or any) id types don't get coerced to the store schema
-        // of a hardcoded LongType on epoch 0 and then disagree with every
-        // later epoch's parquet schema
-        val idType = b.schema("id").dataType
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            Seq(
-              org.apache.spark.sql.types.StructField("id", idType),
-              org.apache.spark.sql.types.StructField("block", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("entity", idType)
-            )
-          )
-        )
-      }
+    // the stored rows' schema follows the batch's id type (entity = an id)
+    val keySchema = b.select(col("id"), col("block"), col("s"), col("id").as("entity")).schema
+    val ref = EpochStore.prior(spark, keyStore, keySchema, epoch)
 
     // batch ↔ store matches (within block, thresholded JW): raw
     // (id, entity) rows — distinctness is judged at COMPONENT level below
@@ -134,11 +108,7 @@ object StreamLinkage {
       )
       .persist()
     try {
-      assigned
-        .select(col("id"), col("block"), col("s"), col("entity"))
-        .write
-        .mode("overwrite")
-        .parquet(s"$keyStore/epoch=$epoch")
+      EpochStore.write(assigned.select(col("id"), col("block"), col("s"), col("entity")), keyStore, epoch)
       val n = assigned.count()
       accept(assigned, epoch)
       n
@@ -147,21 +117,4 @@ object StreamLinkage {
       ()
     }
   }
-
-  /** Wrap an epoch-aware sink with continuous entity resolution — attach
-    * via `df.writeStream.foreachBatch(...)` or
-    * [[StreamRuntime.fanOutSinkWithEpoch]].
-    */
-  def linkSink(
-      idCol: Column,
-      strCol: Column,
-      blockCol: Column,
-      threshold: Double,
-      keyStore: String,
-      accept: (DataFrame, Long) => Unit
-  ): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      linkBatch(batch, idCol, strCol, blockCol, threshold, keyStore, epoch, accept)
-      ()
-    }
 }

@@ -14,12 +14,11 @@ import graft.operators.{Dedup, Multimodal}
   * the batch operators use — fingerprints meet on block keys, never in
   * an all-pairs scan.
   *
-  * The accepted state lives as a parquet FINGERPRINT STORE partitioned
-  * by epoch (`<store>/epoch=<n>`, rows (id, simhash) — 16 bytes of state
-  * per accepted item; block keys are recomputed on read, deterministic).
-  * Per micro-batch:
+  * The accepted state lives as a FINGERPRINT [[EpochStore]] (rows
+  * (id, simhash) — 16 bytes of state per accepted item; block keys are
+  * recomputed on read, deterministic). Per micro-batch:
   *
-  *   1. OVERWRITE `<store>/epoch=<n>` with this batch's fingerprints;
+  *   1. OVERWRITE the epoch's directory with this batch's fingerprints;
   *   2. block-join the batch against store-before-this-epoch: any stored
   *      fingerprint within `maxHamming` kills the batch item;
   *   3. within the batch, the smaller id survives a near-dup pair (the
@@ -28,9 +27,8 @@ import graft.operators.{Dedup, Multimodal}
   *      batch CC operator's job, x26);
   *   4. survivors (id, simhash) go to `accept`.
   *
-  * Exactly-once on the store, at-least-once on `accept` (the
-  * [[StreamDedup]] contract): a replayed epoch re-reads the store
-  * EXCLUDING its own partition and re-derives the same survivors.
+  * Replays follow the [[EpochStore]] contract: exactly-once on the store,
+  * at-least-once on `accept`.
   *
   * 100 TB shape: the store is fingerprints only (8-byte hashes + ids —
   * a billion accepted images is ~16 GB of parquet, scanned once per
@@ -56,19 +54,9 @@ object StreamMediaDedup {
     val spark = fps.sparkSession
     val b = fps.select(col("id"), col("simhash")).persist()
     try {
-      // store first (idempotent overwrite), then the gate: a crash
-      // between the two replays the epoch against the same prior state
-      b.write.mode("overwrite").parquet(s"$fpStore/epoch=$epoch")
-      val fs = new org.apache.hadoop.fs.Path(fpStore)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prior =
-        if (fs.exists(new org.apache.hadoop.fs.Path(fpStore)))
-          spark.read
-            .option("basePath", fpStore)
-            .parquet(fpStore)
-            .filter(col("epoch") =!= epoch) // a replay never sees its own first attempt
-            .select(col("id"), col("simhash"))
-        else b.limit(0)
+      // store first, then the gate (the EpochStore contract)
+      EpochStore.write(b, fpStore, epoch)
+      val prior = EpochStore.prior(spark, fpStore, b.schema, epoch)
       val bb = Dedup.simhashBlocked(b, maxHamming, blocks)
       val pb = Dedup
         .simhashBlocked(prior, maxHamming, blocks)
@@ -97,23 +85,6 @@ object StreamMediaDedup {
     }
   }
 
-  /** Wrap an epoch-aware sink with continuous media near-dup gating —
-    * attach via `df.writeStream.foreachBatch(...)`. `fingerprint` maps
-    * the micro-batch to its `(id, simhash)` relation (e.g.
-    * `batch => Multimodal.aHash(batch.as[MediaRow])`).
-    */
-  def dedupFpSink(
-      fingerprint: DataFrame => DataFrame,
-      fpStore: String,
-      accept: (DataFrame, Long) => Unit,
-      maxHamming: Int = 2,
-      blocks: Int = 4
-  ): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      dedupFpBatch(fingerprint(batch), fpStore, epoch, accept, maxHamming, blocks)
-      ()
-    }
-
   /** TYPED streaming mirror of [[graft.operators.Multimodal.mediaDedupCatalog]]
     * — the batch/stream symmetry the rest of the engine keeps: one
     * `typeAndFingerprint` decode pass per micro-batch routes every blob
@@ -139,8 +110,7 @@ object StreamMediaDedup {
     *     at ≥ `videoMinFrames` distinct positions (the catalog's gate);
     *   - fingerprint-less: digest equality.
     *
-    * Same replay contract as [[dedupFpBatch]]: exactly-once on the
-    * store (epoch partition overwrite), at-least-once on `accept`.
+    * Replays follow the [[EpochStore]] contract, as [[dedupFpBatch]]'s do.
     */
   def typedDedupBatch(
       media: Dataset[Multimodal.MediaRow],
@@ -179,19 +149,9 @@ object StreamMediaDedup {
           lit(-1).as("frame_idx"), col("digest"))
       val units = scalarUnits.unionByName(videoUnits).unionByName(digestUnits).persist()
       try {
-        // store first (idempotent overwrite), then the gates — the
-        // dedupFpBatch crash-replay contract
-        units.write.mode("overwrite").parquet(s"$fpStore/epoch=$epoch")
-        val fs = new org.apache.hadoop.fs.Path(fpStore)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (fs.exists(new org.apache.hadoop.fs.Path(fpStore)))
-            spark.read
-              .option("basePath", fpStore)
-              .parquet(fpStore)
-              .filter(col("epoch") =!= epoch)
-              .select(col("id"), col("kind"), col("simhash"), col("frame_idx"), col("digest"))
-          else units.limit(0)
+        // store first, then the gates (the EpochStore contract)
+        EpochStore.write(units, fpStore, epoch)
+        val prior = EpochStore.prior(spark, fpStore, units.schema, epoch)
         def scalarOf(df: DataFrame, kind: String): DataFrame =
           df.filter(col("kind") === kind && col("simhash").isNotNull && col("frame_idx") === -1)
             .select(col("id"), col("simhash"))
@@ -284,27 +244,4 @@ object StreamMediaDedup {
       ()
     }
   }
-
-  /** [[typedDedupBatch]] as an epoch-aware foreachBatch sink — the typed
-    * twin of [[dedupFpSink]]: the micro-batch must carry the MediaRow
-    * columns (doc_id, media_type, content).
-    */
-  def typedDedupSink(
-      fpStore: String,
-      accept: (DataFrame, Long) => Unit,
-      imageMaxHamming: Int = 0,
-      audioMaxHamming: Int = 0,
-      videoMaxHamming: Int = 2,
-      videoMinFrames: Int = 2,
-      normalizeRate: Option[Int] = None,
-      blocks: Int = 4
-  ): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      import batch.sparkSession.implicits._
-      typedDedupBatch(
-        batch.select(col("doc_id"), col("media_type"), col("content")).as[Multimodal.MediaRow],
-        fpStore, epoch, accept,
-        imageMaxHamming, audioMaxHamming, videoMaxHamming, videoMinFrames, normalizeRate, blocks)
-      ()
-    }
 }

@@ -13,12 +13,9 @@ import graft.operators.Similarity
   * sibling of [[StreamDedup]] (exact digests) and the natural partner of
   * [[StreamCurate]] for multimodal pipelines.
   *
-  * Store layout and delivery semantics are [[StreamDedup]]'s, verbatim:
-  * accepted (vec_id, v) rows live under `<store>/epoch=<n>/`, each batch
-  * reads the store EXCLUDING its own epoch partition (a replayed epoch
-  * never sees its first attempt), writes survivors via idempotent
-  * partition overwrite, THEN delivers — exactly-once on the store,
-  * at-least-once on `accept`.
+  * Accepted (vec_id, v) rows live in an [[EpochStore]]; each batch reads
+  * the epochs before its own, writes its survivors, THEN delivers —
+  * exactly-once on the store, at-least-once on `accept`.
   *
   * 100 TB shape: per batch the accepted store is scanned (key pass +
   * confirm pass), never shuffled; the batch side broadcasts — exactly
@@ -45,24 +42,8 @@ object StreamSemanticGate {
       threshold: Double = 0.95
   ): Long = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(vectorStore)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ref =
-      if (fs.exists(new org.apache.hadoop.fs.Path(vectorStore)))
-        spark.read
-          .option("basePath", vectorStore)
-          .parquet(vectorStore)
-          .filter(col("epoch") =!= epoch)
-          .select(col("vec_id"), col("v"))
-      else
-        spark
-          .range(0)
-          .select(
-            col("id").as("vec_id"),
-            array(lit(0.0)).as("v")
-          )
-          .filter(lit(false))
     val b = batch.select(idCol.as("vec_id"), transform(vecCol, _.cast("double")).as("v"))
+    val ref = EpochStore.prior(spark, vectorStore, b.schema, epoch)
     val verdicts = Similarity
       .incrementalSemantic(b, col("vec_id"), col("v"), ref, col("vec_id"), col("v"), threshold)
       .persist()
@@ -72,9 +53,8 @@ object StreamSemanticGate {
         col("vec_id") === col("__keep"),
         "left_semi"
       )
-      // store first (idempotent overwrite), then delivery — the StreamDedup
-      // crash-replay contract
-      kept.write.mode("overwrite").parquet(s"$vectorStore/epoch=$epoch")
+      // store first, then delivery (the EpochStore contract)
+      EpochStore.write(kept, vectorStore, epoch)
       val n = verdicts.filter(col("kept")).count()
       accept(kept, epoch)
       n
@@ -83,20 +63,4 @@ object StreamSemanticGate {
       ()
     }
   }
-
-  /** Wrap an epoch-aware sink with the semantic gate — attach via
-    * `df.writeStream.foreachBatch(...)` or
-    * [[StreamRuntime.fanOutSinkWithEpoch]].
-    */
-  def gateSink(
-      idCol: Column,
-      vecCol: Column,
-      vectorStore: String,
-      accept: (DataFrame, Long) => Unit,
-      threshold: Double = 0.95
-  ): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      gateBatch(batch, idCol, vecCol, vectorStore, epoch, accept, threshold)
-      ()
-    }
 }

@@ -492,20 +492,15 @@ object StreamTws {
       )
   }
 
-  /** The accepted-corpus digests of a [[StreamDedup]] digest store
-    * (`<store>/epoch=<n>/part-*.parquet`, `fp` =
-    * [[graft.operators.TextOps.fingerprintMd5]] hex strings) as a seed
-    * set for [[firstSeenSeeded]] — the migration path from the
-    * foreachBatch mirror to native typed state. Reads digests only;
-    * nothing collects.
+  /** The accepted-corpus digests of every epoch of a [[StreamDedup]]
+    * digest store (`fp` = [[graft.operators.TextOps.fingerprintMd5]] hex
+    * strings) as a seed set for [[firstSeenSeeded]] — the migration path
+    * from the foreachBatch mirror to native typed state. Reads digests
+    * only, with the store's declared schema; nothing collects.
     */
   def digestSeeds(spark: SparkSession, digestStore: String): Dataset[String] = {
     import spark.implicits._
-    spark.read
-      .option("basePath", digestStore)
-      .parquet(digestStore)
-      .select(col("fp").cast("string"))
-      .as[String]
+    EpochStore.prior(spark, digestStore, StreamDedup.StoreSchema, Long.MaxValue).as[String]
   }
 
   /** Gap-based sessions over watermarked events. `watermarkDelay` is the

@@ -80,42 +80,154 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
-  test("StreamDedup / StreamAsOf: replaying epoch 2 ignores the abandoned epoch 3") {
-    import graft.streaming.{StreamAsOf, StreamDedup}
-    val root = java.nio.file.Files.createTempDirectory("graft-restart").toString
-    // dedup: epochs 0-3 in the store; epoch 3 (abandoned by a restart from
-    // the epoch-2 checkpoint) accepted "delta", which the replayed epoch 2
-    // now carries and must still accept
-    val digests = s"$root/digests"
-    def dedup(epoch: Long, docs: (Long, String)*): Set[Long] = {
-      var kept = Set.empty[Long]
-      StreamDedup.dedupBatch(docs.toDF("doc_id", "text"), col("text"), col("doc_id"), digests, epoch,
-        (df, _) => kept = df.collect().map(_.getLong(0)).toSet)
-      kept
+  /** One streaming mirror's `*Batch` entry point over a fixture of its
+    * own. `run(i, store, epoch, accept)` feeds input `i` — 0-3: the inputs
+    * of epochs 0-3; [[Late]]: epoch 2 re-planned after a restart, carrying
+    * rows that epoch 3 stored; anything else: an empty batch — and returns
+    * the entry point's count; `rows` renders a delivered frame as sorted
+    * strings.
+    */
+  private case class Mirror(
+      name: String,
+      run: (Int, String, Long, (org.apache.spark.sql.DataFrame, Long) => Unit) => Long,
+      rows: org.apache.spark.sql.DataFrame => Seq[String]
+  )
+
+  private val Late = 4
+  private val Empty = -1
+
+  private def idsOf(c: String): org.apache.spark.sql.DataFrame => Seq[String] =
+    _.select(col(c).cast("string")).collect().map(_.getString(0)).toSeq.sorted
+
+  /** The six epoch-store entry points, each with inputs where what the
+    * abandoned epoch 3 stored would change the re-planned epoch 2.
+    */
+  private lazy val mirrors: Seq[Mirror] = {
+    import graft.operators.Multimodal
+    import graft.streaming.{StreamAsOf, StreamDedup, StreamLinkage, StreamMediaDedup, StreamSemanticGate}
+    def input[T](fixture: IndexedSeq[Seq[T]], i: Int): Seq[T] = fixture.lift(i).getOrElse(Nil)
+    val docs = Vector(Seq(1L -> "alpha"), Seq(2L -> "beta"), Seq(3L -> "gamma"),
+      Seq(5L -> "delta", 6L -> "epsilon", 8L -> "gamma"), Seq(3L -> "gamma", 4L -> "delta", 7L -> "alpha"))
+    // (observations (k, t, price), events (k, t, ev)): epoch 3 stores a
+    // later-arriving observation with an earlier time than the events
+    val history = Vector(
+      Seq((1L, 100L, 10.0)) -> Seq((1L, 150L, "z")),
+      Seq((1L, 200L, 20.0)) -> Nil,
+      Nil -> Seq((1L, 300L, "a")),
+      Seq((1L, 250L, 25.0)) -> Seq((1L, 300L, "b")),
+      Nil -> Seq((1L, 300L, "a"), (1L, 260L, "c")))
+    val keys = Vector(
+      Seq((1L, "alphaXX corp", "a"), (2L, "alphaXX corp.", "a")),
+      Seq((3L, "beta llc", "b")),
+      Seq((4L, "gamma inc", "g")),
+      Seq((5L, "deltaXX corp", "d")),
+      Seq((4L, "gamma inc", "g"), (6L, "deltaXX corp.", "d")))
+    def unit(k: Int, scale: Double = 1.0) = Array.tabulate(4)(j => if (j == k) scale else 0.0)
+    val vectors = Vector(Seq(1L -> unit(0)), Seq(2L -> unit(1)), Seq(3L -> unit(2)), Seq(5L -> unit(3)),
+      Seq(3L -> unit(2), 4L -> unit(3, 2.0)))
+    // simhashes 32+ bits apart, but for one that is 1 bit from epoch 3's
+    val (h0, h1, h2, h3) = (0L, -1L, 0x00000000ffffffffL, 0xffffffff00000000L)
+    val fps = Vector(Seq(1L -> h0), Seq(2L -> h1), Seq(3L -> h2), Seq(5L -> h3), Seq(3L -> h2, 4L -> (h3 ^ 1L)))
+    // images by seed; a BMP of the same seed has the PNG's aHash
+    def png(seed: Long) = Multimodal.syntheticImage(seed, 24, 20, "png")
+    val media = Vector(Seq(10L -> png(1L)), Seq(20L -> png(2L)), Seq(30L -> png(3L)), Seq(50L -> png(4L)),
+      Seq(30L -> png(3L), 40L -> Multimodal.syntheticImage(4L, 24, 20, "bmp")))
+    Seq(
+      Mirror("StreamDedup.dedupBatch",
+        (i, store, epoch, accept) => StreamDedup.dedupBatch(
+          input(docs, i).toDF("doc_id", "text"), col("text"), col("doc_id"), store, epoch, accept),
+        idsOf("doc_id")),
+      Mirror("StreamAsOf.enrichBatch",
+        (i, store, epoch, accept) => {
+          val (obs, ev) = history.lift(i).getOrElse((Nil, Nil))
+          StreamAsOf.enrichBatch(ev.toDF("k", "t", "ev"), obs.toDF("k", "t", "price"), "k", "t", store, epoch, accept)
+        },
+        _.select(concat_ws("=", col("ev"), col("price"))).collect().map(_.getString(0)).toSeq.sorted),
+      Mirror("StreamLinkage.linkBatch",
+        (i, store, epoch, accept) => StreamLinkage.linkBatch(
+          input(keys, i).toDF("id", "s", "blk"), col("id"), col("s"), col("blk"), 0.95, store, epoch, accept),
+        _.select(concat_ws(":", col("id"), col("entity"), col("matched_store"))).collect().map(_.getString(0)).toSeq.sorted),
+      Mirror("StreamSemanticGate.gateBatch",
+        (i, store, epoch, accept) => StreamSemanticGate.gateBatch(
+          input(vectors, i).toDF("vec_id", "v"), col("vec_id"), col("v"), store, epoch, accept),
+        idsOf("vec_id")),
+      Mirror("StreamMediaDedup.dedupFpBatch",
+        (i, store, epoch, accept) => StreamMediaDedup.dedupFpBatch(
+          input(fps, i).toDF("id", "simhash"), store, epoch, accept),
+        idsOf("id")),
+      Mirror("StreamMediaDedup.typedDedupBatch",
+        (i, store, epoch, accept) => StreamMediaDedup.typedDedupBatch(
+          input(media, i).map { case (id, c) => Multimodal.MediaRow(id, "blob", c) }.toDS(), store, epoch, accept),
+        idsOf("doc_id"))
+    )
+  }
+
+  /** `m` on input `i` at `epoch` of `store`: its count and delivered rows. */
+  private def deliver(m: Mirror, store: String, i: Int, epoch: Long): (Long, Seq[String]) = {
+    var got = Seq.empty[String]
+    val n = m.run(i, store, epoch, (df, _) => got = m.rows(df))
+    (n, got)
+  }
+
+  /** Inputs 0 to `last` as epochs 0 to `last` of `store`; the last one's result. */
+  private def epochs(m: Mirror, store: String, last: Int): (Long, Seq[String]) =
+    (0 to last).map(e => deliver(m, store, e, e.toLong)).last
+
+  /** `f` over every mirror; the failures of all of them are reported together. */
+  private def forEachMirror(f: Mirror => Unit): Unit = {
+    val checks = new org.scalatest.Checkpoints.Checkpoint
+    mirrors.foreach(m => checks(f(m)))
+    checks.reportAll()
+  }
+
+  private def storeRoot(m: Mirror): String =
+    java.nio.file.Files.createTempDirectory("graft-" + m.name.replaceAll("[^A-Za-z]", "-")).toString
+
+  test("streaming mirrors: replaying epoch 2 ignores the abandoned epoch 3") {
+    forEachMirror { m =>
+      val root = storeRoot(m)
+      // the restarted store held epochs 0-3 when the older checkpoint
+      // re-planned epoch 2; the clean one never saw epoch 3
+      epochs(m, s"$root/restarted", 3)
+      val replayed = deliver(m, s"$root/restarted", Late, 2L)
+      epochs(m, s"$root/clean", 1)
+      val clean = deliver(m, s"$root/clean", Late, 2L)
+      assert(clean._2.size == clean._1 && clean._2.nonEmpty, s"${m.name}: $clean")
+      assert(replayed == clean, s"${m.name}: the epoch-2 replay read the abandoned epoch 3")
     }
-    assert(dedup(0L, 1L -> "alpha") == Set(1L))
-    assert(dedup(1L, 2L -> "beta") == Set(2L))
-    assert(dedup(2L, 3L -> "gamma") == Set(3L))
-    assert(dedup(3L, 5L -> "delta", 6L -> "epsilon", 8L -> "gamma") == Set(5L, 6L))
-    assert(dedup(3L, 5L -> "delta", 6L -> "epsilon", 8L -> "gamma") == Set(5L, 6L), "epoch-3 replay diverged")
-    assert(dedup(2L, 3L -> "gamma", 4L -> "delta", 7L -> "alpha") == Set(3L, 4L),
-      "epoch-2 replay read the abandoned epoch 3")
-    // as-of: epoch 3 stored a LATER-arriving observation with an earlier
-    // time; the replay of epoch 2 must enrich from epochs 0-1 only
-    val obsStore = s"$root/obs"
-    def enrich(epoch: Long, obs: Seq[(Long, Long, Double)], ev: (Long, Long, String)*): Map[String, Option[Double]] = {
-      var out = Map.empty[String, Option[Double]]
-      StreamAsOf.enrichBatch(ev.toDF("k", "t", "ev"), obs.toDF("k", "t", "price"), "k", "t", obsStore, epoch,
-        (df, _) => out = df.collect().map(r => r.getAs[String]("ev") ->
-          Option(r.getAs[java.lang.Double]("price")).map(_.doubleValue)).toMap)
-      out
+  }
+
+  test("streaming mirrors: a missing store at epoch 0 reads as empty") {
+    forEachMirror { m =>
+      val store = storeRoot(m) + "/missing"
+      val (n, got) = deliver(m, store, 0, 0L)
+      assert(n == got.size && got.nonEmpty, s"${m.name}: n=$n, $got")
+      assert(new java.io.File(s"$store/epoch=0").isDirectory, s"${m.name}: epoch 0 not stored")
     }
-    enrich(0L, Seq((1L, 100L, 10.0)))
-    enrich(1L, Seq((1L, 200L, 20.0)))
-    assert(enrich(2L, Nil, (1L, 300L, "a")) == Map("a" -> Some(20.0)))
-    assert(enrich(3L, Seq((1L, 250L, 25.0)), (1L, 300L, "b")) == Map("b" -> Some(25.0)))
-    assert(enrich(2L, Nil, (1L, 300L, "a")) == Map("a" -> Some(20.0)),
-      "epoch-2 replay read the abandoned epoch 3")
+  }
+
+  test("streaming mirrors: an epoch whose stored partition is empty reads as empty") {
+    forEachMirror { m =>
+      val root = storeRoot(m)
+      assert(deliver(m, s"$root/gap", Empty, 0L) == ((0L, Nil)), m.name)
+      val files = new java.io.File(s"$root/gap/epoch=0").listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty && spark.read.parquet(s"$root/gap/epoch=0").count() == 0L, s"${m.name}: no empty partition")
+      assert(deliver(m, s"$root/gap", 0, 1L) == deliver(m, s"$root/fresh", 0, 0L), m.name)
+    }
+  }
+
+  test("streaming mirrors: when delivery throws after the store write, the replay delivers the same rows") {
+    forEachMirror { m =>
+      val root = storeRoot(m)
+      epochs(m, s"$root/crashed", 1)
+      val crash = intercept[IllegalStateException](
+        m.run(2, s"$root/crashed", 2L, (_, _) => throw new IllegalStateException("sink down")))
+      assert(crash.getMessage == "sink down", m.name)
+      assert(new java.io.File(s"$root/crashed/epoch=2").isDirectory, s"${m.name}: delivered before storing")
+      val replayed = deliver(m, s"$root/crashed", 2, 2L)
+      val clean = epochs(m, s"$root/clean", 2)
+      assert(clean._2.nonEmpty && replayed == clean, s"${m.name}: replay $replayed vs $clean")
+    }
   }
 
   test("StreamDedup: a warm epoch scans the store once, builds no sketch, never shuffles the store") {
@@ -284,10 +396,11 @@ class StreamingSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("StreamDedup / StreamAsOf: job budget of a warm epoch") {
-    import graft.streaming.{StreamAsOf, StreamDedup}
+  test("streaming mirrors: job budget of a warm epoch") {
+    import graft.operators.Multimodal
+    import graft.streaming.{StreamAsOf, StreamDedup, StreamLinkage, StreamMediaDedup, StreamSemanticGate}
     val root = java.nio.file.Files.createTempDirectory("graft-job-budget").toString
-    def rows(epoch: Long) = spark.range(epoch * 2000L, (epoch + 1) * 2000L)
+    def rows(epoch: Long, n: Long = 2000L) = spark.range(epoch * n, (epoch + 1) * n)
     def dedup(epoch: Long): Long = StreamDedup.dedupBatch(
       rows(epoch).select(col("id").as("doc_id"), concat(lit("doc "), (col("id") % 1000).cast("string")).as("text")),
       col("text"), col("doc_id"), s"$root/digests", epoch, (_, _) => ())
@@ -296,16 +409,53 @@ class StreamingSpec extends SparkTestBase {
       rows(epoch).filter(col("id") % 4 === 0).select((col("id") % 50).as("k"), col("id").as("t"),
         (col("id") * 2).as("feat")),
       "k", "t", s"$root/obs", epoch, (_, _) => ())
-    (0L to 2L).foreach { e => dedup(e); enrich(e) }
-    var kept = -1L
-    val dedupJobs = jobsOf { kept = dedup(3L) }
-    assert(kept == 0L, s"a warm epoch of re-ingests kept $kept docs")
-    assert(dedupJobs <= 3, s"warm dedupBatch fired $dedupJobs jobs (budget 3)")
-    var enriched = -1L
-    val enrichJobs = jobsOf { enriched = enrich(3L) }
-    assert(enriched == 1500L, s"warm enrichBatch enriched $enriched rows")
-    assert(enrichJobs <= 6, s"warm enrichBatch fired $enrichJobs jobs (budget 6)")
-    info(s"warm epoch jobs: dedup $dedupJobs, as-of $enrichJobs")
+    def link(epoch: Long): Long = StreamLinkage.linkBatch(
+      rows(epoch, 200L).select(col("id"), concat(lit("key "), (col("id") % 150).cast("string")).as("s"),
+        (col("id") % 10).cast("string").as("blk")),
+      col("id"), col("s"), col("blk"), 0.95, s"$root/keys", epoch, (_, _) => ())
+    def gate(epoch: Long): Long = StreamSemanticGate.gateBatch(
+      rows(epoch, 200L).select(col("id").as("vec_id"),
+        array((0 until 4).map(j => sin(col("id") * (j + 1))): _*).as("v")),
+      col("vec_id"), col("v"), s"$root/vectors", epoch, (_, _) => ())
+    def fp(epoch: Long): Long = StreamMediaDedup.dedupFpBatch(
+      rows(epoch).select(col("id"), xxhash64(col("id") % 1000).as("simhash")),
+      s"$root/fps", epoch, (_, _) => ())
+    // every kind in every epoch, so no gate reads an empty side (AQE skips
+    // the stages behind an empty one, and how many depends on timing): a
+    // new image, one that epoch 0 accepted, a re-gained clip, a new GIF
+    // and a new MP3
+    val samples = Array.tabulate(400)(i => (Multimodal.syntheticSample(4L, i) >> 2).toShort)
+    def typed(epoch: Long): Long = StreamMediaDedup.typedDedupBatch(
+      Seq(
+        Multimodal.syntheticImage(epoch + 100, 24, 20, "png"),
+        Multimodal.syntheticImage(1L, 24, 20, "png"),
+        Multimodal.wavFromSamples(samples.map(x => (x + epoch).toShort), 16000),
+        Multimodal.syntheticGif(epoch + 7, 24, 20, 4),
+        Multimodal.syntheticMp3(epoch + 11, 6, 44100)
+      ).zipWithIndex.map { case (c, j) => Multimodal.MediaRow(epoch * 10 + j, "blob", c) }.toDS(),
+      s"$root/typed", epoch, (_, _) => ())
+    val sites = Seq[(String, Long => Long)]("dedup" -> dedup, "as-of" -> enrich, "linkage" -> link,
+      "semantic gate" -> gate, "media fp" -> fp, "typed media" -> typed)
+    (0L to 2L).foreach(e => sites.foreach(_._2(e)))
+    val warm = sites.map { case (name, site) =>
+      var n = -1L
+      val jobs = jobsOf { n = site(3L) }
+      name -> ((jobs, n))
+    }.toMap
+    info(s"warm epoch (jobs, count): $warm")
+    assert(warm("dedup")._2 == 0L, s"a warm epoch of re-ingests kept ${warm("dedup")._2} docs")
+    assert(warm("as-of")._2 == 1500L, s"warm enrichBatch enriched ${warm("as-of")._2} rows")
+    assert(warm("typed media")._2 == 3L, s"warm typedDedupBatch kept ${warm("typed media")._2} items")
+    // the last four read their stores with the written schema, so no
+    // schema-inference job runs (each was one job more before); linkage
+    // fires 34 or 38 jobs, as AQE skips stages behind an empty side or not
+    val budgets = Map("dedup" -> 3, "as-of" -> 6, "linkage" -> 38, "semantic gate" -> 15, "media fp" -> 10,
+      "typed media" -> 28)
+    val checks = new org.scalatest.Checkpoints.Checkpoint
+    budgets.foreach { case (name, budget) =>
+      checks(assert(warm(name)._1 <= budget, s"warm $name fired ${warm(name)._1} jobs (budget $budget)"))
+    }
+    checks.reportAll()
   }
 
   test("GraftService.wrapDedup: job budget of a warm epoch on binary payloads (default DedupConf)") {
