@@ -142,14 +142,14 @@ object sketch {
     * NULL out (a filter drops it). Build the set with [[broadcastSet]].
     */
   case class InBroadcastSet(
-      set: org.apache.spark.broadcast.Broadcast[java.util.Set[Any]],
+      set: org.apache.spark.broadcast.Broadcast[PackedSet],
       child: org.apache.spark.sql.catalyst.expressions.Expression
   ) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     import org.apache.spark.sql.types._
     override def dataType: DataType = BooleanType
     override def nullIntolerant: Boolean = true
-    override def nullSafeEval(v: Any): Any = set.value.contains(v)
+    override def nullSafeEval(v: Any): Any = set.value.values.contains(v)
     override def doGenCode(
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode
@@ -159,7 +159,7 @@ object sketch {
         val boxed =
           if (CodeGenerator.isPrimitiveType(child.dataType)) s"${CodeGenerator.boxedType(child.dataType)}.valueOf($v)"
           else v
-        s"${ev.value} = ((java.util.Set) $ref.value()).contains($boxed);"
+        s"${ev.value} = ((${classOf[PackedSet].getName}) $ref.value()).values().contains($boxed);"
       })
     }
     override protected def withNewChildInternal(
@@ -167,31 +167,50 @@ object sketch {
     ): InBroadcastSet = copy(child = c)
   }
 
+  /** A set of Catalyst values as [[broadcastSet]] ships it: the values
+    * as one [[org.apache.spark.sql.graftbridge.Bridge.packRows]] array of
+    * one-column rows, so the broadcast serializes and size-estimates one
+    * array instead of an object per value. Each JVM that probes it builds
+    * [[values]] from the array once, on its first probe.
+    */
+  final class PackedSet(dataType: org.apache.spark.sql.types.DataType, packed: Array[Byte]) extends Serializable {
+
+    /** The set [[InBroadcastSet]] probes: a hash set for strings,
+      * integral, boolean and date/time values, an ordering-backed tree set
+      * otherwise (binary, decimals, floats, structs).
+      */
+    @transient lazy val values: java.util.Set[Any] = {
+      import org.apache.spark.sql.types._
+      val set: java.util.Set[Any] = dataType match {
+        case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType | DateType | TimestampType |
+            TimestampNTZType =>
+          new java.util.HashSet[Any]()
+        case _ => new java.util.TreeSet[Any](org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dataType))
+      }
+      Bridge.unpackRows(packed, 1).foreach(r => set.add(r.get(0, dataType)))
+      set
+    }
+  }
+
   /** Broadcast `values` (Catalyst-internal values of `dataType`, as an
     * `InternalRow` holds them: `UTF8String`, boxed primitives, `Decimal`)
-    * as the set [[in_broadcast_set]] probes: a hash set for strings,
-    * integral, boolean and date/time values, an ordering-backed tree set
-    * otherwise (binary, decimals, floats, structs). Not an action: no job
-    * runs. `destroy()` it once the probing query has run.
+    * as the set [[in_broadcast_set]] probes ([[PackedSet]]). Not an
+    * action: no job runs. `destroy()` it once the probing query has run.
     */
   def broadcastSet(
       spark: org.apache.spark.sql.SparkSession,
       dataType: org.apache.spark.sql.types.DataType,
       values: Iterable[Any]
-  ): org.apache.spark.broadcast.Broadcast[java.util.Set[Any]] = {
-    import org.apache.spark.sql.types._
-    val set: java.util.Set[Any] = dataType match {
-      case StringType | LongType | IntegerType | ShortType | ByteType | BooleanType | DateType | TimestampType |
-          TimestampNTZType =>
-        new java.util.HashSet[Any]()
-      case _ => new java.util.TreeSet[Any](org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dataType))
-    }
+  ): org.apache.spark.broadcast.Broadcast[PackedSet] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{StructField, StructType}
     // NULL never matches (the probe is null-intolerant), so it is not stored
-    values.foreach(v => if (v != null) set.add(v))
-    spark.sparkContext.broadcast(set)
+    val rows = values.iterator.filter(_ != null).map(v => InternalRow(v))
+    val packed = Bridge.packRows(rows, StructType(Seq(StructField("v", dataType))))
+    spark.sparkContext.broadcast(new PackedSet(dataType, packed))
   }
 
   /** Column surface of [[InBroadcastSet]]. */
-  def in_broadcast_set(set: org.apache.spark.broadcast.Broadcast[java.util.Set[Any]], c: Column): Column =
+  def in_broadcast_set(set: org.apache.spark.broadcast.Broadcast[PackedSet], c: Column): Column =
     Bridge.column(InBroadcastSet(set, Bridge.expression(c)))
 }

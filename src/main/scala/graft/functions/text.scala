@@ -426,7 +426,7 @@ object text {
       val toks = s.split(space, -1)
       val n = toks.length - (k - 1)
       if (n <= 0) return new GenericArrayData(Array.empty[Any])
-      val md = java.security.MessageDigest.getInstance("MD5")
+      val md = FingerprintMd5.md5()
       val out = new Array[Any](n)
       var st = 0
       while (st < n) {
@@ -539,6 +539,19 @@ object text {
     override def nullIntolerant: Boolean = true
 
     /** Invoked from both eval and generated code. */
+    def compute(s: UTF8String): UTF8String = NormalizeText.compute(s)
+
+    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("normalizeText", this, classOf[NormalizeText].getName)
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.compute($v);")
+    }
+    override protected def withNewChildInternal(c: Expression): NormalizeText = copy(child = c)
+  }
+
+  object NormalizeText {
+
+    /** The normalization of `s`. */
     def compute(s: UTF8String): UTF8String = {
       val bytes = s.toLowerCase.getBytes
       val n = bytes.length
@@ -560,17 +573,103 @@ object text {
       // trailing run: pendingSpace is simply dropped (right trim)
       UTF8String.fromBytes(out, 0, o)
     }
-
-    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("normalizeText", this, classOf[NormalizeText].getName)
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.compute($v);")
-    }
-    override protected def withNewChildInternal(c: Expression): NormalizeText = copy(child = c)
   }
 
   def normalize_text(textCol: Column): Column =
     Bridge.column(NormalizeText(Bridge.expression(textCol)))
+
+  /** Content fingerprint `md5(normalize_text(text))` as 32 lowercase hex
+    * chars, in ONE pass: the [[NormalizeText]] walk lower-cases ASCII and
+    * collapses whitespace into a reused per-thread buffer that feeds a
+    * per-thread `MessageDigest` as it fills, and the digest is
+    * hex-encoded straight into the result. Spark's `md5` over the
+    * normalized string would materialize it, take a new `MessageDigest`
+    * per row and hex-encode through a temporary string. Input with any
+    * non-ASCII byte is hashed over [[NormalizeText.compute]] (Unicode
+    * lower-casing), so digests are bit-equal to
+    * `md5(normalize_text(text))` everywhere (asserted in
+    * ClusterCurationSpec), and stores written before stay valid.
+    */
+  case class FingerprintMd5(child: Expression)
+      extends UnaryExpression
+      with ImplicitCastInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(StringType)
+    override def dataType: DataType = StringType
+    override def nullIntolerant: Boolean = true
+
+    /** Invoked from both eval and generated code. */
+    def compute(s: UTF8String): UTF8String = {
+      val md = FingerprintMd5.md5()
+      val buf = FingerprintMd5.buffer.get()
+      val n = s.numBytes
+      var i = 0
+      var o = 0
+      var started = false
+      var pendingSpace = false
+      while (i < n) {
+        val b = s.getByte(i)
+        if (b < 0) { md.reset(); return FingerprintMd5.hex(md.digest(NormalizeText.compute(s).getBytes)) }
+        if (b == ' ' || b == '\t' || b == '\n' || b == '\r') {
+          pendingSpace = started // leading runs are trimmed, not emitted
+        } else {
+          if (o + 2 > buf.length) { md.update(buf, 0, o); o = 0 }
+          if (pendingSpace) { buf(o) = ' '; o += 1; pendingSpace = false }
+          buf(o) = if (b >= 'A' && b <= 'Z') (b + ('a' - 'A')).toByte else b
+          o += 1
+          started = true
+        }
+        i += 1
+      }
+      // trailing run: pendingSpace is simply dropped (right trim)
+      md.update(buf, 0, o)
+      FingerprintMd5.hex(md.digest())
+    }
+
+    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("fingerprintMd5", this, classOf[FingerprintMd5].getName)
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.compute($v);")
+    }
+    override protected def withNewChildInternal(c: Expression): FingerprintMd5 = copy(child = c)
+  }
+
+  /** The md5 state every md5 kernel here shares: one `MessageDigest` and
+    * one normalization buffer per thread, so no row takes a new digest.
+    */
+  object FingerprintMd5 {
+
+    /** Bytes of normalized text [[FingerprintMd5]] buffers per digest update. */
+    private[graft] val BufferBytes = 4096
+
+    private val digest = ThreadLocal.withInitial[java.security.MessageDigest](() =>
+      java.security.MessageDigest.getInstance("MD5"))
+
+    private val buffer = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](BufferBytes))
+
+    /** This thread's md5 `MessageDigest`, reset. */
+    def md5(): java.security.MessageDigest = {
+      val md = digest.get()
+      md.reset()
+      md
+    }
+
+    private val hexDigits = "0123456789abcdef".getBytes
+
+    /** `d` as lowercase hex, two chars per byte. */
+    def hex(d: Array[Byte]): UTF8String = {
+      val out = new Array[Byte](2 * d.length)
+      var i = 0
+      while (i < d.length) {
+        out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
+        out(2 * i + 1) = hexDigits(d(i) & 0xf)
+        i += 1
+      }
+      UTF8String.fromBytes(out)
+    }
+  }
+
+  def fingerprint_md5(textCol: Column): Column =
+    Bridge.column(FingerprintMd5(Bridge.expression(textCol)))
 
   /** Longest line length in CHARS (lines = `\n`-separated): one byte pass
     * counting UTF-8 char starts, max run between newlines. The
@@ -792,25 +891,12 @@ object text {
     override def nullIntolerant: Boolean = true
 
     private val space = UTF8String.fromString(" ")
-    private val hexDigits = "0123456789abcdef".getBytes
-
-    private def md5Hex(md: java.security.MessageDigest, b: Array[Byte]): UTF8String = {
-      val d = md.digest(b)
-      val out = new Array[Byte](32)
-      var i = 0
-      while (i < 16) {
-        out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-        out(2 * i + 1) = hexDigits(d(i) & 0xf)
-        i += 1
-      }
-      UTF8String.fromBytes(out)
-    }
 
     /** Invoked from both eval and generated code. */
     def compute(s: UTF8String): GenericArrayData = {
       val toks = s.split(space, -1)
       val n = toks.length
-      val md = java.security.MessageDigest.getInstance("MD5")
+      val md = FingerprintMd5.md5()
       // boundary after token e (0-based) for e in [w-1, n-2]
       val breaks = scala.collection.mutable.ArrayBuffer.empty[Int]
       var e = w - 1
@@ -826,7 +912,7 @@ object text {
         val end = if (c < breaks.length) breaks(c) else n - 1 // inclusive
         val chunk = UTF8String.concatWs(space, toks.slice(start, end + 1).toSeq: _*)
         out(c) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](start, end - start + 1, md5Hex(md, chunk.getBytes))
+          Array[Any](start, end - start + 1, FingerprintMd5.hex(md.digest(chunk.getBytes)))
         )
         start = end + 1
         c += 1

@@ -290,9 +290,9 @@ object Dedup {
         if (!smallest.containsKey(d) || (id != null && (cur == null || order.lt(id, cur))))
           smallest.put(d, id)
       }
-      val digests = smallest.keySet.asScala.filter(_ != null)
+      val digests = smallest.keySet.asScala
       val present = new java.util.HashSet[UTF8String]()
-      if (digests.nonEmpty) {
+      if (digests.exists(_ != null)) {
         import graft.functions.sketch
         val probe = sketch.broadcastSet(incoming.sparkSession, StringType, digests)
         try

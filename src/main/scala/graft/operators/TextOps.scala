@@ -87,12 +87,14 @@ object TextOps {
   /** Content fingerprint: md5 of whitespace-normalized lowercase text —
     * the exact-dedup key for a 100 TB corpus (hash once, group on 128-bit
     * key instead of full text; shuffle carries 16 bytes not documents).
-    * Normalization runs as the ONE-pass native kernel [[normalizeText]];
-    * [[fingerprintMd5Declarative]] remains as the oracle-portable spec
-    * (bit-equality asserted in ClusterCurationSpec).
+    * Normalization and hashing run as ONE native pass
+    * ([[graft.functions.text.FingerprintMd5]]: per-thread digest and
+    * buffer, hex written straight into the result), bit-equal to
+    * `md5(`[[normalizeText]]`(text))`; [[fingerprintMd5Declarative]]
+    * remains as the oracle-portable spec (bit-equality asserted in
+    * ClusterCurationSpec).
     */
-  def fingerprintMd5(text: Column): Column =
-    md5(normalizeText(text))
+  def fingerprintMd5(text: Column): Column = graft.functions.text.fingerprint_md5(text)
 
   /** Declarative spec of [[fingerprintMd5]] — what every dedup oracle
     * replays in DuckDB (`[ \t\n\r]+`, not `\s`: Java's `\s` adds

@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The epoch-partitioned parquet store every streaming mirror keeps its
@@ -27,6 +29,15 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * Delivery follows the usual `foreachBatch` semantics: make the sink
   * idempotent on `epoch` for end-to-end exactly-once.
   *
+  * An epoch whose rows are already on the driver is written by
+  * [[writeRows]] with no Spark job: one file into the hidden
+  * `<store>/_attempt-epoch-<n>` directory, which then replaces
+  * `epoch=<n>` by rename. Its name starts with `_` and holds no `=`, so
+  * Spark's file listing skips it: [[prior]] never reads a partial
+  * attempt, and the next write of the epoch removes what a crash before
+  * the rename left (a replay decides on the same batch, so it writes the
+  * same way).
+  *
   * The store is read with the schema it is written with, so a read costs
   * no schema-inference job; partition pruning on the `epoch` directory
   * column skips the later epochs without opening them.
@@ -41,6 +52,34 @@ object EpochStore {
     */
   def write(df: DataFrame, store: String, epoch: Long): Unit =
     df.write.mode("overwrite").parquet(dir(store, epoch))
+
+  /** Write `rows` (Catalyst-internal rows of `schema`) as epoch `epoch`
+    * of `store` from the calling thread, with no Spark job, replacing any
+    * earlier attempt at the same epoch: one parquet file through Spark's
+    * parquet writer (`options` as `DataFrameWriter.option`s) into the
+    * epoch's attempt directory, renamed onto the epoch's directory. No
+    * rows write a file with the schema and no rows.
+    */
+  def writeRows(
+      spark: SparkSession,
+      rows: Iterator[InternalRow],
+      schema: StructType,
+      store: String,
+      epoch: Long,
+      options: Map[String, String]
+  ): Unit = {
+    val (attempt, target) = (attemptDir(store, epoch), new Path(dir(store, epoch)))
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(attempt, true)
+    Bridge.writeParquetFile(spark, rows, schema, attempt.toString, options)
+    fs.delete(target, true)
+    if (!fs.rename(attempt, target)) throw new java.io.IOException(s"could not rename $attempt to $target")
+  }
+
+  /** The hidden directory [[writeRows]] writes epoch `epoch` of `store`
+    * into before renaming it.
+    */
+  private[graft] def attemptDir(store: String, epoch: Long): Path = new Path(store, s"_attempt-epoch-$epoch")
 
   /** The rows of `store`'s epochs before `epoch`, read as `schema` (the
     * columns the epochs are written with, without `epoch`). A missing

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.sketch
 import graft.operators.{Dedup, TextOps}
@@ -31,15 +30,15 @@ import graft.operators.{Dedup, TextOps}
   *      set of the batch digests, and NEVER shuffled; the driver keeps the
   *      smallest id per new digest on Catalyst-internal values, so
   *      within-batch copies collapse without a shuffle or a conversion;
-  *   3. overwrite the epoch's directory with the survivors' digests,
-  *      written as one file from a single partition that carries them as
-  *      one packed array of binary rows (one job; the count is known on
-  *      the driver);
+  *   3. write the survivors' digests from the driver as the epoch
+  *      ([[EpochStore.writeRows]]: one parquet file through Spark's
+  *      parquet writer, renamed onto the epoch's directory; no Spark job,
+  *      and no dictionary for `fp`);
   *   4. pass the surviving ROWS (original batch schema) to `accept`: the
   *      cached rows filtered by a broadcast set of the survivor ids, so the
   *      batch is not read again and no join runs.
   *
-  * A warm epoch costs 3 jobs before `accept`'s own.
+  * A warm epoch costs 2 jobs before `accept`'s own.
   *
   * Replays follow the [[EpochStore]] contract: exactly-once on the store,
   * at-least-once on `accept`.
@@ -52,11 +51,13 @@ import graft.operators.{Dedup, TextOps}
   * guard of 2 M (digest, id) pairs. By the row and object layouts, for
   * md5 digests and long ids at the bound: the pairs arrive as 60 bytes
   * each of packed rows (120 MB), the smallest-id map adds about 90 bytes
-  * per distinct digest (180 MB), and the set of batch digests (80 MB,
-  * ~70 MB more serialized for its broadcast) comes on top. When every
-  * digest is new, the survivors (56 MB), their packed digests (52 bytes
-  * each, 104 MB) and the survivor-id set (~100 MB) add the rest: about
-  * 0.7 GB at the bound. A batch with more rows than the guard is
+  * per distinct digest (180 MB), and the batch digests broadcast as
+  * packed rows (52 bytes each, 104 MB) come on top. When every digest is
+  * new, the survivors (56 MB), the parquet writer's buffered `fp` column
+  * (36 bytes each, 72 MB) and the survivor ids broadcast as packed rows
+  * (20 bytes each, 40 MB) add the rest: about 0.6 GB at the bound, plus
+  * the hash sets a probing JVM builds from the two broadcasts where the
+  * executors share the driver's JVM. A batch with more rows than the guard is
   * aggregated per digest on the executors first; one with more distinct
   * digests than the guard degrades to the plain anti-join (which
   * shuffles the store) rather than an unbounded driver footprint. No
@@ -79,6 +80,9 @@ object StreamDedup {
   /** The digest and id columns [[dedupBatch]] adds to the cached batch rows. */
   private val FpCol = "__graft_fp"
   private val IdCol = "__graft_id"
+
+  /** Digests are unique by construction, so a dictionary never pays. */
+  private val NoFpDictionary = Map("parquet.enable.dictionary#fp" -> "false")
 
   /** The driver guard [[dedupBatch]] decides within: at most this many
     * distinct digests per batch (see [[graft.operators.Dedup.incrementalOnDriver]]).
@@ -125,7 +129,9 @@ object StreamDedup {
       // store first, then delivery (the EpochStore contract)
       Dedup.incrementalOnDriver(rows, col(FpCol), col(IdCol), refFp, guard) match {
         case Some(survivors) =>
-          writeDigests(spark, survivors.iterator.map(_._1), EpochStore.dir(digestStore, epoch))
+          val row = new GenericInternalRow(1)
+          val digests = survivors.iterator.map { case (d, _) => row.update(0, d); row }
+          EpochStore.writeRows(spark, digests, StoreSchema, digestStore, epoch, NoFpDictionary)
           val ids = sketch.broadcastSet(spark, rows.schema(IdCol).dataType, survivors.map(_._2))
           try accept(rows.filter(sketch.in_broadcast_set(ids, col(IdCol))).drop(FpCol, IdCol), epoch)
           finally ids.destroy()
@@ -143,25 +149,6 @@ object StreamDedup {
           } finally releaseSurvivors()
       }
     } finally release()
-  }
-
-  /** Overwrite `dir` with `digests` as one parquet file, written from a
-    * single partition that carries them as one packed array of binary
-    * rows (no per-row conversion, no local relation to plan).
-    */
-  private def writeDigests(spark: SparkSession, digests: Iterator[UTF8String], dir: String): Unit = {
-    val writer = new UnsafeRowWriter(1)
-    val packed = Bridge.packRows(
-      digests.map { d =>
-        writer.reset()
-        writer.zeroOutNullBytes()
-        if (d == null) writer.setNullAt(0) else writer.write(0, d)
-        writer.getRow
-      },
-      StoreSchema
-    )
-    val rdd = spark.sparkContext.parallelize(Seq(packed), 1).flatMap(Bridge.unpackRows(_, 1))
-    Bridge.ofInternalRows(spark, rdd, StoreSchema).write.mode("overwrite").parquet(dir)
   }
 
   /** Wrap an epoch-aware sink with cross-batch exact dedup — attach via

@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
@@ -99,6 +102,31 @@ object Bridge {
   def collectInternal(df: DataFrame): Array[InternalRow] = {
     val qe = classic(df).queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** Write `rows` (Catalyst-internal rows of `schema`) as ONE parquet
+    * file in directory `dir`, from the calling thread: no Spark job, no
+    * output committer. The file goes through Spark's own parquet writer
+    * (`ParquetFileFormat.prepareWrite` and its output writer) with the
+    * session's codec and parquet settings, `options` on top as
+    * `DataFrameWriter.option`s. The path is `dir`'s file system's, so
+    * HDFS and object stores work as for any parquet write.
+    */
+  def writeParquetFile(
+      spark: SparkSession,
+      rows: Iterator[InternalRow],
+      schema: StructType,
+      dir: String,
+      options: Map[String, String]
+  ): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(session, job, options, schema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file = s"$dir/part-00000-${java.util.UUID.randomUUID()}${factory.getFileExtension(context)}"
+    val writer = factory.newInstance(file, schema, context)
+    try rows.foreach(writer.write)
+    finally writer.close()
   }
 
   /** Pack `rows` (of `schema`) into one byte array: each row's length,

@@ -483,6 +483,65 @@ class ClusterCurationSpec extends SparkTestBase {
     fps.foreach(r => assert(r.getString(0) == r.getString(1)))
   }
 
+  test("fingerprintMd5 (native) is bit-equal to its declarative spec: long, non-ASCII, whitespace, hex payloads") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.text.{FingerprintMd5, NormalizeText}
+    val buf = FingerprintMd5.BufferBytes
+    val samples = Seq(
+      "", " ", "x", "Hello  World", "ALL CAPS", "  \t\n\r  ",
+      // each of the four whitespace bytes alone, leading, inner and trailing
+      " a b ", "\ta\tb\t", "\na\nb\n", "\ra\rb\r", "a \t\n\r b\r\n\t c",
+      // \u000B and \f are not whitespace here
+      "a\u000Bb\fc",
+      // longer than the buffer, runs and letters straddling its boundaries
+      "A" * (buf - 1), "B" * buf, "c" * (buf + 1), ("Ab" + " " * 5 + "\t") * (buf / 2),
+      ("word " * (3 * buf / 5 + 7)).toUpperCase, " " * (buf + 3) + "Z" + "\n" * (buf + 3),
+      // non-ASCII, also first met past a full buffer
+      "Ünïcödé ÉßÀ  Grüße", "naïve \t caféé", "A" * (2 * buf + 5) + " Ü", "日本語  テキスト"
+    )
+    val df = (samples.map(Option(_)) :+ Option.empty[String]).toDF("text")
+      .union(Seq("frame 1", "FRAME 2 \u0000\u00ff", "Ü" * 900).toDF("text")
+        .select(hex(encode(col("text"), "UTF-8")).as("text")))
+    def pairs(): Array[(String, String, String)] = df
+      .select(
+        TextOps.fingerprintMd5(col("text")),
+        md5(TextOps.normalizeText(col("text"))),
+        TextOps.fingerprintMd5Declarative(col("text")))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    def check(mode: String, got: Array[(String, String, String)]): Unit = {
+      assert(got.length == samples.size + 4, mode)
+      got.zipWithIndex.foreach { case ((native, composed, twin), i) =>
+        assert(native == composed && native == twin, s"$mode, row $i: native=$native md5(normalize)=$composed twin=$twin")
+      }
+      assert(got(samples.size) == ((null, null, null)), s"$mode: null in, null out")
+    }
+    check("whole-stage codegen", pairs())
+    val interpreted = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check("NO_CODEGEN", pairs())
+    finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
+    // eval on the calling thread agrees with Spark's md5 over the normalization
+    samples.foreach { t =>
+      val native = FingerprintMd5(Literal(t)).eval(null).toString
+      val want = org.apache.commons.codec.digest.DigestUtils.md5Hex(NormalizeText.compute(UTF8String.fromString(t)).getBytes)
+      assert(native == want, s"eval of a ${t.length}-char sample")
+    }
+    // 100k mixed rows on 4 threads at once, compared row by row
+    val rows = spark.range(0L, 100000L, 1L, 8).select(
+      concat(
+        expr("repeat('Ab \t', cast(id % 1500 as int))"),
+        col("id").cast("string"),
+        when(col("id") % 7 === 0, lit(" Ü\r\n")).otherwise(lit("\n X ")),
+        expr("repeat(' ', cast(id % 3 as int))")
+      ).as("text"))
+      .select(TextOps.fingerprintMd5(col("text")).as("native"), TextOps.fingerprintMd5Declarative(col("text")).as("twin"))
+    assert(rows.filter(not(col("native") <=> col("twin"))).count() == 0L)
+    assert(rows.filter(length(col("native")) === 32).count() == 100000L)
+  }
+
   test("normalizeText: jittered re-crawls collapse onto the source digest") {
     import spark.implicits._
     val base = Seq((1L, "the quick brown fox"), (2L, "pack my box with five dozen jugs"))

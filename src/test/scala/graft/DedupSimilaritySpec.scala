@@ -205,6 +205,37 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(byString.map(_.map(_._2)).contains(Seq(org.apache.spark.unsafe.types.UTF8String.fromString("a"))))
   }
 
+  test("in_broadcast_set: exact membership for hashed and ordered types, codegen and interpreted") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    import graft.functions.sketch
+    val values = spark.range(0L, 30L).select(
+      col("id"),
+      col("id").cast("string").as("s"),
+      col("id").as("l"),
+      col("id").cast("int").as("i"),
+      date_add(lit("2020-01-01").cast("date"), col("id").cast("int")).as("d"),
+      encode(col("id").cast("string"), "UTF-8").as("b"),
+      (col("id") / 4).cast("decimal(10,2)").as("dec"),
+      (col("id") / 4.0).as("f"),
+      struct(col("id"), col("id").cast("string").as("t")).as("st"))
+    // one row of NULLs, which never matches
+    val df = values.unionByName(values.limit(1).select(values.columns.map(c => lit(null).cast(values.schema(c).dataType).as(c)): _*))
+    def probe(c: String): Seq[Long] = {
+      val dt = df.schema(c).dataType
+      val members = Bridge.collectInternal(df.filter(col("id") % 3 === 0).select(col(c))).map(_.copy().get(0, dt))
+      val set = sketch.broadcastSet(spark, dt, members.toSeq :+ null)
+      try df.filter(sketch.in_broadcast_set(set, col(c))).select(col("id")).collect().map(_.getLong(0)).toSeq.sorted
+      finally set.destroy()
+    }
+    val want = (0L until 30L by 3L).toSeq
+    val columns = df.columns.filter(_ != "id").toSeq
+    columns.foreach(c => assert(probe(c) == want, s"$c under codegen"))
+    val interpreted = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try columns.foreach(c => assert(probe(c) == want, s"$c interpreted"))
+    finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("quantizeInt8: bounds, zero vector, dequantization error within scale/2") {
     import spark.implicits._
     val df = Seq(

@@ -736,7 +736,7 @@ class ServiceSpec extends SparkTestBase {
     info(s"jobs per delivered micro-batch: ${perBatch.mkString(", ")}")
     assert(perBatch.size >= 2, s"expected several delivered batches: $perBatch")
     // warm: every batch after the first
-    assert(perBatch.tail.max <= 5, s"a warm delivered epoch fired ${perBatch.tail.max} jobs (budget 5): $perBatch")
+    assert(perBatch.tail.max <= 4, s"a warm delivered epoch fired ${perBatch.tail.max} jobs (budget 4): $perBatch")
   }
 
   test("a warm service micro-batch leaves the session CacheManager empty, during it and after it") {
