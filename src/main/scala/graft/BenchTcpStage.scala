@@ -359,13 +359,8 @@ object BenchTcpStage {
     var errFile: java.io.File = null
     try {
       val javaBin = new java.io.File(new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
-      // forward the fan-out experiment flag so a parent-side override is
-      // not silently dropped in the forked path
-      val extraProps = Option(System.getProperty("graft.tcp.parts")).toSeq
-        .map(v => s"-Dgraft.tcp.parts=$v")
       val pb = new ProcessBuilder(
-        (Seq(javaBin, "-Xmx24g") ++ extraProps ++
-          Seq("-cp", System.getProperty("java.class.path"), mainClass) ++ args): _*
+        (Seq(javaBin, "-Xmx24g", "-cp", System.getProperty("java.class.path"), mainClass) ++ args): _*
       )
       errFile = java.io.File.createTempFile("graft-bench-child-", ".stderr")
       pb.redirectError(errFile)

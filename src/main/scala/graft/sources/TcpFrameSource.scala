@@ -240,18 +240,6 @@ private[sources] object TcpFrameStream {
   def defaultBufferCap: Long =
     java.lang.Long.getLong("graft.tcp.defaultBufferBytes", DefaultMaxBufferedBytes)
 
-  /** Partition fan-out per micro-batch. With the zero-copy
-    * [[TcpChunkHandoff]] in local mode, fan-out costs nothing on the
-    * driver (descriptors are two longs), so batches split to the
-    * session's default parallelism and row decoding runs on every core.
-    * The round-2 finding that "4 beats 32" was an artifact of the
-    * serialized-descriptor path (task bytes serialized sequentially on
-    * the driver) and no longer holds — see ROUND_NOTES round-3 fan-out
-    * table. Override for experiments via -Dgraft.tcp.parts.
-    */
-  def targetPartitions(default: Int): Int =
-    Integer.getInteger("graft.tcp.parts", default).intValue()
-
   /** The largest offset this source ever planned, read from the query's
     * offset write-ahead log — 0 for a fresh query. `sourceDir` is the
     * `<checkpoint>/sources/<id>` path the engine hands to
@@ -301,10 +289,6 @@ private[sources] class TcpFrameStream(
     maxBufferedBytes: Option[Long] = None,
     checkpointLocation: Option[String] = None
 ) extends MicroBatchStream {
-
-  private val debug = java.lang.Boolean.getBoolean("graft.tcp.debug")
-  private def dbg(msg: => String): Unit =
-    if (debug) System.err.println(s"[graft-tcp-dbg:$port] $msg")
 
   private var lastPlannedEnd = 0L // chunk index of the previous batch end
   private var bufferedBytes = 0L // blob bytes currently in `log` (guarded by log lock)
@@ -445,13 +429,9 @@ private[sources] class TcpFrameStream(
   acceptThread.setDaemon(true)
   acceptThread.start()
 
-  override def initialOffset(): Offset = {
-    dbg(s"initialOffset: shift=$shift trimmed=$trimmed log=${log.length}")
-    FrameOffset(0L)
-  }
+  override def initialOffset(): Offset = FrameOffset(0L)
   override def latestOffset(): Offset = log.synchronized {
     val head = logicalHead
-    dbg(s"latestOffset: head=$head shift=$shift trimmed=$trimmed log=${log.length}")
     maxFramesPerTrigger match {
       case None => FrameOffset(head)
       case Some(cap) =>
@@ -474,7 +454,6 @@ private[sources] class TcpFrameStream(
     // us a LARGER restored offset than the construction-time read saw
     // (e.g. an offsets/ write racing the read), anchor to it — guarded to
     // pre-first-plan so a planned batch's offsets are never reinterpreted.
-    dbg(s"deserializeOffset($v): lastPlannedEnd=$lastPlannedEnd shift=$shift trimmed=$trimmed log=${log.length}")
     if (lastPlannedEnd == 0L) shift = math.max(shift, v - trimmed)
     FrameOffset(v)
   }
@@ -485,7 +464,6 @@ private[sources] class TcpFrameStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[FrameOffset].index
     val e0 = end.asInstanceOf[FrameOffset].index
-    dbg(s"planInputPartitions($s0, $e0): shift=$shift trimmed=$trimmed log=${log.length}")
     lastPlannedEnd = e0
     val chunks = log.synchronized {
       val s = math.max(s0 - shift - trimmed, 0L).toInt
@@ -507,7 +485,7 @@ private[sources] class TcpFrameStream(
         (sc.isLocal, sc.defaultParallelism)
       } catch { case _: Throwable => (false, 8) }
     val totalBytes = chunks.map(_.blob.length.toLong).sum
-    val targetParts = TcpFrameStream.targetPartitions(if (isLocal) defaultPar else 8)
+    val targetParts = if (isLocal) defaultPar else 8
     val budget = math.max(1L, totalBytes / targetParts + 1)
     val parts = ArrayBuffer.empty[ArrayBuffer[FrameChunk]]
     var cur = ArrayBuffer.empty[FrameChunk]
@@ -556,7 +534,6 @@ private[sources] class TcpFrameStream(
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[FrameOffset].index
-    dbg(s"commit($e): shift=$shift trimmed=$trimmed log=${log.length}")
     log.synchronized {
       val drop = math.min((e - shift - trimmed).toInt, log.length)
       if (drop > 0) {

@@ -27,7 +27,11 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *     and each is overwritten when its epoch id comes round again.
   *
   * Delivery follows the usual `foreachBatch` semantics: make the sink
-  * idempotent on `epoch` for end-to-end exactly-once.
+  * idempotent on `epoch` for end-to-end exactly-once. A frame a mirror
+  * reads more than once within its epoch is held with
+  * [[org.apache.spark.sql.graftbridge.Bridge.cacheRows]], never
+  * `Dataset.persist`, so an epoch leaves nothing in the session's
+  * `CacheManager` and releases its cache even when delivery throws.
   *
   * An epoch whose rows are already on the driver is written by
   * [[writeRows]] with no Spark job: one file into the hidden

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.AsOfJoin
 
@@ -71,14 +72,10 @@ object StreamAsOf {
     val enriched =
       if (chunked) AsOfJoin.asofBackwardChunked(events, allObs, byCol, timeCol)
       else AsOfJoin.asofBackwardNative(events, allObs, byCol, timeCol)
-    val out = enriched.persist()
-    try {
+    Bridge.cacheRows(enriched) { out =>
       val n = out.count()
       accept(out, epoch)
       n
-    } finally {
-      out.unpersist()
-      ()
     }
   }
 }

@@ -123,9 +123,7 @@ object StreamDedup {
     // the batch rows with their digest and id, cached as binary rows: the
     // decision's first job fills the cache and the delivered rows are read
     // back from it
-    val (rows, release) =
-      Bridge.cacheRows(batch.select(col("*"), TextOps.fingerprintMd5(text).as(FpCol), idCol.as(IdCol)))
-    try {
+    Bridge.cacheRows(batch.select(col("*"), TextOps.fingerprintMd5(text).as(FpCol), idCol.as(IdCol))) { rows =>
       // store first, then delivery (the EpochStore contract)
       Dedup.incrementalOnDriver(rows, col(FpCol), col(IdCol), refFp, guard) match {
         case Some(survivors) =>
@@ -139,16 +137,15 @@ object StreamDedup {
         case None =>
           // past the driver guard: the plain anti-join, which shuffles the
           // store
-          val (survivors, releaseSurvivors) = Bridge.cacheRows(Dedup.incrementalOnDigests(rows, text, col(IdCol), refFp))
-          try {
+          Bridge.cacheRows(Dedup.incrementalOnDigests(rows, text, col(IdCol), refFp)) { survivors =>
             val written = Observation()
             EpochStore.write(survivors.select(col("fp")).observe(written, count(lit(1)).as("rows")), digestStore, epoch)
             val kept = rows.join(survivors.select(col("keep_id")), col(IdCol) === col("keep_id"), "left_semi")
             accept(kept.drop(FpCol, IdCol), epoch)
             written.get("rows").asInstanceOf[Long]
-          } finally releaseSurvivors()
+          }
       }
-    } finally release()
+    }
   }
 
   /** Wrap an epoch-aware sink with cross-batch exact dedup — attach via

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.{ConnectedComponents, EditDistance}
 
@@ -106,15 +107,11 @@ object StreamLinkage {
         col("__cent").isNotNull.as("matched_store"),
         col("__centN").as("n_matched_entities")
       )
-      .persist()
-    try {
+    Bridge.cacheRows(assigned) { assigned =>
       EpochStore.write(assigned.select(col("id"), col("block"), col("s"), col("entity")), keyStore, epoch)
       val n = assigned.count()
       accept(assigned, epoch)
       n
-    } finally {
-      assigned.unpersist()
-      ()
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.{Dedup, Multimodal}
 
@@ -52,8 +53,7 @@ object StreamMediaDedup {
       blocks: Int = 4
   ): Long = {
     val spark = fps.sparkSession
-    val b = fps.select(col("id"), col("simhash")).persist()
-    try {
+    Bridge.cacheRows(fps.select(col("id"), col("simhash"))) { b =>
       // store first, then the gate (the EpochStore contract)
       EpochStore.write(b, fpStore, epoch)
       val prior = EpochStore.prior(spark, fpStore, b.schema, epoch)
@@ -69,19 +69,11 @@ object StreamMediaDedup {
       val withinDup = Dedup
         .pairsFromFps(b, maxHamming, blocks)
         .select(col("id_b").as("id"))
-      val survivors = b.join(crossDup.unionByName(withinDup).distinct(), Seq("id"), "left_anti")
-      val out = survivors.persist()
-      try {
+      Bridge.cacheRows(b.join(crossDup.unionByName(withinDup).distinct(), Seq("id"), "left_anti")) { out =>
         val n = out.count()
         accept(out, epoch)
         n
-      } finally {
-        out.unpersist()
-        ()
       }
-    } finally {
-      b.unpersist()
-      ()
     }
   }
 
@@ -126,11 +118,7 @@ object StreamMediaDedup {
   ): Long = {
     val spark = media.sparkSession
     import spark.implicits._
-    val typed = media
-      .mapPartitions(_.map(Multimodal.typeAndFingerprint(_, normalizeRate)))
-      .toDF()
-      .persist()
-    try {
+    Bridge.cacheRows(media.mapPartitions(_.map(Multimodal.typeAndFingerprint(_, normalizeRate))).toDF()) { typed =>
       val nullBin = lit(null).cast("binary")
       val scalarUnits = typed
         .filter(col("fp").isNotNull)
@@ -147,8 +135,7 @@ object StreamMediaDedup {
         .filter(col("fp").isNull && col("frame_hashes").isNull && col("digest").isNotNull)
         .select(col("doc_id").as("id"), col("kind"), lit(null).cast("long").as("simhash"),
           lit(-1).as("frame_idx"), col("digest"))
-      val units = scalarUnits.unionByName(videoUnits).unionByName(digestUnits).persist()
-      try {
+      Bridge.cacheRows(scalarUnits.unionByName(videoUnits).unionByName(digestUnits)) { units =>
         // store first, then the gates (the EpochStore contract)
         EpochStore.write(units, fpStore, epoch)
         val prior = EpochStore.prior(spark, fpStore, units.schema, epoch)
@@ -226,22 +213,12 @@ object StreamMediaDedup {
             col("doc_id"), col("kind"), col("byte_len"), col("width"), col("height"),
             col("n_frames"), col("sample_rate"), col("n_samples")
           )
-          .persist()
-        try {
+        Bridge.cacheRows(survivors) { survivors =>
           val n = survivors.count()
           accept(survivors, epoch)
           n
-        } finally {
-          survivors.unpersist()
-          ()
         }
-      } finally {
-        units.unpersist()
-        ()
       }
-    } finally {
-      typed.unpersist()
-      ()
     }
   }
 }

@@ -179,10 +179,11 @@ object StreamRuntime {
     * sink can overwrite instead of append — Spark's documented
     * foreachBatch contract).
     *
-    * The batch is held as a row cache ([[org.apache.spark.sql.graftbridge.Bridge.cacheRows]]):
-    * its rows stay in Spark's binary row format, packed once into arrays
-    * of an RDD persisted MEMORY_AND_DISK, and released when the last sink
-    * returns.
+    * The batch is lent to the sinks as a row cache
+    * ([[org.apache.spark.sql.graftbridge.Bridge.cacheRows]]): its rows stay
+    * in Spark's binary row format, packed once into arrays of an RDD
+    * persisted MEMORY_AND_DISK, and released when the last sink returns or
+    * throws.
     * `cache::send` is "a simple proxy, it does not actually hold any data"
     * (cache.hpp:65-76); the nearest Spark equivalent keeps the rows only
     * for the batch's own sinks, without re-encoding them as compressed
@@ -205,9 +206,7 @@ object StreamRuntime {
       sinks: Map[String, (DataFrame, Long) => Unit]
   ): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, epoch: Long) =>
-      val (rows, release) = Bridge.cacheRows(batch)
-      try runAll(sinks.values.toSeq.map(write => () => write(rows, epoch)))
-      finally release()
+      Bridge.cacheRows(batch)(rows => runAll(sinks.values.toSeq.map(write => () => write(rows, epoch))))
     }
 
   /** Run `tasks` concurrently — the first on the calling thread, each

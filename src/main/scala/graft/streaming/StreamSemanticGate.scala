@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.Similarity
 
@@ -44,10 +45,8 @@ object StreamSemanticGate {
     val spark = batch.sparkSession
     val b = batch.select(idCol.as("vec_id"), transform(vecCol, _.cast("double")).as("v"))
     val ref = EpochStore.prior(spark, vectorStore, b.schema, epoch)
-    val verdicts = Similarity
-      .incrementalSemantic(b, col("vec_id"), col("v"), ref, col("vec_id"), col("v"), threshold)
-      .persist()
-    try {
+    val verdicts = Similarity.incrementalSemantic(b, col("vec_id"), col("v"), ref, col("vec_id"), col("v"), threshold)
+    Bridge.cacheRows(verdicts) { verdicts =>
       val kept = b.join(
         verdicts.filter(col("kept")).select(col("id").as("__keep")),
         col("vec_id") === col("__keep"),
@@ -58,9 +57,6 @@ object StreamSemanticGate {
       val n = verdicts.filter(col("kept")).count()
       accept(kept, epoch)
       n
-    } finally {
-      verdicts.unpersist()
-      ()
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.ChatOps
 
@@ -74,8 +75,7 @@ object StreamSft {
       roles,
       keep = Seq(col("__score"))
     )
-    val massed = ChatOps.lossMass(parsed, lossRole).persist()
-    try {
+    Bridge.cacheRows(ChatOps.lossMass(parsed, lossRole)) { massed =>
       val supervised = massed.filter(col("loss_tokens") > 0)
       val nDropped = massed.count() - supervised.count()
       val cands = supervised.select(
@@ -96,9 +96,6 @@ object StreamSft {
         acceptPairs
       )
       (nPairs, nDropped)
-    } finally {
-      massed.unpersist()
-      ()
     }
   }
 

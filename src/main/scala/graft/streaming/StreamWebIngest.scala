@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.{CorpusOps, Robots}
 
@@ -49,47 +50,45 @@ object StreamWebIngest {
       accept: (DataFrame, Long) => Unit
   ): (Long, Long, Long, Long) = {
     // one parse, reused by every downstream pass (count, gate, dedup)
-    val parsed = CorpusOps.csvIngest(batch, lineIdCol, lineCol).persist()
-    // one aggregation pass for both drop-class counts
-    val counts = parsed
-      .agg(
-        sum(col("is_corrupt").cast("long")).as("c"),
-        sum((!col("is_corrupt") && col("doc_id").isNull).cast("long")).as("i")
-      )
-      .head()
-    val corrupt = Option(counts.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val invalid = Option(counts.get(1)).fold(0L)(_.asInstanceOf[Long])
-    val withUrl = parsed
-      .filter(!col("is_corrupt") && col("doc_id").isNotNull)
-      .select(
-        col("line_id"),
-        col("doc_id"),
-        col("text"),
-        col("lang"),
-        domainCol.as("__dom"),
-        pathCol.as("__path")
-      )
-    val allowed = Robots
-      .fetchGate(
-        withUrl, col("line_id"), col("__dom"), col("__path"),
-        robots, robotsDomainCol, robotsTxtCol, agent
-      )
-      .filter(col("allowed"))
-      .select(col("url_id").as("__ok"))
-    val fetchable = withUrl
-      .join(allowed, withUrl("line_id") === col("__ok"), "left_semi")
-      .persist()
-    val blocked = withUrl.count() - fetchable.count()
-    val accepted = StreamDedup.dedupBatch(
-      fetchable.select(col("doc_id"), col("text"), col("lang")),
-      col("text"),
-      col("doc_id"),
-      digestStore,
-      epoch,
-      accept
-    )
-    parsed.unpersist()
-    fetchable.unpersist()
-    (accepted, corrupt, invalid, blocked)
+    Bridge.cacheRows(CorpusOps.csvIngest(batch, lineIdCol, lineCol)) { parsed =>
+      // one aggregation pass for both drop-class counts
+      val counts = parsed
+        .agg(
+          sum(col("is_corrupt").cast("long")).as("c"),
+          sum((!col("is_corrupt") && col("doc_id").isNull).cast("long")).as("i")
+        )
+        .head()
+      val corrupt = Option(counts.get(0)).fold(0L)(_.asInstanceOf[Long])
+      val invalid = Option(counts.get(1)).fold(0L)(_.asInstanceOf[Long])
+      val withUrl = parsed
+        .filter(!col("is_corrupt") && col("doc_id").isNotNull)
+        .select(
+          col("line_id"),
+          col("doc_id"),
+          col("text"),
+          col("lang"),
+          domainCol.as("__dom"),
+          pathCol.as("__path")
+        )
+      val allowed = Robots
+        .fetchGate(
+          withUrl, col("line_id"), col("__dom"), col("__path"),
+          robots, robotsDomainCol, robotsTxtCol, agent
+        )
+        .filter(col("allowed"))
+        .select(col("url_id").as("__ok"))
+      Bridge.cacheRows(withUrl.join(allowed, withUrl("line_id") === col("__ok"), "left_semi")) { fetchable =>
+        val blocked = withUrl.count() - fetchable.count()
+        val accepted = StreamDedup.dedupBatch(
+          fetchable.select(col("doc_id"), col("text"), col("lang")),
+          col("text"),
+          col("doc_id"),
+          digestStore,
+          epoch,
+          accept
+        )
+        (accepted, corrupt, invalid, blocked)
+      }
+    }
   }
 }

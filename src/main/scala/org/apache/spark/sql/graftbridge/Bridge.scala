@@ -7,7 +7,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -65,30 +67,43 @@ object Bridge {
     */
   private val CacheChunkBytes = 1 << 20
 
-  /** Cache `df` as binary rows and return the frame over them with the
-    * handle that releases them. Each partition's `UnsafeRow` bytes are
-    * packed into arrays of about 1 MB ([[packRows]]) in an RDD persisted
-    * MEMORY_AND_DISK, and read back as rows pointing into those arrays.
-    * Unlike `Dataset.persist()` the rows are not re-encoded as compressed
-    * column batches; unlike a cache of row objects, storing a partition
-    * costs no per-row allocation and no per-row size estimate. The cache
-    * never enters the session's `CacheManager`, so no other query of the
-    * session can match it. The first job that reads the frame fills the
-    * cache; lineage stays, so a lost block is recomputed rather than
-    * failing the job.
+  /** Lend `f` a frame over `df`'s rows cached as binary rows, and release
+    * the cache when `f` returns or throws. Each partition's `UnsafeRow`
+    * bytes are packed into arrays of about 1 MB ([[packRows]]) in an RDD
+    * persisted MEMORY_AND_DISK, and read back as rows pointing into those
+    * arrays. Unlike `Dataset.persist()` the rows are not re-encoded as
+    * compressed column batches; unlike a cache of row objects, storing a
+    * partition costs no per-row allocation and no per-row size estimate.
+    * The cache never enters the session's `CacheManager`, so no other
+    * query of the session can match it, and nothing of it outlives `f`.
+    * The first job that reads the frame fills the cache; lineage stays,
+    * so a lost block is recomputed rather than failing the job.
+    *
+    * The frame is a `LogicalRDD` whose size estimate is `df`'s optimized
+    * plan's `sizeInBytes`, the estimate an unfilled `InMemoryRelation`
+    * reports, so joins over it plan as they do over a persisted frame
+    * (without it the size would be `spark.sql.defaultSizeInBytes`, and a
+    * small side would never broadcast). Only the size is carried: origin
+    * constraints can name attributes absent from the output, which crashes
+    * a later union over the frame (see
+    * [[graft.runtime.GraftCheckpoint.pin]]).
     */
-  def cacheRows(df: DataFrame): (DataFrame, () => Unit) = {
+  def cacheRows[T](df: DataFrame)(f: DataFrame => T): T = {
+    val qe = classic(df).queryExecution
     val schema = df.schema
-    val chunks = classic(df).queryExecution.toRdd
+    val chunks = qe.toRdd
       .mapPartitions(rows => Iterator.continually(rows).takeWhile(_.hasNext).map(packRows(_, schema, CacheChunkBytes)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val rows = chunks.flatMap(unpackRows(_, schema.length))
-    (ofInternalRows(df.sparkSession, rows, schema), () => { chunks.unpersist(blocking = false); () })
+    try {
+      val stats = Statistics(sizeInBytes = qe.optimizedPlan.stats.sizeInBytes)
+      val plan = LogicalRDD(DataTypeUtils.toAttributes(schema), chunks.flatMap(unpackRows(_, schema.length)))(
+        qe.sparkSession, Some(stats), None)
+      f(ofRows(df.sparkSession, plan))
+    } finally {
+      chunks.unpersist(blocking = false)
+      ()
+    }
   }
-
-  /** A DataFrame over Catalyst-internal rows of `schema`. */
-  def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** The Catalyst-internal rows of `df`, as its physical plan produces
     * them (no conversion to external `Row`s). Not an action.

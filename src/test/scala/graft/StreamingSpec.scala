@@ -230,6 +230,70 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  /** Every per-epoch entry point that holds frames for its epoch: the six
+    * [[mirrors]], plus `StreamSft.sftBatch` and `StreamWebIngest.ingestBatch`
+    * on inputs 0 and 1 of fixtures of their own (counting pairs and
+    * accepted docs; their `rows` are unused).
+    */
+  private lazy val epochSites: Seq[Mirror] = {
+    import graft.streaming.{StreamSft, StreamWebIngest}
+    val transcripts = Vector(
+      Seq((1L, "user: tide tables\nassistant: high at noon", 0.9), (2L, "user: tide tables\nassistant: no", 0.1)),
+      Seq((3L, "user: tide tables\nassistant: low at six", 0.8), (4L, "user: star charts\nassistant: orion", 0.7),
+        (5L, "user: star charts\nassistant: ?", 0.2)))
+    val lines = Vector(
+      Seq(1L -> "1,\"alpha text\",en,10", 2L -> "2,\"beta text\",en,9", 3L -> "3,\"gamma\",fr,BAD"),
+      Seq(4L -> "1,\"alpha text\",en,10", 5L -> "5,\"delta text\",de,10"))
+    val robots = Seq(("d", "User-agent: *\nDisallow: /private\n")).toDF("domain", "txt")
+    mirrors ++ Seq(
+      Mirror("StreamSft.sftBatch",
+        (i, store, epoch, accept) => StreamSft.sftBatch(
+          transcripts(i).toDF("cand_id", "text", "score"), "text", col("cand_id"), col("score"), store, epoch,
+          accept)._1,
+        _ => Nil),
+      Mirror("StreamWebIngest.ingestBatch",
+        (i, store, epoch, accept) => StreamWebIngest.ingestBatch(
+          lines(i).toDF("lid", "line"), col("lid"), col("line"), lit("d"),
+          concat(when(col("doc_id") === 2, lit("/private/x")).otherwise(lit("/pub/x")), col("doc_id")),
+          robots, col("domain"), col("txt"), "anybot", store, epoch, accept)._1,
+        _ => Nil)
+    )
+  }
+
+  test("streaming mirrors: an epoch leaves no CacheManager entry and no persisted RDD, also when accept throws") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    // caches other specs of this shared session left behind
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val checks = new org.scalatest.Checkpoints.Checkpoint
+    epochSites.foreach { m =>
+      val store = storeRoot(m) + "/store"
+      // epoch 0 delivers; epoch 1's accept throws after looking
+      (0 to 1).foreach { i =>
+        val crash = i == 1
+        val before = sc.getPersistentRDDs.keySet
+        var cachedInAccept = Option.empty[Boolean]
+        val accept: (org.apache.spark.sql.DataFrame, Long) => Unit = (_, _) => {
+          cachedInAccept = Some(!cacheManager.isEmpty)
+          if (crash) throw new IllegalStateException("sink down")
+        }
+        try m.run(i, store, i.toLong, accept)
+        catch { case e: IllegalStateException if crash && e.getMessage == "sink down" => () }
+        // a GraftCheckpoint.pin is a local checkpoint: it holds its blocks
+        // until its frame is garbage, by design, and is no epoch cache
+        val left = sc.getPersistentRDDs.filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
+        val what = s"${m.name}, epoch $i${if (crash) " (accept throws)" else ""}"
+        checks(assert(cachedInAccept.contains(false), s"$what: CacheManager entry seen in accept: $cachedInAccept"))
+        checks(assert(cacheManager.isEmpty, s"$what: a CacheManager entry outlived the epoch"))
+        checks(assert(left.isEmpty, s"$what: persisted RDDs outlived the epoch: ${left.values.mkString(", ")}"))
+        // what a failing site left must not fail the sites after it
+        spark.catalog.clearCache()
+        left.values.foreach(_.unpersist(blocking = true))
+      }
+    }
+    checks.reportAll()
+  }
+
   test("StreamDedup: a warm epoch scans the store once, builds no sketch, never shuffles the store") {
     import graft.streaming.StreamDedup
     val store = java.nio.file.Files.createTempDirectory("graft-one-scan").toString + "/digests"
@@ -484,7 +548,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming mirrors: job budget of a warm epoch") {
     import graft.operators.Multimodal
-    import graft.streaming.{StreamAsOf, StreamDedup, StreamLinkage, StreamMediaDedup, StreamSemanticGate}
+    import graft.streaming.{StreamAsOf, StreamDedup, StreamLinkage, StreamMediaDedup, StreamSemanticGate, StreamSft,
+      StreamWebIngest}
     val root = java.nio.file.Files.createTempDirectory("graft-job-budget").toString
     def rows(epoch: Long, n: Long = 2000L) = spark.range(epoch * n, (epoch + 1) * n)
     def dedup(epoch: Long): Long = StreamDedup.dedupBatch(
@@ -520,8 +585,25 @@ class StreamingSpec extends SparkTestBase {
         Multimodal.syntheticMp3(epoch + 11, 6, 44100)
       ).zipWithIndex.map { case (c, j) => Multimodal.MediaRow(epoch * 10 + j, "blob", c) }.toDS(),
       s"$root/typed", epoch, (_, _) => ())
+    // 100 prompts with two candidates each, half of them new each epoch
+    def sft(epoch: Long): Long = StreamSft.sftBatch(
+      rows(epoch, 200L).select(col("id").as("cand_id"),
+        concat(lit("user: prompt "), ((col("id") % 100) + epoch * 50).cast("string"),
+          lit("\nassistant: answer "), col("id").cast("string")).as("text"),
+        (col("id") % 7).cast("double").as("score")),
+      "text", col("cand_id"), col("score"), s"$root/prompts", epoch, (_, _) => ())._1
+    // one line in 25 corrupt, one doc in 5 on a disallowed path, 150
+    // distinct texts
+    val robots = Seq(("d", "User-agent: *\nDisallow: /private\n")).toDF("domain", "txt")
+    def ingest(epoch: Long): Long = StreamWebIngest.ingestBatch(
+      rows(epoch, 200L).select(col("id").as("lid"),
+        concat(col("id").cast("string"), lit(",\"text "), (col("id") % 150).cast("string"), lit("\",en,"),
+          when(col("id") % 25 === 0, lit("BAD")).otherwise(lit("10"))).as("line")),
+      col("lid"), col("line"), lit("d"),
+      concat(when(col("doc_id") % 5 === 0, lit("/private/x")).otherwise(lit("/pub/x")), col("doc_id")),
+      robots, col("domain"), col("txt"), "anybot", s"$root/web", epoch, (_, _) => ())._1
     val sites = Seq[(String, Long => Long)]("dedup" -> dedup, "as-of" -> enrich, "linkage" -> link,
-      "semantic gate" -> gate, "media fp" -> fp, "typed media" -> typed)
+      "semantic gate" -> gate, "media fp" -> fp, "typed media" -> typed, "sft" -> sft, "web ingest" -> ingest)
     (0L to 2L).foreach(e => sites.foreach(_._2(e)))
     val warm = sites.map { case (name, site) =>
       var n = -1L
@@ -533,10 +615,11 @@ class StreamingSpec extends SparkTestBase {
     assert(warm("as-of")._2 == 1500L, s"warm enrichBatch enriched ${warm("as-of")._2} rows")
     assert(warm("typed media")._2 == 3L, s"warm typedDedupBatch kept ${warm("typed media")._2} items")
     // the last four read their stores with the written schema, so no
-    // schema-inference job runs (each was one job more before); linkage
-    // fires 34 or 38 jobs, as AQE skips stages behind an empty side or not
-    val budgets = Map("dedup" -> 2, "as-of" -> 6, "linkage" -> 38, "semantic gate" -> 15, "media fp" -> 10,
-      "typed media" -> 28)
+    // schema-inference job runs (each was one job more before). Linkage's
+    // budget is its worst run: AQE may skip stages behind an empty side,
+    // depending on timing
+    val budgets = Map("dedup" -> 2, "as-of" -> 5, "linkage" -> 32, "semantic gate" -> 14, "media fp" -> 10,
+      "typed media" -> 23, "sft" -> 7, "web ingest" -> 15)
     val checks = new org.scalatest.Checkpoints.Checkpoint
     budgets.foreach { case (name, budget) =>
       checks(assert(warm(name)._1 <= budget, s"warm $name fired ${warm(name)._1} jobs (budget $budget)"))
