@@ -200,22 +200,14 @@ object ConnectedComponents {
         pairs.limit(0).select(srcIn.as("id"), srcIn.as("component")),
         0
       )
-    val debug = java.lang.Boolean.getBoolean("graft.cc.debug")
     var rounds = 0
     // the star-forest probe fires BEFORE the first round too: dedup edge
     // generators that already emit (member → root) stars (digest-edge
     // exact-dup graphs) skip the alternating rounds entirely
     var converged = isStarForest(edges)
     while (!converged && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      val next = smallStar(largeStar(edges)).transform(graft.runtime.GraftCheckpoint.pin)
-      val tCkpt = System.nanoTime()
-      converged = isStarForest(next)
-      if (debug)
-        System.err.println(
-          f"[graft-cc] round $rounds: checkpoint ${(tCkpt - t0) / 1e9}%.1f s, star probe ${(System.nanoTime() - tCkpt) / 1e9}%.1f s, converged=$converged"
-        )
-      edges = next
+      edges = smallStar(largeStar(edges)).transform(graft.runtime.GraftCheckpoint.pin)
+      converged = isStarForest(edges)
       rounds += 1
     }
     if (!converged)

@@ -576,12 +576,12 @@ object Dedup {
   }
 
   /** The candidate-key relation behind [[simhashPairs]]: one row per
-    * (doc, block-combination) with `bk` = xxhash64(combo id, the combo's
-    * block values). Exposed package-private so the scale stress can
-    * measure candidate-pair mass (Σ C(bucket,2)) from the very keys the
-    * join uses. A 64-bit hash collision can only ADD a spurious candidate
-    * (removed by the exact Hamming filter), never lose one — equal block
-    * values always hash equal.
+    * (doc, block-combination): `fps`'s columns plus `bk` = xxhash64(combo
+    * id, the combo's block values). Exposed package-private so the scale
+    * stress can measure candidate-pair mass (Σ C(bucket,2)) from the very
+    * keys the join uses. A 64-bit hash collision can only ADD a spurious
+    * candidate (removed by the exact Hamming filter), never lose one —
+    * equal block values always hash equal.
     */
   private[graft] def simhashBlocked(fps: DataFrame, maxHamming: Int, blocks: Int): DataFrame = {
     require(
@@ -601,7 +601,7 @@ object Dedup {
     val keys = combos.zipWithIndex.map { case (combo, ci) =>
       xxhash64((lit(ci) +: combo.map(blockVal)): _*)
     }
-    fps.select(col("id"), col("simhash"), explode(array(keys: _*)).as("bk"))
+    fps.select(col("*"), explode(array(keys: _*)).as("bk"))
   }
 
   /** Exact n-gram Jaccard similarity for ALL pairs above a threshold.

@@ -3,9 +3,10 @@ package graft.runtime
 import org.apache.spark.sql.DataFrame
 
 /** Lineage pinning for iterative operators (connected components, PageRank
-  * / HITS, Bradley–Terry, BPE merges, streaming linkage): every round MUST
-  * truncate lineage or the accumulated self-union plan grows exponentially
-  * and Catalyst re-optimizes the whole tree each round.
+  * / HITS, Bradley–Terry, BPE merges; under streaming only the connected
+  * components of linkage pin): every round MUST truncate lineage or the
+  * accumulated self-union plan grows exponentially and Catalyst
+  * re-optimizes the whole tree each round.
   *
   * Two modes, switched by one session conf:
   *

@@ -30,8 +30,11 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * idempotent on `epoch` for end-to-end exactly-once. A frame a mirror
   * reads more than once within its epoch is held with
   * [[org.apache.spark.sql.graftbridge.Bridge.cacheRows]], never
-  * `Dataset.persist`, so an epoch leaves nothing in the session's
-  * `CacheManager` and releases its cache even when delivery throws.
+  * `Dataset.persist` or a [[graft.runtime.GraftCheckpoint]] pin, so an
+  * epoch leaves nothing in the session's `CacheManager` and releases its
+  * cache even when delivery throws. The only RDDs an epoch leaves are the
+  * local checkpoints of [[StreamLinkage]]'s connected-components rounds,
+  * which cut lineage.
   *
   * An epoch whose rows are already on the driver is written by
   * [[writeRows]] with no Spark job: one file into the hidden

@@ -58,60 +58,64 @@ object StreamLinkage {
       accept: (DataFrame, Long) => Unit
   ): Long = {
     val spark = batch.sparkSession
-    val b = batch
-      .filter(idCol.isNotNull && strCol.isNotNull && blockCol.isNotNull)
-      .select(idCol.as("id"), blockCol.as("block"), strCol.as("s"))
-      .transform(graft.runtime.GraftCheckpoint.pin)
-    // the stored rows' schema follows the batch's id type (entity = an id)
-    val keySchema = b.select(col("id"), col("block"), col("s"), col("id").as("entity")).schema
-    val ref = EpochStore.prior(spark, keyStore, keySchema, epoch)
+    // four readers share the batch: the store join, the JW self-join, CC
+    // and the assignment join
+    Bridge.cacheRows(
+      batch
+        .filter(idCol.isNotNull && strCol.isNotNull && blockCol.isNotNull)
+        .select(idCol.as("id"), blockCol.as("block"), strCol.as("s"))
+    ) { b =>
+      // the stored rows' schema follows the batch's id type (entity = an id)
+      val keySchema = b.select(col("id"), col("block"), col("s"), col("id").as("entity")).schema
+      val ref = EpochStore.prior(spark, keyStore, keySchema, epoch)
 
-    // batch ↔ store matches (within block, thresholded JW): raw
-    // (id, entity) rows — distinctness is judged at COMPONENT level below
-    val toStore = b
-      .join(
-        ref.select(col("block"), col("s").as("__rs"), col("entity")),
-        Seq("block")
-      )
-      .where(
-        round(graft.functions.text.jaro_winkler(col("s"), col("__rs")), 6) >= threshold
-      )
-      .select(col("id"), col("entity"))
+      // batch ↔ store matches (within block, thresholded JW): raw
+      // (id, entity) rows — distinctness is judged at COMPONENT level below
+      val toStore = b
+        .join(
+          ref.select(col("block"), col("s").as("__rs"), col("entity")),
+          Seq("block")
+        )
+        .where(
+          round(graft.functions.text.jaro_winkler(col("s"), col("__rs")), 6) >= threshold
+        )
+        .select(col("id"), col("entity"))
 
-    // batch-internal components (JW pairs → alternating-star CC)
-    val internalPairs = EditDistance
-      .jaroWinklerPairs(b, col("id"), col("s"), col("block"), threshold)
-      .select(col("id_a"), col("id_b"))
-    val comps = ConnectedComponents
-      .assignClusters(b.select(col("id")), col("id"), internalPairs)
-      .select(col("doc_id").as("id"), col("component"))
+      // batch-internal components (JW pairs → alternating-star CC)
+      val internalPairs = EditDistance
+        .jaroWinklerPairs(b, col("id"), col("s"), col("block"), threshold)
+        .select(col("id_a"), col("id_b"))
+      val comps = ConnectedComponents
+        .assignClusters(b.select(col("id")), col("id"), internalPairs)
+        .select(col("doc_id").as("id"), col("component"))
 
-    // per component: min stored entity across members, else component id;
-    // n_matched_entities counts DISTINCT stored entities the component
-    // touched (≥ 2 = an entity-merge observation)
-    val compEnt = comps
-      .join(toStore, Seq("id"), "left")
-      .groupBy(col("component"))
-      .agg(
-        min(col("entity")).as("__cent"),
-        count_distinct(col("entity")).as("__centN")
-      )
-    val assigned = comps
-      .join(compEnt, Seq("component"))
-      .join(b, Seq("id"))
-      .select(
-        col("id"),
-        col("block"),
-        col("s"),
-        coalesce(col("__cent"), col("component")).as("entity"),
-        col("__cent").isNotNull.as("matched_store"),
-        col("__centN").as("n_matched_entities")
-      )
-    Bridge.cacheRows(assigned) { assigned =>
-      EpochStore.write(assigned.select(col("id"), col("block"), col("s"), col("entity")), keyStore, epoch)
-      val n = assigned.count()
-      accept(assigned, epoch)
-      n
+      // per component: min stored entity across members, else component id;
+      // n_matched_entities counts DISTINCT stored entities the component
+      // touched (≥ 2 = an entity-merge observation)
+      val compEnt = comps
+        .join(toStore, Seq("id"), "left")
+        .groupBy(col("component"))
+        .agg(
+          min(col("entity")).as("__cent"),
+          count_distinct(col("entity")).as("__centN")
+        )
+      val assigned = comps
+        .join(compEnt, Seq("component"))
+        .join(b, Seq("id"))
+        .select(
+          col("id"),
+          col("block"),
+          col("s"),
+          coalesce(col("__cent"), col("component")).as("entity"),
+          col("__cent").isNotNull.as("matched_store"),
+          col("__centN").as("n_matched_entities")
+        )
+      Bridge.cacheRows(assigned) { assigned =>
+        EpochStore.write(assigned.select(col("id"), col("block"), col("s"), col("entity")), keyStore, epoch)
+        val n = assigned.count()
+        accept(assigned, epoch)
+        n
+      }
     }
   }
 }

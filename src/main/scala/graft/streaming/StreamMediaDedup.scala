@@ -20,13 +20,13 @@ import graft.operators.{Dedup, Multimodal}
   * recomputed on read, deterministic). Per micro-batch:
   *
   *   1. OVERWRITE the epoch's directory with this batch's fingerprints;
-  *   2. block-join the batch against store-before-this-epoch: any stored
-  *      fingerprint within `maxHamming` kills the batch item;
-  *   3. within the batch, the smaller id survives a near-dup pair (the
-  *      greedy keep-set: an item pairing ONLY with already-dropped items
-  *      still drops — conservative; exact cluster resolution is the
-  *      batch CC operator's job, x26);
-  *   4. survivors (id, simhash) go to `accept`.
+  *   2. block-join the batch against prior ∪ batch (the store before this
+  *      epoch, and the batch itself) under one keep rule: a batch item
+  *      drops if a stored fingerprint, or a batch one with a smaller id,
+  *      sits within `maxHamming` (the greedy keep-set: an item pairing
+  *      ONLY with already-dropped items still drops — conservative;
+  *      exact cluster resolution is the batch CC operator's job, x26);
+  *   3. survivors (id, simhash) go to `accept`.
   *
   * Replays follow the [[EpochStore]] contract: exactly-once on the store,
   * at-least-once on `accept`.
@@ -57,25 +57,33 @@ object StreamMediaDedup {
       // store first, then the gate (the EpochStore contract)
       EpochStore.write(b, fpStore, epoch)
       val prior = EpochStore.prior(spark, fpStore, b.schema, epoch)
-      val bb = Dedup.simhashBlocked(b, maxHamming, blocks)
-      val pb = Dedup
-        .simhashBlocked(prior, maxHamming, blocks)
-        .select(col("bk"), col("simhash").as("__rfp"))
-      val crossDup = bb
-        .join(pb, Seq("bk"))
-        .filter(Dedup.hamming(col("simhash"), col("__rfp")) <= maxHamming)
-        .select(col("id"))
-      // within-batch: the larger id of every near-dup pair drops
-      val withinDup = Dedup
-        .pairsFromFps(b, maxHamming, blocks)
-        .select(col("id_b").as("id"))
-      Bridge.cacheRows(b.join(crossDup.unionByName(withinDup).distinct(), Seq("id"), "left_anti")) { out =>
+      val dropped = nearRivals(b, prior, maxHamming, blocks).select(col("id"))
+      Bridge.cacheRows(b.join(dropped, Seq("id"), "left_anti")) { out =>
         val n = out.count()
         accept(out, epoch)
         n
       }
     }
   }
+
+  /** The keep rule, stated once: each unit of `batch` meets the units of
+    * prior ∪ batch that kill it on equal `on` — any stored unit
+    * (`r_stored`), or a batch unit of a smaller id. `batch` and `prior`
+    * share their columns; the killer's columns come back prefixed `r_`.
+    */
+  private def rivals(batch: DataFrame, prior: DataFrame, on: String): DataFrame = {
+    val pool = prior.withColumn("stored", lit(true)).unionByName(batch.withColumn("stored", lit(false)))
+    batch
+      .join(pool.select(pool.columns.toSeq.map(c => if (c == on) col(c) else col(c).as("r_" + c)): _*), Seq(on))
+      .filter(col("r_stored") || col("r_id") < col("id"))
+  }
+
+  /** [[rivals]] of `(id, simhash, …)` units within `mh` bits, met on the
+    * Manku block keys.
+    */
+  private def nearRivals(batch: DataFrame, prior: DataFrame, mh: Int, blocks: Int): DataFrame =
+    rivals(Dedup.simhashBlocked(batch, mh, blocks), Dedup.simhashBlocked(prior, mh, blocks), "bk")
+      .filter(Dedup.hamming(col("simhash"), col("r_simhash")) <= mh)
 
   /** TYPED streaming mirror of [[graft.operators.Multimodal.mediaDedupCatalog]]
     * — the batch/stream symmetry the rest of the engine keeps: one
@@ -94,9 +102,8 @@ object StreamMediaDedup {
     * unknown — dropped only on byte identity). ~25 bytes of state per
     * unit; media bytes never leave the batch's decode pass.
     *
-    * Gates (all against store-before-this-epoch AND within the batch,
-    * the [[dedupFpBatch]] greedy keep rule — smaller id / stored item
-    * wins):
+    * Gates (each one join against prior ∪ batch under the
+    * [[dedupFpBatch]] greedy keep rule — smaller id / stored item wins):
     *   - image/audio: Manku block join within the kind's maxHamming;
     *   - video: frame-unit block join, pair kept when BOTH sides match
     *     at ≥ `videoMinFrames` distinct positions (the catalog's gate);
@@ -145,68 +152,22 @@ object StreamMediaDedup {
         def videoOf(df: DataFrame): DataFrame =
           df.filter(col("kind") === "video" && col("simhash").isNotNull && col("frame_idx") >= 0)
             .select(col("id"), col("simhash"), col("frame_idx"))
-        // cross-epoch: any stored fingerprint within range kills the batch item
-        def scalarCross(kind: String, mh: Int): DataFrame = {
-          val b = Dedup.simhashBlocked(scalarOf(units, kind), mh, blocks)
-          val p = Dedup
-            .simhashBlocked(scalarOf(prior, kind), mh, blocks)
-            .select(col("bk"), col("simhash").as("__rfp"))
-          b.join(p, Seq("bk"))
-            .filter(Dedup.hamming(col("simhash"), col("__rfp")) <= mh)
-            .select(col("id"))
-        }
-        val videoCross = {
-          val b = Dedup
-            .simhashBlocked(
-              videoOf(units).select(struct(col("id"), col("frame_idx")).as("id"), col("simhash")),
-              videoMaxHamming, blocks)
-          val p = Dedup
-            .simhashBlocked(
-              videoOf(prior).select(struct(col("id"), col("frame_idx")).as("id"), col("simhash")),
-              videoMaxHamming, blocks)
-            .select(col("bk"), col("id").as("__rid"), col("simhash").as("__rfp"))
-          b.join(p, Seq("bk"))
-            .filter(Dedup.hamming(col("simhash"), col("__rfp")) <= videoMaxHamming)
-            .select(col("id.id").as("bid"), col("id.frame_idx").as("bf"),
-              col("__rid.id").as("pid"), col("__rid.frame_idx").as("pf"))
-            .groupBy(col("bid"), col("pid"))
-            .agg(countDistinct(col("bf")).as("__nb"), countDistinct(col("pf")).as("__np"))
-            .filter(least(col("__nb"), col("__np")) >= videoMinFrames)
-            .select(col("bid").as("id"))
-        }
-        val digestCross = units
-          .filter(col("digest").isNotNull)
-          .join(prior.filter(col("digest").isNotNull).select(col("digest")), Seq("digest"))
+        def digestOf(df: DataFrame): DataFrame =
+          df.filter(col("digest").isNotNull).select(col("id"), col("digest"))
+        def scalarDups(kind: String, mh: Int): DataFrame =
+          nearRivals(scalarOf(units, kind), scalarOf(prior, kind), mh, blocks).select(col("id"))
+        // a video pair counts when BOTH sides match at ≥ videoMinFrames
+        // distinct positions
+        val videoDups = nearRivals(videoOf(units), videoOf(prior), videoMaxHamming, blocks)
+          .groupBy(col("id"), col("r_id"), col("r_stored"))
+          .agg(countDistinct(col("frame_idx")).as("__nb"), countDistinct(col("r_frame_idx")).as("__nr"))
+          .filter(least(col("__nb"), col("__nr")) >= videoMinFrames)
           .select(col("id"))
-        // within-batch: the larger id of every pair drops (the greedy
-        // keep-set — exact cluster resolution is the batch catalog's job)
-        def scalarWithin(kind: String, mh: Int): DataFrame =
-          Dedup.pairsFromFps(scalarOf(units, kind), mh, blocks).select(col("id_b").as("id"))
-        val videoWithin = Dedup
-          .pairsFromFps(
-            videoOf(units).select(struct(col("id"), col("frame_idx")).as("id"), col("simhash")),
-            videoMaxHamming, blocks)
-          .filter(col("id_a.id") =!= col("id_b.id"))
-          .select(col("id_a.id").as("ida"), col("id_b.id").as("idb"),
-            col("id_a.frame_idx").as("fa"), col("id_b.frame_idx").as("fb"))
-          .groupBy(col("ida"), col("idb"))
-          .agg(countDistinct(col("fa")).as("__na"), countDistinct(col("fb")).as("__nb"))
-          .filter(least(col("__na"), col("__nb")) >= videoMinFrames)
-          .select(col("idb").as("id"))
-        val digestWithin = {
-          val fpless = units.filter(col("digest").isNotNull).select(col("id"), col("digest"))
-          val hubs = fpless.groupBy(col("digest")).agg(min(col("id")).as("__hub"))
-          fpless.join(hubs, Seq("digest")).filter(col("id") =!= col("__hub")).select(col("id"))
-        }
-        val dropped = scalarCross("image", imageMaxHamming)
-          .unionByName(scalarCross("audio", audioMaxHamming))
-          .unionByName(videoCross)
-          .unionByName(digestCross)
-          .unionByName(scalarWithin("image", imageMaxHamming))
-          .unionByName(scalarWithin("audio", audioMaxHamming))
-          .unionByName(videoWithin)
-          .unionByName(digestWithin)
-          .distinct()
+        val digestDups = rivals(digestOf(units), digestOf(prior), "digest").select(col("id"))
+        val dropped = scalarDups("image", imageMaxHamming)
+          .unionByName(scalarDups("audio", audioMaxHamming))
+          .unionByName(videoDups)
+          .unionByName(digestDups)
         val survivors = typed
           .join(dropped.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
           .select(

@@ -86,32 +86,18 @@ object StreamTws {
     * (and re-emitted) once per ttl window, and state size is bounded by
     * the accept rate × ttl instead of corpus lifetime — the knob the
     * parquet-store mirror lacks.
+    *
+    * BATCH→STREAM STATE BOOTSTRAP ([[firstSeenSeeded]]): on the FIRST
+    * micro-batch of a fresh checkpoint the engine hands every
+    * initial-state digest to [[handleInitialState]], which marks it seen
+    * — so a streaming query taking over a corpus accumulated by the
+    * parquet-store mirror ([[StreamDedup]]) resumes from that history
+    * instead of re-accepting it. The handoff runs exactly once per
+    * checkpoint lifetime; restarts recover the marks from the state
+    * store like any other state. Unseeded ([[firstSeen]]), the engine
+    * never calls it.
     */
   private[streaming] final class FirstSeenProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, FpRow, FpRow] {
-    @transient private var seen: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Long]("seen", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[FpRow],
-        timerValues: TimerValues
-    ): Iterator[FpRow] = StreamTws.firstSeenHandle(seen, rows, timerValues)
-  }
-
-  /** [[FirstSeenProcessor]] with BATCH→STREAM STATE BOOTSTRAP
-    * ([[StatefulProcessorWithInitialState]]): identical per-batch
-    * semantics, but on the FIRST micro-batch of a fresh checkpoint the
-    * engine hands every initial-state digest to [[handleInitialState]],
-    * which marks it seen — so a streaming query taking over a corpus
-    * accumulated by the parquet-store mirror ([[StreamDedup]]) resumes
-    * from that history instead of re-accepting it. The handoff runs
-    * exactly once per checkpoint lifetime; restarts recover the marks
-    * from the state store like any other state.
-    */
-  private[streaming] final class FirstSeenSeededProcessor(ttl: TTLConfig)
       extends StatefulProcessorWithInitialState[String, FpRow, FpRow, String] {
     @transient private var seen: ValueState[Long] = _
 
@@ -125,35 +111,28 @@ object StreamTws {
     ): Unit =
       seen.update(timerValues.getCurrentProcessingTimeInMs())
 
+    /** Drop if the digest is marked, else emit the smallest-id row of the
+      * arriving batch and mark it.
+      */
     override def handleInputRows(
         key: String,
         rows: Iterator[FpRow],
         timerValues: TimerValues
-    ): Iterator[FpRow] = StreamTws.firstSeenHandle(seen, rows, timerValues)
-  }
-
-  /** Shared first-seen batch rule of [[FirstSeenProcessor]] /
-    * [[FirstSeenSeededProcessor]]: drop if the digest is marked, else
-    * emit the smallest-id row of the arriving batch and mark it.
-    */
-  private def firstSeenHandle(
-      seen: ValueState[Long],
-      rows: Iterator[FpRow],
-      timerValues: TimerValues
-  ): Iterator[FpRow] =
-    if (seen.exists()) {
-      Iterator.empty
-    } else {
-      // smallest id wins within the arriving batch — iterator order is
-      // partition-dependent, the min is not
-      var best: FpRow = null
-      rows.foreach { r => if (best == null || r.id < best.id) best = r }
-      if (best == null) Iterator.empty
-      else {
-        seen.update(timerValues.getCurrentProcessingTimeInMs())
-        Iterator.single(best)
+    ): Iterator[FpRow] =
+      if (seen.exists()) {
+        Iterator.empty
+      } else {
+        // smallest id wins within the arriving batch — iterator order is
+        // partition-dependent, the min is not
+        var best: FpRow = null
+        rows.foreach { r => if (best == null || r.id < best.id) best = r }
+        if (best == null) Iterator.empty
+        else {
+          seen.update(timerValues.getCurrentProcessingTimeInMs())
+          Iterator.single(best)
+        }
       }
-    }
+  }
 
   /** One OPEN session in [[SessionizeProcessor]] state: `n` events over
     * `[lo, hi]` millis with up to maxSamples retained ids.
@@ -178,9 +157,21 @@ object StreamTws {
     * Scale: open sessions per key are few (bounded by disorder within
     * the watermark delay, not by history) and only TOUCHED keys rewrite
     * their list — state stays O(open sessions), never O(events).
+    *
+    * BATCH→STREAM STATE BOOTSTRAP ([[sessionizeSeeded]]): initial state
+    * rows are OPEN sessions in the [[SessionOut]] schema (what a batch
+    * sessionization pass or a drained prior deployment emits for its
+    * still-open tails). Each seed interval-merges into the key's
+    * open-session list exactly as an arriving event batch would —
+    * overlapping seeds fuse under the same half-open gap rule — and
+    * re-arms the earliest close timer, so a seeded key with NO further
+    * traffic still closes and emits once the watermark advances. The
+    * engine hands seeds over once per fresh checkpoint
+    * ([[FirstSeenProcessor]]'s contract), one [[handleInitialState]]
+    * call per seed row (multi-row keys allowed).
     */
   private[streaming] final class SessionizeProcessor(gapMs: Long, maxSamples: Int)
-      extends StatefulProcessor[String, SessionEvent, SessionOut] {
+      extends StatefulProcessorWithInitialState[String, SessionEvent, SessionOut, SessionOut] {
     @transient private var open: ListState[OpenSess] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -213,15 +204,31 @@ object StreamTws {
 
     /** Interval-merge `arrived` into the open-session list and re-arm the
       * earliest close timer — the shared write path of event batches and
-      * [[SessionizeSeededProcessor]] bootstrap seeds.
+      * bootstrap seeds.
       */
-    private[streaming] def mergeIn(arrived: Seq[OpenSess]): Unit =
+    private def mergeIn(arrived: Seq[OpenSess]): Unit =
       if (arrived.nonEmpty) {
         val all = merged(open.get().toSeq ++ arrived)
         open.clear()
         all.foreach(open.appendValue)
         rearm(all)
       }
+
+    override def handleInitialState(
+        key: String,
+        initialState: SessionOut,
+        timerValues: TimerValues
+    ): Unit =
+      mergeIn(
+        Seq(
+          OpenSess(
+            initialState.n,
+            initialState.start.getTime,
+            initialState.end.getTime,
+            initialState.sampleIds.take(maxSamples)
+          )
+        )
+      )
 
     override def handleInputRows(
         key: String,
@@ -256,56 +263,6 @@ object StreamTws {
     }
   }
 
-  /** [[SessionizeProcessor]] with BATCH→STREAM STATE BOOTSTRAP: initial
-    * state rows are OPEN sessions in the [[SessionOut]] schema (what a
-    * batch sessionization pass or a drained prior deployment emits for
-    * its still-open tails). Each seed interval-merges into the key's
-    * open-session list exactly as an arriving event batch would —
-    * overlapping seeds fuse under the same half-open gap rule — and
-    * re-arms the earliest close timer, so a seeded key with NO further
-    * traffic still closes and emits once the watermark advances. The
-    * engine hands seeds over once per fresh checkpoint
-    * ([[FirstSeenSeededProcessor]]'s contract), one
-    * [[handleInitialState]] call per seed row (multi-row keys allowed).
-    */
-  private[streaming] final class SessionizeSeededProcessor(gapMs: Long, maxSamples: Int)
-      extends StatefulProcessorWithInitialState[String, SessionEvent, SessionOut, SessionOut] {
-    private val inner = new SessionizeProcessor(gapMs, maxSamples)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      inner.setHandle(getHandle)
-      inner.init(outputMode, timeMode)
-    }
-
-    override def handleInitialState(
-        key: String,
-        initialState: SessionOut,
-        timerValues: TimerValues
-    ): Unit =
-      inner.mergeIn(
-        Seq(
-          OpenSess(
-            initialState.n,
-            initialState.start.getTime,
-            initialState.end.getTime,
-            initialState.sampleIds.take(maxSamples)
-          )
-        )
-      )
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SessionEvent],
-        timerValues: TimerValues
-    ): Iterator[SessionOut] = inner.handleInputRows(key, rows, timerValues)
-
-    override def handleExpiredTimer(
-        key: String,
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo
-    ): Iterator[SessionOut] = inner.handleExpiredTimer(key, timerValues, expiredTimerInfo)
-  }
-
   /** `(key, fp)` for per-key distinct counting. */
   final case class KeyedFp(key: String, fp: String)
 
@@ -328,44 +285,16 @@ object StreamTws {
     * counts horizon-first sightings cumulatively: an fp whose entry has
     * been evicted counts AGAIN on its next arrival (still monotone per
     * key — it is an admission counter, not the live map size).
+    *
+    * BATCH→STREAM STATE BOOTSTRAP ([[distinctPerKeySeeded]]): initial
+    * state rows are the (key, fp) membership pairs accumulated by a
+    * batch `countDistinct` corpus (one [[handleInitialState]] call per
+    * pair — multi-row keys are the normal case here). Each seed marks
+    * membership AND counts toward the key's admission counter, so the
+    * first post-migration emission for a key continues its batch count
+    * instead of restarting from zero.
     */
   private[streaming] final class DistinctPerKeyProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, KeyedFp, KeyCount] {
-    @transient private var seen: MapState[String, Boolean] = _
-    @transient private var n: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seen = getHandle
-        .getMapState[String, Boolean]("seen", Encoders.STRING, Encoders.scalaBoolean, ttl)
-      n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[KeyedFp],
-        timerValues: TimerValues
-    ): Iterator[KeyCount] = {
-      var c = if (n.exists()) n.get() else 0L
-      rows.foreach { r =>
-        if (!seen.containsKey(r.fp)) {
-          seen.updateValue(r.fp, true)
-          c += 1
-        }
-      }
-      n.update(c)
-      Iterator.single(KeyCount(key, c))
-    }
-  }
-
-  /** [[DistinctPerKeyProcessor]] with BATCH→STREAM STATE BOOTSTRAP:
-    * initial state rows are the (key, fp) membership pairs accumulated
-    * by a batch `countDistinct` corpus (one [[handleInitialState]] call
-    * per pair — multi-row keys are the normal case here). Each seed
-    * marks membership AND counts toward the key's admission counter, so
-    * the first post-migration emission for a key continues its batch
-    * count instead of restarting from zero.
-    */
-  private[streaming] final class DistinctPerKeySeededProcessor(ttl: TTLConfig)
       extends StatefulProcessorWithInitialState[String, KeyedFp, KeyCount, KeyedFp] {
     @transient private var seen: MapState[String, Boolean] = _
     @transient private var n: ValueState[Long] = _
@@ -424,7 +353,7 @@ object StreamTws {
     rows
       .groupByKey(_.key)
       .transformWithState(
-        new DistinctPerKeySeededProcessor(cfg),
+        new DistinctPerKeyProcessor(cfg),
         mode,
         OutputMode.Update(),
         seeds.groupByKey(_.key)
@@ -485,7 +414,7 @@ object StreamTws {
     rows
       .groupByKey(_.fp)
       .transformWithState(
-        new FirstSeenSeededProcessor(cfg),
+        new FirstSeenProcessor(cfg),
         mode,
         OutputMode.Append(),
         seeds.distinct().groupByKey(identity[String])
@@ -524,17 +453,7 @@ object StreamTws {
       maxSamples: Int = 8
   ): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val delay = watermarkDelay.getOrElse(gap)
-    if (delay.toMillis > gap.toMillis)
-      org.slf4j.LoggerFactory
-        .getLogger(getClass)
-        .warn(
-          s"sessionize: watermarkDelay ${delay.toMillis} ms exceeds gap ${gap.toMillis} ms — " +
-            "an admitted late event can overlap an already-emitted session and open a " +
-            "duplicate (the documented session_window hazard)"
-        )
-    events
-      .withWatermark("ts", s"${delay.toMillis} milliseconds")
+    watermarked(events, gap, watermarkDelay, "sessionize")
       .groupByKey(_.key)
       .transformWithState(
         new SessionizeProcessor(gap.toMillis, maxSamples),
@@ -561,24 +480,36 @@ object StreamTws {
       maxSamples: Int = 8
   ): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
+    watermarked(events, gap, watermarkDelay, "sessionizeSeeded")
+      .groupByKey(_.key)
+      .transformWithState(
+        new SessionizeProcessor(gap.toMillis, maxSamples),
+        TimeMode.EventTime(),
+        OutputMode.Append(),
+        seeds.groupByKey(_.key)
+      )
+  }
+
+  /** `events` under a watermark on `ts` of `watermarkDelay` (default:
+    * `gap`), warning under `op`'s name when the delay exceeds the gap
+    * (see [[sessionize]]).
+    */
+  private def watermarked(
+      events: Dataset[SessionEvent],
+      gap: Duration,
+      watermarkDelay: Option[Duration],
+      op: String
+  ): Dataset[SessionEvent] = {
     val delay = watermarkDelay.getOrElse(gap)
     if (delay.toMillis > gap.toMillis)
       org.slf4j.LoggerFactory
         .getLogger(getClass)
         .warn(
-          s"sessionizeSeeded: watermarkDelay ${delay.toMillis} ms exceeds gap ${gap.toMillis} ms — " +
+          s"$op: watermarkDelay ${delay.toMillis} ms exceeds gap ${gap.toMillis} ms — " +
             "an admitted late event can overlap an already-emitted session and open a " +
             "duplicate (the documented session_window hazard)"
         )
-    events
-      .withWatermark("ts", s"${delay.toMillis} milliseconds")
-      .groupByKey(_.key)
-      .transformWithState(
-        new SessionizeSeededProcessor(gap.toMillis, maxSamples),
-        TimeMode.EventTime(),
-        OutputMode.Append(),
-        seeds.groupByKey(_.key)
-      )
+    events.withWatermark("ts", s"${delay.toMillis} milliseconds")
   }
 
   /** Running per-key distinct-fp count (point-lookup [[MapState]]

@@ -279,9 +279,11 @@ class StreamingSpec extends SparkTestBase {
         }
         try m.run(i, store, i.toLong, accept)
         catch { case e: IllegalStateException if crash && e.getMessage == "sink down" => () }
-        // a GraftCheckpoint.pin is a local checkpoint: it holds its blocks
-        // until its frame is garbage, by design, and is no epoch cache
-        val left = sc.getPersistentRDDs.filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
+        // linkage's connected components pin each round (a local
+        // checkpoint holds its blocks until its frame is garbage): those
+        // are lineage cuts, not epoch caches. No other site pins
+        val cuts = m.name == "StreamLinkage.linkBatch"
+        val left = sc.getPersistentRDDs.filter { case (id, rdd) => !before(id) && !(cuts && rdd.isCheckpointed) }
         val what = s"${m.name}, epoch $i${if (crash) " (accept throws)" else ""}"
         checks(assert(cachedInAccept.contains(false), s"$what: CacheManager entry seen in accept: $cachedInAccept"))
         checks(assert(cacheManager.isEmpty, s"$what: a CacheManager entry outlived the epoch"))
@@ -617,9 +619,10 @@ class StreamingSpec extends SparkTestBase {
     // the last four read their stores with the written schema, so no
     // schema-inference job runs (each was one job more before). Linkage's
     // budget is its worst run: AQE may skip stages behind an empty side,
-    // depending on timing
-    val budgets = Map("dedup" -> 2, "as-of" -> 5, "linkage" -> 32, "semantic gate" -> 14, "media fp" -> 10,
-      "typed media" -> 23, "sft" -> 7, "web ingest" -> 15)
+    // depending on timing. Neither media gate pins, and each kind is one
+    // join against prior ∪ batch
+    val budgets = Map("dedup" -> 2, "as-of" -> 5, "linkage" -> 31, "semantic gate" -> 14, "media fp" -> 7,
+      "typed media" -> 11, "sft" -> 7, "web ingest" -> 15)
     val checks = new org.scalatest.Checkpoints.Checkpoint
     budgets.foreach { case (name, budget) =>
       checks(assert(warm(name)._1 <= budget, s"warm $name fired ${warm(name)._1} jobs (budget $budget)"))
@@ -1302,6 +1305,40 @@ class StreamingSpec extends SparkTestBase {
       Multimodal.audioFingerprints(
         media(31L -> Multimodal.wavFromSamples(base.map(x => (x * 2).toShort)))), store, 3L, acc)
     assert(a1 == 0 && got(3L) == Set.empty[Long], s"scaled clip must drop: $got")
+  }
+
+  test("StreamMediaDedup.dedupFpBatch: survivors and store match an all-pairs reference over stored ∪ batch") {
+    import graft.streaming.StreamMediaDedup
+    val rnd = new scala.util.Random(20261019L)
+    // near-dup families: 6 base fingerprints, members 0-4 flipped bits away
+    val bases = Vector.fill(6)(rnd.nextLong())
+    def member(): Long = (0 until rnd.nextInt(5)).foldLeft(bases(rnd.nextInt(bases.size)))((h, _) =>
+      h ^ (1L << rnd.nextInt(64)))
+    for (mh <- Seq(0, 2, 3)) {
+      val store = java.nio.file.Files.createTempDirectory(s"graft-fp-ref-$mh").toString + "/fps"
+      var stored = Vector.empty[(Long, Long)]
+      (0 until 3).foreach { epoch =>
+        // later epochs take smaller ids, so a stored killer is never the
+        // smaller id
+        val fresh = (0 until 30).map(j => ((3 - epoch) * 100L + j) -> member()).toVector
+        // epoch 0: an exact duplicate fingerprint under a larger id; later
+        // epochs: a batch id that is also a stored id
+        val batch =
+          if (epoch == 0) fresh :+ (399L -> fresh(3)._2)
+          else fresh :+ (stored(rnd.nextInt(stored.size))._1 -> member())
+        def near(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b) <= mh
+        val expected = batch.filterNot { case (id, h) =>
+          stored.exists(s => near(s._2, h)) || batch.exists { case (oid, oh) => oid < id && near(oh, h) }
+        }.map(_._1).sorted
+        var got = Seq.empty[Long]
+        val n = StreamMediaDedup.dedupFpBatch(batch.toDF("id", "simhash"), store, epoch.toLong,
+          (df, _) => got = df.select(col("id")).collect().map(_.getLong(0)).toSeq.sorted, maxHamming = mh)
+        assert(got == expected && n == expected.size, s"maxHamming $mh, epoch $epoch: $got vs $expected")
+        stored ++= batch
+        val inStore = spark.read.parquet(store).select(col("id"), col("simhash")).as[(Long, Long)].collect()
+        assert(inStore.sorted.toSeq == stored.sorted, s"maxHamming $mh, epoch $epoch: store")
+      }
+    }
   }
 
   test("StreamMediaDedup.typedDedupBatch: typed catalog mirror — kind gates, digest gate, replay idempotent") {
