@@ -280,10 +280,12 @@ object ChatOps {
     * normalization; BT strengths are scale-free).
     *
     * Input: (winner, loser) rows, one per comparison. Corpus-side work is
-    * the two aggregations to the directed win table and the undirected
-    * (i, j, n_ij) opponent table — after that every iteration touches only
-    * item-sized model tables (joins broadcast under AQE), the pageRank /
-    * IVF-centroid discipline. `localCheckpoint` truncates loop lineage.
+    * the one aggregation to the directed win table; from it come the
+    * undirected (i, j, n_ij) opponent table and the (item, wins, losses)
+    * item table, whose counts ride on the strength rows through the loop.
+    * After that every iteration touches only item-sized model tables
+    * (joins broadcast under AQE), the pageRank / IVF-centroid discipline.
+    * `localCheckpoint` truncates loop lineage.
     */
   def bradleyTerry(
       comparisons: DataFrame,
@@ -299,10 +301,9 @@ object ChatOps {
     // strength is pinned too, to truncate loop lineage.
     def mp(df: DataFrame): DataFrame = graft.runtime.GraftCheckpoint.pin(df)
     // directed is THE corpus aggregation — pin it so the single pass over
-    // the comparison corpus happens exactly once. Before this pin, the
-    // unpinned wins/losses tables re-executed the whole upstream (corpus
-    // scan + whatever windows fed `comparisons`) once per MM iteration
-    // plus twice in the final ranking join — 7 corpus passes for 5 iters
+    // the comparison corpus happens exactly once. Unpinned, every table
+    // derived from it re-executed the whole upstream (corpus scan +
+    // whatever windows fed `comparisons`) — 7 corpus passes for 5 iters
     // (measured on x128: 4.2 s → see OPTIMIZATION_r16.md). Everything
     // below is pair-/item-sized model state derived from this pin.
     val directed = c
@@ -315,17 +316,17 @@ object ChatOps {
       .groupBy(col("i"), col("j"))
       .agg(sum(col("w")).as("n_ij"))
       .transform(mp)
-    val wins = directed
-      .groupBy(col("winner").as("item"))
-      .agg(sum(col("w")).as("wins"))
+    // the loop-invariant item table (item, wins, losses) in ONE union-
+    // and-group pass over directed: winner rows carry (w, 0), loser rows
+    // (0, w). It seeds the strengths, and wins/losses ride on them
+    val items = directed
+      .select(col("winner").as("item"), col("w").as("wins"), lit(0L).as("losses"))
+      .unionByName(directed.select(col("loser").as("item"), lit(0L).as("wins"), col("w").as("losses")))
+      .groupBy(col("item"))
+      .agg(sum(col("wins")).as("wins"), sum(col("losses")).as("losses"))
       .transform(mp)
-    val losses = directed
-      .groupBy(col("loser").as("item"))
-      .agg(sum(col("w")).as("losses"))
-      .transform(mp)
-    val items = und.select(col("i").as("item")).distinct().transform(mp)
 
-    var s = items.select(col("item"), lit(1.0).as("s"))
+    var s = items.select(col("item"), lit(1.0).as("s"), col("wins"), col("losses"))
     var k = 0
     while (k < iters) {
       val den = und
@@ -342,13 +343,14 @@ object ChatOps {
       // blocks — next iteration's two joins against it cost zero re-
       // execution and lineage stays O(1) per round without a second pin.
       val raw = s
-        .join(wins, Seq("item"), "left")
         .join(den, Seq("item"), "left")
         .select(
           col("item"),
-          ((coalesce(col("wins"), lit(0L)).cast("double") + lit(virtual)) /
+          ((col("wins").cast("double") + lit(virtual)) /
             (coalesce(col("den"), lit(0.0)) + lit(2.0 * virtual) / (col("s") + 1.0)))
-            .as("sr")
+            .as("sr"),
+          col("wins"),
+          col("losses")
         )
         .transform(mp)
       val r = raw
@@ -360,19 +362,13 @@ object ChatOps {
       val (tot, nItems) = (r.getDouble(0), r.getLong(1))
       s = raw.select(
         col("item"),
-        (col("sr") * lit(nItems.toDouble) / lit(tot)).as("s")
+        (col("sr") * lit(nItems.toDouble) / lit(tot)).as("s"),
+        col("wins"),
+        col("losses")
       )
       k += 1
     }
-    val ranked = s
-      .join(wins, Seq("item"), "left")
-      .join(losses, Seq("item"), "left")
-      .select(
-        col("item"),
-        round(col("s"), 6).as("strength"),
-        coalesce(col("wins"), lit(0L)).as("wins"),
-        coalesce(col("losses"), lit(0L)).as("losses")
-      )
+    val ranked = s.select(col("item"), round(col("s"), 6).as("strength"), col("wins"), col("losses"))
     ranked.withColumn(
       "rank",
       row_number().over(Window.orderBy(col("strength").desc, col("item")))

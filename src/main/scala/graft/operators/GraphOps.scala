@@ -15,18 +15,22 @@ import org.apache.spark.sql.functions._
   *   - [[htmlLinks]] is a pure projection (one RE2-safe regex scan +
   *     explode) — zero shuffle; the host filter and id parse compose on
   *     top without leaving whole-stage codegen.
-  *   - [[pageRank]] keeps per-iteration state as (id, pr) rows — 16 bytes
-  *     a row, hash-partitioned on id. Each iteration is ONE equi-join of
-  *     ranks against the (src-keyed) edge list and ONE partial-aggregating
-  *     exchange on dst; a mega-hub page costs a combiner pass, not a
-  *     reducer hot spot, because `groupBy(dst).sum` combines map-side.
-  *   - dangling mass (pages with no outlinks) is a 1-row aggregate
-  *     broadcast back into the update — never a driver-side loop over
-  *     nodes; the only driver scalar is the node count (model state, same
-  *     contract as [[ConnectedComponents]]'s per-round convergence scalar).
-  *   - every iteration is eagerly `localCheckpoint`ed, truncating lineage
-  *     so plan size and retry cost stay O(1) per round; on a real cluster
-  *     swap in reliable `checkpoint` for executor-loss tolerance.
+  *   - [[pageRank]] keeps per-iteration state as (id, pr, out_deg) rows —
+  *     24 bytes a row, hash-partitioned on id. The out-degree rides on the
+  *     state from a node table built in one pass over the edges, so each
+  *     iteration is ONE equi-join of ranks against the (src-keyed) edge
+  *     list and ONE partial-aggregating exchange on dst; a mega-hub page
+  *     costs a combiner pass, not a reducer hot spot, because
+  *     `groupBy(dst).sum` combines map-side.
+  *   - dangling mass (pages with `out_deg = 0`) is a 1-row aggregate of
+  *     the state broadcast back into the update — never a driver-side loop
+  *     over nodes; the only driver scalar is the node count (model state,
+  *     same contract as [[ConnectedComponents]]'s per-round convergence
+  *     scalar).
+  *   - every iteration is eagerly pinned ([[graft.runtime.GraftCheckpoint]]),
+  *     truncating lineage so plan size and retry cost stay O(1) per round;
+  *     on a real cluster set `spark.graft.checkpointDir` to make each pin a
+  *     reliable checkpoint that survives executor loss.
   */
 object GraphOps {
 
@@ -295,62 +299,59 @@ object GraphOps {
     * Contract: parallel edges and self-loops are deduplicated/kept as
     * given — the input is `distinct()`ed here so a page linking the same
     * target twice endorses it once (the crawl-graph convention); the node
-    * set is the union of edge endpoints. Returns `(id, pr)` with pr
-    * UNROUNDED — callers that need engine-portable output round at the
-    * edge (the oracle query rounds to 9 dp).
+    * set is the union of edge endpoints, and a self-loop is an outlink (a
+    * page whose only link is to itself is not dangling). Returns
+    * `(id, pr)` with pr UNROUNDED — callers that need engine-portable
+    * output round at the edge (the oracle query rounds to 9 dp).
     */
   def pageRank(
       edges: DataFrame,
       iters: Int,
       damping: Double = 0.85
   ): DataFrame = {
-    val spark = edges.sparkSession
-    // pin the cleaned edge list FIRST (the hits discipline): the caller's
-    // edge derivation otherwise re-executes four times across the setup
-    // frames (twice in the node union, twice more through outDeg + the
-    // degree join) — for corpus-derived edges that is four corpus passes
-    // before the first iteration
+    // pin the cleaned edge list FIRST (the hits discipline): the node
+    // table and every round read it, and the caller's edge derivation
+    // (a corpus pass, for crawl-derived edges) must run once
     val e = dropNullEndpoints(edges).transform(graft.runtime.GraftCheckpoint.pin)
+    // the loop-invariant node table (id, out_deg) in ONE pass over e: src
+    // rows carry 1, dst rows 0, summed per id — every endpoint appears
+    // once, and out_deg = 0 marks a dangling node
     val nodes = e
-      .select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-    val cachedNodes = nodes.transform(graft.runtime.GraftCheckpoint.pin)
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("out_deg"))
-    val cachedEdges = e
-      .join(outDeg, "src")
-      .transform(graft.runtime.GraftCheckpoint.pin) // (src, dst, out_deg): the loop-invariant side
-    // loop-invariant: the distinct source set for dangling detection —
-    // computed ONCE (rebuilding it per iteration would re-shuffle the
-    // edge table every round just to anti-join)
-    val srcSet = cachedEdges.select(col("src")).distinct().transform(graft.runtime.GraftCheckpoint.pin)
+      .select(col("src").as("id"), lit(1L).as("o"))
+      .union(e.select(col("dst").as("id"), lit(0L).as("o")))
+      .groupBy(col("id"))
+      .agg(sum(col("o")).cast("double").as("out_deg"))
+      .transform(graft.runtime.GraftCheckpoint.pin)
     // the ONE driver scalar: |V| — model state, like CC's convergence scalar
-    val n = cachedNodes.count()
+    val n = nodes.count()
     val teleport = (1.0 - damping) / n
 
-    var ranks = cachedNodes.select(col("id"), lit(1.0 / n).as("pr"))
+    // ranks carry out_deg, so neither the contributions nor the dangling
+    // mass joins anything back
+    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"), col("out_deg"))
     var i = 0
     while (i < iters) {
-      val contribs = cachedEdges
-        .join(ranks, cachedEdges("src") === ranks("id"))
-        .select(col("dst"), (col("pr") / col("out_deg")).as("w"))
-      val sums = contribs.groupBy(col("dst")).agg(sum(col("w")).as("s"))
+      val sums = e
+        .join(ranks, e("src") === ranks("id"))
+        .groupBy(col("dst"))
+        .agg(sum(col("pr") / col("out_deg")).as("s"))
       // dangling mass: rank held by nodes with no outlinks (1-row aggregate)
       val dangling = ranks
-        .join(srcSet, ranks("id") === col("src"), "left_anti")
+        .where(col("out_deg") === 0.0)
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      val next = cachedNodes
-        .join(sums, cachedNodes("id") === sums("dst"), "left")
+      val next = ranks
+        .join(sums, ranks("id") === sums("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(
           col("id"),
           (lit(teleport) + lit(damping) * (coalesce(col("s"), lit(0.0)) + col("dm") / lit(n.toDouble)))
-            .as("pr")
+            .as("pr"),
+          col("out_deg")
         )
       ranks = next.transform(graft.runtime.GraftCheckpoint.pin)
       i += 1
     }
-    ranks
+    ranks.select(col("id"), col("pr"))
   }
 
   /** Per-node triangle counts + local clustering coefficient over the

@@ -23,7 +23,9 @@ class GraphOpsSpec extends SparkTestBase {
   test("pageRank matches a hand-rolled reference on a graph with a dangling node and a hub") {
     // 0→1, 0→2, 1→2, 2→0, 3→2 ; node 4 is reachable only as a dst (4 never
     // appears — add 1→4 so the node set includes a TRUE dangling node).
-    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 2L), (1L, 4L))
+    // Self-loops are outlinks: 5's only link is to itself, and 0 links to
+    // itself besides 1 and 2 — neither is dangling.
+    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 2L), (1L, 4L), (3L, 5L), (5L, 5L), (0L, 0L))
     val got = prMap(edges, iters = 5)
 
     // driver-side replay of the exact formula
@@ -41,6 +43,32 @@ class GraphOpsSpec extends SparkTestBase {
     }
     assert(got.keySet == pr.keySet)
     got.foreach { case (id, v) => assert(math.abs(v - pr(id)) < 1e-12, s"node $id") }
+  }
+
+  test("pageRank and bradleyTerry: job budget of the setup and of one round") {
+    // 600 pages linking to two others each, every tenth page to none
+    val edges = spark.range(0L, 600L).where(col("id") % 10 =!= 0).select(
+      col("id").as("src"), explode(array((col("id") * 7 + 1) % 600, (col("id") * 13 + 5) % 600)).as("dst"))
+    // 2,000 comparisons among 50 items
+    val comps = spark.range(0L, 2000L).select((col("id") % 50).as("winner"), ((col("id") * 7 + 3) % 50).as("loser"))
+    def pr(iters: Int): Int = jobsOf { GraphOps.pageRank(edges, iters); () }
+    def bt(iters: Int): Int = jobsOf { graft.operators.ChatOps.bradleyTerry(comps, iters); () }
+    pr(1); bt(1) // warm-up
+    val (pr0, pr1, pr2) = (pr(0), pr(1), pr(2))
+    val (bt0, bt1, bt2) = (bt(0), bt(1), bt(2))
+    val got = Map("pageRank setup" -> pr0, "pageRank round" -> math.max(pr1 - pr0, pr2 - pr1),
+      "bradleyTerry setup" -> bt0, "bradleyTerry iteration" -> math.max(bt1 - bt0, bt2 - bt1))
+    info(s"jobs: $got")
+    // each budget is the worst count measured: AQE turns every exchange
+    // inside a pin into a job of its own, so a pin or join added to the
+    // setup or the loop shows here
+    val budgets = Map("pageRank setup" -> 5, "pageRank round" -> 7, "bradleyTerry setup" -> 6,
+      "bradleyTerry iteration" -> 10)
+    val checks = new org.scalatest.Checkpoints.Checkpoint
+    budgets.foreach { case (name, budget) =>
+      checks(assert(got(name) <= budget, s"$name fired ${got(name)} jobs (budget $budget)"))
+    }
+    checks.reportAll()
   }
 
   test("pageRank conserves total mass (sums to 1) with dangling redistribution") {

@@ -527,27 +527,6 @@ class StreamingSpec extends SparkTestBase {
       digestsOf("alpha", "beta", "zeta"))
   }
 
-  /** Spark jobs fired by `f`, counted by a listener on a job group of its own. */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"job-budget-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); ()
-        }
-    }
-    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "job budget")
-      try f
-      finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext, 10000L)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("streaming mirrors: job budget of a warm epoch") {
     import graft.operators.Multimodal
     import graft.streaming.{StreamAsOf, StreamDedup, StreamLinkage, StreamMediaDedup, StreamSemanticGate, StreamSft,
