@@ -1,8 +1,15 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet table loader for the driver testdata.
   *
@@ -13,6 +20,21 @@ import org.apache.spark.sql.types.LongType
   * TIMESTAMP_NTZ — `spark.sql.parquet.inferTimestampNTZ.enabled=false`
   * reads it as TimestampType under the UTC session zone). Sessions must
   * apply [[sessionConfigs]]; both paths yield identical µs TimestampType.
+  *
+  * A table read fires no Spark job. `spark.read.parquet(path)` without a
+  * schema infers one inside a one-task Spark job, so every query would pay
+  * a job round trip per table before it could plan. With
+  * `spark.sql.parquet.mergeSchema` false, that job reads a single data
+  * file's footer; [[footerSchema]] reads the same footer on the driver and
+  * converts it by Spark's own per-footer rule, and [[load]] reads the table
+  * with that schema. This assumes `mergeSchema` stays false: no session in
+  * this repo sets it, and a table whose files disagree on their columns
+  * would need Spark's merging read instead. Nothing is cached: each load
+  * reads the footer again (about 1 ms), so a rewritten table is always
+  * read fresh.
+  * At scale (HDFS, S3) Spark's job would read this same footer; here it is
+  * one ranged read from the driver, and stopping at the first data file
+  * keeps a large directory to one listing page.
   */
 object Tables {
 
@@ -55,7 +77,7 @@ object Tables {
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally s.close()
       } else 0L
-    } catch { case _: Throwable => 0L }
+    } catch { case NonFatal(_) => 0L }
 
   /** [[load]] plus a SIZE-GATED round-robin fan-out, for pipelines whose
     * first stage does heavy per-row CPU work (shingling + MinHash, media
@@ -97,8 +119,41 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
+  /** The schema Spark infers for the parquet table at `path` when
+    * `mergeSchema` is false: one data file's footer (the file itself, or
+    * the first file under the directory whose name starts with neither `_`
+    * nor `.`, as Spark's file index skips them), converted under the
+    * session's parquet confs (`nanosAsLong`, `inferTimestampNTZ`, ...),
+    * the Spark row-metadata key winning when the file carries one.
+    */
+  private[sources] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = p.getFileSystem(conf)
+    val file = firstDataFile(fs, fs.getFileStatus(p)).getOrElse(
+      throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (st.isFile) Some(st)
+    else {
+      val it = fs.listStatusIterator(st.getPath)
+      var found = Option.empty[FileStatus]
+      while (found.isEmpty && it.hasNext) {
+        val c = it.next()
+        val n = c.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith(".")) found = firstDataFile(fs, c)
+      }
+      found
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
     if (df.schema.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df

@@ -162,4 +162,11 @@ class PlanShapeSpec extends SparkTestBase {
       s"q19 did not execute AsOfJoinExec:\n$phys"
     )
   }
+
+  test("the benchmark's floor queries construct with no Spark job (no schema job per table read)") {
+    val floor = Seq("q24_percentiles", "q5_anti_join", "p13_throughput_agg",
+      "x155_wordpiece", "x179_y4m_frames", "x29_quantile_filter")
+    val jobs = floor.map(q => q -> jobsOf { SparkEntry.queries(q)(spark, sfDir); () })
+    assert(jobs.forall(_._2 == 0), s"construction jobs: $jobs")
+  }
 }
